@@ -16,8 +16,13 @@ superstep).  The layout:
 
     base/
       manifest.json                  {"steps": [{"superstep": k, "metrics": {...}}, ...]}
-      state/step=K/*.parquet         state snapshot at superstep K
-      metrics/*.parquet              one row per (superstep, metric...) — the lineage table
+      state/step=K/*.parquet         state snapshot at superstep K (Spark write)
+      metrics/step-K-<uuid>.parquet  one row (superstep, metric...) — the lineage table
+
+A commit runs only the state write's Spark jobs.  The one-row lineage
+file is written from the driver with pyarrow (renamed into place from
+a dot-file, which Spark's reader skips), and the state is re-read with
+the schema it was written with, so no schema-inference job runs.
 
 Only supersteps listed in the manifest are considered committed;
 orphan state directories from a crash are ignored and overwritten.
@@ -28,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,7 +95,7 @@ class CheckpointStore:
             manifest.pop("final_superstep", None)
         self._write_manifest(manifest)
         self._append_metrics(superstep, metrics)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(state.schema).parquet(path)
 
     def latest(self) -> tuple[int, DataFrame, dict[str, Any]] | None:
         """(superstep, state, metrics) of the newest committed step."""
@@ -105,16 +111,23 @@ class CheckpointStore:
 
     # -- lineage metrics table ---------------------------------------------
     def _append_metrics(self, superstep: int, metrics: dict[str, Any]) -> None:
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        row = {"superstep": int(superstep)}
+        row = {"superstep": pa.array([int(superstep)], pa.int64())}
         for k, v in metrics.items():
             if k == "superstep":
                 continue  # the int column above, never float-coerced
-            row[k] = float(v) if isinstance(v, (int, float)) else str(v)
-        pdf = pd.DataFrame([row])
+            if isinstance(v, (int, float)):
+                row[k] = pa.array([float(v)], pa.float64())
+            else:
+                row[k] = pa.array([str(v)], pa.string())
         out = os.path.join(self.base, "metrics")
-        self.spark.createDataFrame(pdf).write.mode("append").parquet(out)
+        os.makedirs(out, exist_ok=True)
+        name = f"step-{superstep}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(out, "." + name)
+        pq.write_table(pa.table(row), tmp)
+        os.replace(tmp, os.path.join(out, name))
 
     def metrics(self) -> DataFrame:
         # metric keys differ across phases (init vs iterate), so each

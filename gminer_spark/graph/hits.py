@@ -10,10 +10,12 @@ Spark shape — identical scale posture to the PageRank superstep
 (gminer_spark.graph.pagerank): each half-step is ONE equi-join of the
 persisted edge table against the state (hash-partitioned on the join
 key, map-side partial sums as the combiner), and the L1 normalizer
-enters the plan as a broadcast 1-row aggregate (the same lazy pattern
-as the PageRank dangling term, pagerank.py) — NOT a driver-side
-``.first()``.  The whole iteration is therefore ONE Spark job: the
-materializing action of the end-of-iteration ``plan_barrier``.  The
+enters the plan as a broadcast 1-row aggregate — NOT a driver-side
+``.first()``: a half-step's normalizer is consumed by the SAME
+iteration's next half-step, so unlike the PageRank dangling mass it
+cannot ride the previous round's action.  The whole iteration is
+therefore ONE Spark job: the materializing action of the
+end-of-iteration ``plan_barrier``.  The
 barrier (not ``localCheckpoint``) matters because the iteration plan
 references the intermediate auth state twice (hub sums + carry) —
 exactly the multi-reference shape that builds a 2^rounds Spark-4

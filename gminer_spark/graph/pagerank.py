@@ -8,8 +8,15 @@ per-vertex allclose 1e-6 at convergence.
 Each superstep is one shuffle-bounded plan:
 
     contribs  = edges ⋈ state(on src) → groupBy(dst).sum(rank/out_deg)
-    dangling  = Σ rank over out_deg == 0            (driver-side agg)
     new_rank  = (1-d)/N + d * (contribs + dangling/N)
+
+where ``dangling`` = Σ rank over out_deg == 0 of the previous state is a
+driver-side scalar collected by the action that materialized that state
+(an ``Observation`` on the store write or ``localCheckpoint``; one more
+column of the delta aggregate in tol mode), so no round plan carries a
+dangling aggregate.  The plan is one message shuffle plus one state
+write; under AQE each shuffle stage is its own Spark job, so a round
+runs a few jobs, none of them bookkeeping.
 
 Spark's partial aggregation is the message combiner
 (/root/reference/util/vecs.tpp:79-107 analog); AQE skew-join plus the
@@ -19,7 +26,7 @@ handle hub-vertex skew in the contribution shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
@@ -52,7 +59,8 @@ def pagerank(
     the dangling-mass redistribution land uniformly on the seed set
     instead of all vertices, and the walk starts from the seeds.  The
     plan shape is identical in every variant: one rank-shuffle join
-    per superstep, dangling as a broadcast 1-row aggregate.
+    per superstep, dangling mass as a literal carried from the
+    previous round's action.
 
     ``init_state`` is a ``(id, rank)`` DataFrame to WARM-START from
     (e.g. the previous run's ranks after an edge batch arrived).  The
@@ -73,24 +81,30 @@ def pagerank(
         edges = edges_in.select(
             "src", "dst", F.col(weight_col).cast("double").alias("w")
         )
-        strength_agg = F.sum("w").alias("out_deg")
+        strength, no_strength = F.col("w"), F.lit(0.0)
     else:
         edges = edges_in.select("src", "dst")
-        strength_agg = F.count("*").cast("long").alias("out_deg")
+        strength, no_strength = F.lit(1).cast("long"), F.lit(0).cast("long")
     edges = edges.repartition(n_shuffle, "src").persist()
-    verts = tables.vertices(edges)
+    # Degree table in ONE aggregation: every vertex appears as a source
+    # (its strength, one edge) or a sink (0, no edge), so sink-only
+    # vertices get out_deg 0 without a distinct + join.
     out_deg = (
-        verts.join(
-            edges.groupBy(F.col("src").alias("id")).agg(strength_agg),
-            on="id",
-            how="left",
+        edges.select(
+            F.col("src").alias("id"), strength.alias("s"), F.lit(1).alias("e")
         )
-        .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        .unionByName(
+            edges.select(
+                F.col("dst").alias("id"), no_strength.alias("s"), F.lit(0).alias("e")
+            )
+        )
+        .groupBy("id")
+        .agg(F.sum("s").alias("out_deg"), F.sum("e").alias("_edges"))
         .repartition(n_shuffle, "id")
         .persist()
     )
-    n = out_deg.count()  # also materializes the persists
-    edge_count = edges.count()
+    # one action: materializes both persists and yields |V| and |E|
+    n, edge_count = out_deg.agg(F.count("*"), F.sum("_edges")).first()
     if we_persisted:
         edges_in.unpersist()  # repartitioned copy is materialized now
     if n == 0:
@@ -128,19 +142,19 @@ def pagerank(
         out_deg.count()
         base_deg.unpersist()  # reset-annotated copy is materialized now
         cold = F.col("reset")
-        carry_cols = ["out_deg", "reset"]
+        carry = ["out_deg", "reset"]
     else:
         cold = F.lit(1.0 / n)
-        carry_cols = ["out_deg"]
+        carry = ["out_deg"]
     if init_state is not None:
         init = (
             out_deg.join(
                 init_state.select("id", F.col("rank").alias("_warm")), on="id", how="left"
             )
-            .select("id", F.coalesce("_warm", cold).alias("rank"), *carry_cols)
+            .select("id", F.coalesce("_warm", cold).alias("rank"), *carry)
         )
     else:
-        init = out_deg.select("id", cold.alias("rank"), *carry_cols)
+        init = out_deg.select("id", cold.alias("rank"), *carry)
 
     teleport = (1.0 - damping) / n
     contrib_expr = (
@@ -148,69 +162,83 @@ def pagerank(
         if weight_col is not None
         else (F.col("rank") / F.col("out_deg"))
     )
+    dangling_sum = F.coalesce(
+        F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
+    ).alias("_dangling")
+
+    # Σ rank over out_deg == 0 of superstep k's state, taken by the
+    # action that materializes superstep k: an Observation on the store
+    # write / localCheckpoint, or a column of tol mode's delta
+    # aggregate.  Superstep k+1 pops it as a scalar.  Only a state this
+    # call did not materialize (resumed from the store) has no entry.
+    dangling: dict[int, Observation | float] = {}
+
+    def observed(state: DataFrame, k: int) -> DataFrame:
+        obs = Observation()
+        dangling[k] = obs
+        return state.observe(obs, dangling_sum)
+
+    resuming = store is not None and resume and bool(store.committed_steps())
+    if not resuming:
+        init = observed(init, 0)
 
     def step(state: DataFrame, k: int):
-        # Dangling mass enters the plan as a broadcast 1-row aggregate —
-        # the whole superstep is ONE Spark job (the checkpoint
-        # materialization), no separate driver-side collect barrier.
-        dangling = state.where(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-        )
+        prev = dangling.pop(k - 1, None)
+        if prev is None:
+            d = state.agg(dangling_sum).first()[0]
+        elif isinstance(prev, Observation):
+            d = prev.get["_dangling"]
+        else:
+            d = prev
         contribs = (
             edges.join(state, edges.src == state.id)
             .select(F.col("dst"), contrib_expr.alias("contrib"))
             .groupBy("dst")
             .agg(F.sum("contrib").alias("contrib"))
         )
+        contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
         if reset is not None:
             rank_expr = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
-                F.coalesce(F.col("contrib"), F.lit(0.0))
-                + F.col("_dangling") * F.col("reset")
+                contrib + F.lit(d) * F.col("reset")
             )
-            carry = ["out_deg", "reset"]
         else:
             rank_expr = F.lit(teleport) + F.lit(damping) * (
-                F.coalesce(F.col("contrib"), F.lit(0.0))
-                + F.col("_dangling") / F.lit(float(n))
+                contrib + F.lit(d) / F.lit(float(n))
             )
-            carry = ["out_deg"]
-        new_state = (
-            out_deg.join(contribs, out_deg.id == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("id", rank_expr.alias("rank"), *carry)
+        new_state = out_deg.join(contribs, out_deg.id == contribs.dst, "left").select(
+            "id", rank_expr.alias("rank"), *carry
         )
         metrics = {
             "edges_scanned": edge_count,
             "messages_shuffled": edge_count,
         }
         if num_iter is None:
-            # ONE action per superstep: lazy barrier (the round plan
-            # references state twice — dangling + contribs) is
-            # materialized by the delta aggregate, which is the
-            # convergence signal; _checkpointed stops the framework
-            # from re-encoding the leaf.
+            # ONE action per superstep: the lazy barrier is materialized
+            # by the delta aggregate, which is the convergence signal and
+            # also carries the next round's dangling mass; _checkpointed
+            # stops the framework from re-encoding the leaf.
             new_state = tables.plan_barrier(new_state, eager=False)
-            delta = (
-                new_state.select("id", "rank")
-                .join(state.select("id", F.col("rank").alias("old")), on="id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-                .first()[0]
+            delta, dangling[k] = (
+                new_state.join(
+                    state.select("id", F.col("rank").alias("old")), on="id"
+                )
+                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))), dangling_sum)
+                .first()
             )
             metrics["delta"] = float(delta)
             metrics["_checkpointed"] = True
+        else:
+            # run_supersteps materializes the round (store write or
+            # localCheckpoint); the observation rides that action
+            new_state = observed(new_state, k)
         return new_state, metrics
 
-    # Fixed-iteration mode stays the per-superstep loop: one eager
-    # localCheckpoint per superstep is already the round's single job,
-    # with NO extra encode (localCheckpoint persists the computed
-    # InternalRows directly).  A fully-fused variant — all supersteps
-    # composed lazily behind plan_barriers, one action total — was
-    # built and A/B'd in r6 and measured ~13% SLOWER: plan_barrier's
-    # Row<->InternalRow re-encode per superstep is O(|V|) added work
-    # that outweighs the saved driver round trips, locally and worse
-    # at scale.  (Tol mode DOES use one lazy barrier per superstep:
-    # there it replaces 3 jobs — checkpoint, delta agg, framework
-    # re-checkpoint — with 1, a real cut.)
+    # Fixed-iteration rounds are materialized by run_supersteps itself
+    # (one store write, or one eager localCheckpoint, with no re-encode).
+    # A fully-fused variant — all supersteps composed lazily behind
+    # plan_barriers, one action total — measured ~13% SLOWER in r6:
+    # plan_barrier's Row<->InternalRow re-encode per superstep is
+    # O(|V|) added work that outweighs the saved driver round trips.
     if num_iter is not None:
         converged = lambda m: m["superstep"] >= num_iter  # noqa: E731
         max_iter = num_iter

@@ -162,13 +162,36 @@ def ensure_materialized(df: DataFrame) -> tuple[DataFrame, int, bool]:
     again for the real work.  ``we_persisted`` tells the caller whether
     unpersisting at the end is its responsibility (never unpersist a
     caller-owned persist).
+
+    A caller-cached input whose blocks are all loaded already knows its
+    row count (the cache builder's stats, the number Catalyst sizes the
+    relation with), so it costs no count job; any other input is counted.
     """
     from pyspark import StorageLevel
 
     we_persisted = df.storageLevel == StorageLevel.NONE
     if we_persisted:
         df = df.persist()
+    else:
+        n_rows = _loaded_cache_rows(df)
+        if n_rows is not None:
+            return df, n_rows, False
     return df, df.count(), we_persisted
+
+
+def _loaded_cache_rows(df: DataFrame) -> int | None:
+    """Row count of ``df``'s cached relation if every block is loaded."""
+    cached = (
+        df.sparkSession._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(df._jdf)
+    )
+    if cached.isEmpty():
+        return None
+    builder = cached.get().cachedRepresentation().cacheBuilder()
+    if not builder.isCachedColumnBuffersLoaded():
+        return None
+    return int(builder.rowCountStats().value())
 
 
 def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:

@@ -12,6 +12,13 @@ sys.path.insert(0, str(REPO))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+REFERENCE_DIR = "/root/reference"
+
+# Only for tests whose INPUT is the reference checkout (its files, or
+# the paths cited from it); everything else must run without it.
+requires_reference = pytest.mark.skipif(
+    not Path(REFERENCE_DIR).is_dir(), reason=f"needs {REFERENCE_DIR} checkout"
+)
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,8 @@ reference's sample-datasets, content synthesized here.
 
 from __future__ import annotations
 
+from tests.conftest import requires_reference
+
 NORMAL = """\
 1\t3 2 3 4
 2\t2 1 3
@@ -78,6 +80,7 @@ def test_read_multi_attr(spark, tmp_path):
     assert got == {(1, 2): 0.5, (1, 3): 1.5, (2, 1): 0.5, (3, 1): 1.5}
 
 
+@requires_reference
 def test_read_attr_reference_samples(spark):
     """Parse the ACTUAL reference sample files: attribute lists are
     space-separated (sample-datasets/attr_sample.adj line 1 is

@@ -41,6 +41,40 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
     assert again.supersteps_run == 0 and again.converged
 
 
+def test_pagerank_fixed_iteration_resume_equals_uninterrupted(spark, tmp_path):
+    """Fixed-iteration mode carries each round's dangling mass on the
+    round's own action; a state resumed from the store has none and
+    takes the one-aggregate fallback."""
+    from gminer_spark.checkpoint import CheckpointStore
+    from gminer_spark.graph.pagerank import pagerank
+
+    # a sparse graph so some vertices are dangling (out_deg == 0)
+    edges = edges_df(spark, random_graph(n=100, p=0.02, seed=4))
+    want = {r["id"]: r["rank"] for r in pagerank(edges, num_iter=6).state.collect()}
+
+    class Killed(Exception):
+        pass
+
+    class KilledAtStep4(CheckpointStore):
+        def commit(self, superstep, state, metrics):
+            if superstep == 4:
+                raise Killed
+            return super().commit(superstep, state, metrics)
+
+    # "killed" run: dies while committing superstep 4
+    with pytest.raises(Killed):
+        pagerank(edges, num_iter=6, store=KilledAtStep4(spark, str(tmp_path / "fixed")))
+    store = CheckpointStore(spark, str(tmp_path / "fixed"))
+    assert store.committed_steps() == [0, 1, 2, 3]
+
+    resumed = pagerank(edges, num_iter=6, store=store, resume=True)
+    assert [m["superstep"] for m in resumed.history] == [4, 5, 6]
+    got = {r["id"]: r["rank"] for r in resumed.state.collect()}
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], abs=1e-9)
+
+
 def test_cc_resume(spark, tmp_path):
     from gminer_spark.checkpoint import CheckpointStore
     from gminer_spark.graph.cc import connected_components
@@ -86,6 +120,26 @@ def test_metrics_lineage_table(spark, tmp_path):
     assert {0, 1, 2, 3, 4} <= rows
     cols = set(m.columns)
     assert {"superstep", "edges_scanned", "messages_shuffled"} <= cols
+    types = dict(m.dtypes)
+    assert types["superstep"] == "bigint"
+    assert types["edges_scanned"] == "double"
+    # the init row's string column merges with the iterate rows'
+    phase = {r["superstep"]: r["phase"] for r in m.collect()}
+    assert types["phase"] == "string"
+    assert phase[0] == "init" and phase[1] is None
+    assert {r["edges_scanned"] for r in m.where("superstep > 0").collect()} == {
+        float(len(STAR))
+    }
+
+    # tol mode adds a delta column; the table reads back the same way
+    tol_store = CheckpointStore(spark, str(tmp_path / "mt"))
+    res = pagerank(edges, tol=1e-6, max_iter=50, store=tol_store)
+    mt = tol_store.metrics()
+    types = dict(mt.dtypes)
+    assert types["superstep"] == "bigint" and types["delta"] == "double"
+    assert types["phase"] == "string"
+    got = sorted(r["superstep"] for r in mt.collect())
+    assert got == list(range(res.last_superstep + 1))
 
 
 def test_recommit_truncates_stale_later_steps(spark, tmp_path):

@@ -6,6 +6,10 @@ from pathlib import Path
 
 import pytest
 
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference
+
 REPO = Path(__file__).resolve().parent.parent
 PAT = re.compile(r"/root/reference/[A-Za-z0-9_./-]+")
 

@@ -98,8 +98,8 @@ def test_cooccurrence_plan_topk_no_range_join(spark):
     """The W-offset joins must be EQUI joins on (doc_id, pos+d) — a
     naive pos-BETWEEN join would plan as a non-equi nested loop over
     the full token table.  The only nested-loop allowed is the 1-row
-    broadcast crossJoin carrying the corpus total (the PageRank
-    dangling-mass pattern), which is bounded by construction."""
+    broadcast crossJoin carrying the corpus total (a global scalar
+    joined back onto every row), which is bounded by construction."""
     from gminer_spark.textops.cooccur import cooccurrence_topk
 
     docs = spark.createDataFrame(
