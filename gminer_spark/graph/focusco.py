@@ -272,14 +272,6 @@ _STATE_SCHEMA = (
 
 _STATE_COLS = [f.split(" ")[0] for f in _STATE_SCHEMA.split(", ")]
 
-# delta-pull task state: the adjacency rows the task already HOLDS,
-# carried across Spark rounds so each pull ships only fresh vertices.
-# ``held_vids`` (small) lets the driver compute the delta JVM-side;
-# ``held_blob`` is the adjacency dict as one opaque pickle — Arrow and
-# the plan barrier move it as a single binary value instead of
-# millions of nested struct cells (measured 1.4x faster per round).
-_HELD_STATE_SCHEMA = _STATE_SCHEMA + ", held_vids array<long>, held_blob binary"
-
 
 def weighted_adjacency(wedges: DataFrame) -> DataFrame:
     """(id, adj: array<struct<nb:long, w:double>>) — the undirected
@@ -343,22 +335,12 @@ def _collect_adj_dict(adj: DataFrame) -> dict:
     }
 
 
-def _kernel(p: FocusCOParams, badj=None, carry_held: bool = False):
+def _kernel(p: FocusCOParams, badj=None):
     """Per-task compute kernel.  ``badj`` (optional Spark broadcast of
     the COMPLETE adjacency dict) switches pulls off entirely: the
     elision loop's coverage test is then always true, so every task
     runs to completion in its first kernel call — one Spark round for
-    the whole job (the gated small-graph fast path).
-
-    ``carry_held``: delta-pull mode — the input rows carry the
-    adjacency pulled in earlier rounds (``held_blob``, one pickled
-    dict) merged with the round's fresh ``nbhd`` delta; the output
-    re-emits it pruned to the task's next needed set (subg ∪ cand),
-    so the next pull ships only vertices the task does not already
-    hold.  Extra held keys only widen the (exact) elision loop's
-    coverage — compute itself reads adjacency solely for subg/cand
-    members, so results are bit-identical to full pulls."""
-    import pickle
+    the whole job (the gated small-graph fast path)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         full_adj = badj.value if badj is not None else None
@@ -372,8 +354,6 @@ def _kernel(p: FocusCOParams, badj=None, carry_held: bool = False):
                     # arrays, whose truth value is ambiguous —
                     # None-check explicitly
                     adj = {}
-                    if carry_held and r["held_blob"] is not None:
-                        adj = pickle.loads(r["held_blob"])
                     nbhd = r["nbhd"] if r["nbhd"] is not None else ()
                     for v in nbhd:
                         adj[int(v["vid"])] = [
@@ -404,20 +384,8 @@ def _kernel(p: FocusCOParams, badj=None, carry_held: bool = False):
                     and set(task["subg"]).union(task["cand"]) <= adj.keys()
                 ):
                     task = _compute_round(task, adj, p)
-                if carry_held:
-                    if task["done"]:
-                        task["held_vids"] = []
-                        task["held_blob"] = None
-                    else:
-                        keep = set(task["subg"]).union(task["cand"])
-                        hdict = {v: adj[v] for v in keep if v in adj}
-                        task["held_vids"] = sorted(hdict)
-                        task["held_blob"] = pickle.dumps(hdict, protocol=4)
                 out.append(task)
-            cols = _STATE_COLS + (
-                ["held_vids", "held_blob"] if carry_held else []
-            )
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(out, columns=_STATE_COLS)
 
     return run
 
@@ -427,10 +395,8 @@ def focused_clusters(
     params: FocusCOParams | None = None,
     seeds: list[int] | None = None,
     max_spark_rounds: int = 200,
-    hot_k: int = 0,
     task_batch_size: int | None = 512,
     full_graph_entries: int = 2_000_000,
-    delta_pull: bool = False,
     tail_broadcast: int = 64,
     tail_entries: int = 2_000_000,
 ) -> DataFrame:
@@ -474,18 +440,9 @@ def focused_clusters(
     18 → 12 but 16-core time 20.0 → 22.9 s — the extra pull volume
     outweighs saved round trips on tmpfs shuffle); the ball broadcast
     pays the 2-hop bytes ONCE instead of per round.
-    ``tail_broadcast=0`` disables.  Delta-pull mode never ball-casts."""
+    ``tail_broadcast=0`` disables."""
     p = params or FocusCOParams()
     adj = weighted_adjacency(wedges).persist()
-    # hot_k > 0 serves hub adjacency rows from a broadcast cache (the
-    # RefCache analog, core/ref_cache.hpp:17-60): split once, reuse
-    # every round.  Default OFF: on a single box with tmpfs shuffle the
-    # split's extra request scans measurably outweigh the saved hub
-    # wire-crossings (tools/refcache_bench.py: 0.32x at 1M requests) —
-    # it is a network-bound-cluster knob, not a local one (BENCH.md).
-    from gminer_spark.graph.refcache import cached_pull, split_adjacency
-
-    hot, cold, hot_ids = split_adjacency(adj, hot_k=hot_k)
 
     heavy = F.filter("adj", lambda x: x["w"] >= F.lit(float(p.min_weight)))
     state = (
@@ -564,26 +521,6 @@ def focused_clusters(
                 F.pmod(h32(F.col("task_id").cast("string")), F.lit(n_batches))
                 == b
             ).localCheckpoint()
-        # DELTA PULLS (``delta_pull``): the task state carries the
-        # adjacency it already holds (one pickled blob per task);
-        # each round joins only the FRESH vertices ((subg ∪ cand) −
-        # held_vids) against the adjacency table.  After the first
-        # round the delta is the handful of newly admitted
-        # candidates, so the per-round pull shuffle shrinks from
-        # O(Σ|subg ∪ cand|·deg) to O(Σ|new|·deg) — and AQE broadcasts
-        # the (small) delta side, leaving the held state unshuffled.
-        # Default OFF (measured, BENCH.md focusco A/B): the carried
-        # blob crosses JVM↔python TWICE per round (emit + next round's
-        # input) plus a pickle each way, where a full re-pull ships the
-        # same bytes ONCE as the nbhd collect — on tmpfs shuffle the
-        # saved adjacency join is far cheaper than the extra crossing
-        # (10M edges, 100 seeds: 40.2→109.5 s at 4 cores, 40.6→78.3 s
-        # at 16).  It is a knob for network-shuffle clusters where the
-        # re-pull join, not serialization, is the bottleneck.
-        if delta_pull:
-            live = live.withColumn(
-                "held_vids", F.lit(None).cast("array<long>")
-            ).withColumn("held_blob", F.lit(None).cast("binary"))
         n_live = live.count()
         global last_spark_rounds
         last_spark_rounds = 0
@@ -603,21 +540,10 @@ def focused_clusters(
             if n_live == 0:
                 break
             last_spark_rounds += 1
-            if delta_pull:
-                want = F.array_except(
-                    F.array_union("subg", "cand"),
-                    F.coalesce(
-                        F.col("held_vids"), F.array().cast("array<long>")
-                    ),
-                )
-            else:
-                want = F.array_union("subg", "cand")
-            needed = live.select("task_id", F.explode(want).alias("id"))
-            if (
-                not delta_pull
-                and tail_broadcast
-                and n_live <= min(tail_broadcast, ball_retry_below)
-            ):
+            needed = live.select(
+                "task_id", F.explode(F.array_union("subg", "cand")).alias("id")
+            )
+            if tail_broadcast and n_live <= min(tail_broadcast, ball_retry_below):
                 # STRAGGLER BALL BROADCAST: collect the union of the
                 # live tasks' radius-2 ball adjacency ONCE (under the
                 # same entries gate as the full-graph fast path),
@@ -662,23 +588,22 @@ def focused_clusters(
                     n_live = live.count()
                     badj_b.unpersist()
                     continue
-            rows = cached_pull(needed, hot, cold, hot_ids)
-            pulled = rows.groupBy("task_id").agg(
-                F.collect_list(
-                    F.struct(F.col("id").alias("vid"), F.col("adj"))
-                ).alias("nbhd")
+            pulled = (
+                needed.join(adj, on="id")
+                .groupBy("task_id")
+                .agg(
+                    F.collect_list(
+                        F.struct(F.col("id").alias("vid"), F.col("adj"))
+                    ).alias("nbhd")
+                )
             )
-            how = "left" if delta_pull else "inner"
-            schema = _HELD_STATE_SCHEMA if delta_pull else _STATE_SCHEMA
             new_state = plan_barrier(
                 live.drop("done", "cluster", "phi")
-                .join(pulled, on="task_id", how=how)
-                .mapInPandas(_kernel(p, carry_held=delta_pull), schema),
+                .join(pulled, on="task_id")
+                .mapInPandas(_kernel(p), _STATE_SCHEMA),
                 eager=False,
             )
-            done_parts.append(
-                new_state.where(F.col("done")).drop("held_vids", "held_blob")
-            )
+            done_parts.append(new_state.where(F.col("done")))
             live = new_state.where(~F.col("done"))
             n_live = live.count()
 

@@ -19,57 +19,71 @@ N-times-unrolled SQL oracle exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
 
 
-def _survivor_degrees(sym: DataFrame, core: DataFrame, n_core: int) -> DataFrame:
-    """Per-survivor degree within the survivor-induced subgraph.
-
-    The survivor set shrinks monotonically, so under the broadcast gate
-    BOTH membership joins are map-side hash probes of the persisted
-    edge table — a peel round then shuffles nothing but the (small)
-    aggregated degree table.  Above the gate: ordinary shuffle joins.
-    """
-    from gminer_spark.graph.triangles import gated_broadcast
-
-    c_src = gated_broadcast(core.withColumnRenamed("id", "src"), n_core)
-    c_dst = gated_broadcast(core.withColumnRenamed("id", "dst"), n_core)
-    return (
-        sym.join(c_src, on="src")
-        .join(c_dst, on="dst")
-        .groupBy("src")
-        .agg(F.count("*").alias("deg"))
-    )
-
-
-def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
-    """(id) — vertices of the k-core of the undirected graph."""
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """The persisted, src-partitioned symmetric edge table a peel scans."""
     spark = edges.sparkSession
-    sym = (
+    return (
         tables.symmetrize(edges)
         .repartition(tables.shuffle_partitions(spark), "src")
         .persist()
     )
-    core = tables.vertices(sym).localCheckpoint()
-    n = core.count()
-    for _ in range(max_iter):
-        deg = _survivor_degrees(sym, core, n)
-        # Survivors feed TWO membership joins next round -> origin-free
-        # barrier; lazy so the convergence count is the round's ONE job.
+
+
+def _peel(
+    sym: DataFrame,
+    core: DataFrame,
+    n: int,
+    k: int,
+    measure: Column,
+    max_iter: int | None,
+) -> tuple[DataFrame, int]:
+    """Peel ``core`` (``n`` rows) down to the vertices whose ``measure``
+    over their survivor-induced edges is >= ``k`` -> (core, n).
+
+    ``measure`` aggregates the ``sym`` rows of one src (``F.count("*")``
+    for degree, ``F.sum("w")`` for strength); ``max_iter`` None peels to
+    the fixpoint.  The survivor set shrinks monotonically, so under the
+    broadcast gate BOTH membership joins are map-side hash probes of the
+    persisted edge table — a round shuffles only the (small) aggregated
+    measure table.  Above the gate: ordinary shuffle joins.  The
+    survivors feed TWO membership joins next round, so they cross an
+    origin-free :func:`tables.plan_barrier`; it is lazy, so the
+    convergence count is the round's ONE job.
+    """
+    from gminer_spark.graph.triangles import gated_broadcast
+
+    for _ in itertools.count() if max_iter is None else range(max_iter):
+        c_src = gated_broadcast(core.withColumnRenamed("id", "src"), n)
+        c_dst = gated_broadcast(core.withColumnRenamed("id", "dst"), n)
         new_core = tables.plan_barrier(
-            deg.where(F.col("deg") >= k).select(F.col("src").alias("id")),
+            sym.join(c_src, on="src")
+            .join(c_dst, on="dst")
+            .groupBy("src")
+            .agg(measure.alias("m"))
+            .where(F.col("m") >= k)
+            .select(F.col("src").alias("id")),
             eager=False,
         )
-        n_new = new_core.count()
-        core = new_core
-        if n_new == n:
+        core, n_prev = new_core, n
+        n = core.count()
+        if n in (n_prev, 0):
             break
-        n = n_new
-        if n == 0:
-            break
+    return core, n
+
+
+def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+    """(id) — vertices of the k-core of the undirected graph."""
+    sym = _symmetric(edges)
+    core = tables.vertices(sym).localCheckpoint()
+    core, _ = _peel(sym, core, core.count(), k, F.count("*"), max_iter)
     sym.unpersist()
     return core
 
@@ -83,37 +97,16 @@ def coreness(edges: DataFrame, max_k: int | None = None) -> DataFrame:
     loop per level — fine for the moderate degeneracy of web-ish
     graphs; for huge k_max switch to h-index iteration.
     """
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
+    sym = _symmetric(edges)
     verts = tables.vertices(sym).localCheckpoint()
     result = verts.select("id", F.lit(0).alias("coreness"))
     core = verts
     n_core = core.count()
     k = 0
-    while True:
+    while max_k is None or k < max_k:
         k += 1
-        if max_k is not None and k > max_k:
-            break
         # peel the (k)-core out of the previous survivor set
-        while True:
-            deg = _survivor_degrees(sym, core, n_core)
-            # same fused-count barrier round as k_core
-            new_core = tables.plan_barrier(
-                deg.where(F.col("deg") >= k).select(F.col("src").alias("id")),
-                eager=False,
-            )
-            n_new = new_core.count()
-            if n_new == n_core:
-                core = new_core
-                break
-            core = new_core
-            n_core = n_new
-            if n_core == 0:
-                break
+        core, n_core = _peel(sym, core, n_core, k, F.count("*"), None)
         if n_core == 0:
             break
         result = (
@@ -140,8 +133,8 @@ def s_core(
 
     The weighted generalization of :func:`k_core` (Eidsaa & Almaas,
     Phys. Rev. E 88, 2013); integer weights keep the peel exact across
-    engines.  Same plan shape as k_core: two survivor semi-joins + one
-    aggregate per round, lineage truncated per round.
+    engines.  Same peel loop as k_core with the degree count swapped
+    for a weight sum.
     """
     spark = edges.sparkSession
     fwd = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
@@ -153,28 +146,8 @@ def s_core(
         .repartition(tables.shuffle_partitions(spark), "src")
         .persist()
     )
-    from gminer_spark.graph.triangles import gated_broadcast
-
     core = tables.vertices(sym).localCheckpoint()
-    n = core.count()
-    for _ in range(max_iter):
-        c_src = gated_broadcast(core.withColumnRenamed("id", "src"), n)
-        c_dst = gated_broadcast(core.withColumnRenamed("id", "dst"), n)
-        strength = (
-            sym.join(c_src, on="src")
-            .join(c_dst, on="dst")
-            .groupBy("src")
-            .agg(F.sum("w").alias("s"))
-        )
-        new_core = tables.plan_barrier(
-            strength.where(F.col("s") >= k).select(F.col("src").alias("id")),
-            eager=False,
-        )
-        n_new = new_core.count()
-        core = new_core
-        if n_new == n or n_new == 0:
-            break
-        n = n_new
+    core, _ = _peel(sym, core, core.count(), k, F.sum("w"), max_iter)
     sym.unpersist()
     return core
 
@@ -218,7 +191,6 @@ def coreness_hindex(
     edges: DataFrame,
     num_iter: int | None = None,
     max_iter: int = 100,
-    frontier_frac: float = 0.0,
 ) -> DataFrame:
     """(id, coreness) via the iterated-h-index fixpoint.
 
@@ -232,23 +204,6 @@ def coreness_hindex(
     groupBy).  ``num_iter`` forces a fixed round count (oracle parity;
     idempotent past the fixpoint), else stops when no vertex changed.
 
-    DELTA-FRONTIER rounds (``frontier_frac`` > 0): h(v) depends only
-    on the multiset of neighbor h values, so once a round leaves a
-    vertex's neighborhood untouched its next h equals its current one.
-    When the changed set falls under ``frontier_frac`` of the vertex
-    set, rounds restrict the histogram to neighbors of the changed set
-    — bit-identical per-round states either way (hash-verified at
-    sf0.01 and sf0.1), so the unrolled oracle stays exact.
-
-    Default OFF (0.0), by measurement: like the RefCache analog this
-    is a CLUSTER knob, not a local one.  On local[32]/tmpfs at sf0.1
-    the per-round cost is ~85% fixed job overhead, so the frontier's
-    two extra jobs per round lose outright (frac 0.125: 50.6s vs
-    full-rounds 31.7s over the 38-round run).  On a cluster where a
-    round scans O(|E|) across the network, restricting the histogram
-    to the (often tiny — tail rounds here change <1% of vertices)
-    frontier is the difference between 38 full passes and ~12.
-
     Every state update crosses :func:`tables.plan_barrier`: the round
     plan references the state twice (neighbor values + carried rows),
     and Spark 4's localCheckpoint origin chain would otherwise DOUBLE
@@ -257,26 +212,21 @@ def coreness_hindex(
     materializing action.
 
     MULTI-STEP rounds (free-running mode only): with ``num_iter``
-    None and the frontier off, each barrier+action covers
-    ``_HSTEPS_PER_ROUND`` h-index steps composed lazily, with a LAZY
-    plan_barrier BETWEEN the composed steps — each step references its
-    input twice (histogram + carried prev), so bare composition
-    duplicates the round subtree 2^k-fold (r6 measured 5x slower at
-    k=4 without the barrier).  The fixpoint is unchanged (H is
-    monotone non-increasing per vertex: val == old across a composed
-    round iff NO inner step moved any vertex — once a step lowers a
-    value it can never recover), so the convergence guard stays exact
-    for any step count.  r6 swept k at sf0.1: k=2 wins (see the
+    None, each barrier+action covers ``_HSTEPS_PER_ROUND`` h-index
+    steps composed lazily, with a LAZY plan_barrier BETWEEN the
+    composed steps — each step references its input twice (histogram
+    + carried prev), so bare composition duplicates the round subtree
+    2^k-fold (r6 measured 5x slower at k=4 without the barrier).  The
+    fixpoint is unchanged (H is monotone non-increasing per vertex:
+    val == old across a composed round iff NO inner step moved any
+    vertex — once a step lowers a value it can never recover), so the
+    convergence guard stays exact for any step count.  r6 swept k at sf0.1: k=2 wins (see the
     ``_HSTEPS_PER_ROUND`` note) — the barrier between the two steps,
     not a bigger k, is what beat the r5 form.  ``num_iter`` mode keeps
     single steps so a run of N rounds equals the N-times-unrolled
-    oracle state-for-state; frontier mode keeps single steps because
-    the restricted scan is only valid for the step the frontier was
-    computed from.
+    oracle state-for-state.
     """
     from pyspark.sql import Window
-
-    from gminer_spark.graph.triangles import gated_broadcast
 
     spark = edges.sparkSession
     sym = (
@@ -289,7 +239,7 @@ def coreness_hindex(
         .agg(F.count("*").cast("long").alias("val"))
         .localCheckpoint()
     )
-    n_verts = state.count()
+    n_changed = state.count()
     rounds = num_iter if num_iter is not None else max_iter
     # H over a multiset = max over DISTINCT values v of min(v, #{≥v}):
     # aggregate to a per-(id, val) histogram first (map-side combined),
@@ -301,12 +251,10 @@ def coreness_hindex(
         .orderBy(F.desc("val"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    changed = state.select("id")
-    n_changed = n_verts
 
-    def h_step(cur: DataFrame, base: DataFrame, use_frontier: bool) -> DataFrame:
+    def h_step(cur: DataFrame) -> DataFrame:
         """One lazy h-index step: (id, val) -> (id, val)."""
-        e, st = base.alias("e"), cur.alias("st")
+        e, st = sym.alias("e"), cur.alias("st")
         hist = (
             e.join(st, F.col("e.dst") == F.col("st.id"))
             .groupBy(F.col("e.src").alias("id"), F.col("st.val").alias("val"))
@@ -321,46 +269,21 @@ def coreness_hindex(
                 .alias("nv")
             )
         )
-        how = "left" if use_frontier else "inner"
         return (
             cur.withColumnRenamed("val", "prev")
-            .join(new_vals, on="id", how=how)
+            .join(new_vals, on="id")
             .select("id", F.coalesce("nv", "prev").alias("val"))
         )
 
+    # multi-step only when free-running: num_iter mode must match the
+    # single-step unrolled oracle round count.
+    steps = _HSTEPS_PER_ROUND if num_iter is None else 1
     for _ in range(rounds):
         if n_changed == 0:
             break  # fixpoint; remaining num_iter rounds are no-ops
-        use_frontier = n_changed < frontier_frac * n_verts
-        if use_frontier:
-            frontier = (
-                sym.join(
-                    gated_broadcast(
-                        changed.withColumnRenamed("id", "dst"), n_changed
-                    ),
-                    on="dst",
-                )
-                .select(F.col("src").alias("id"))
-                .distinct()
-                .localCheckpoint()
-            )
-            base = sym.join(
-                gated_broadcast(
-                    frontier.withColumnRenamed("id", "src"), frontier.count()
-                ),
-                on="src",
-            )
-        else:
-            base = sym
-        # multi-step only when free-running AND unrestricted: num_iter
-        # mode must match the single-step unrolled oracle round count,
-        # and a frontier base is only valid for its own step.
-        steps = (
-            _HSTEPS_PER_ROUND if (num_iter is None and not use_frontier) else 1
-        )
         cur = state
         for s in range(steps):
-            cur = h_step(cur, base, use_frontier)
+            cur = h_step(cur)
             # lazy barrier BETWEEN composed steps: h_step references its
             # input twice (histogram + carried prev), so an unbarriered
             # k-step composition duplicates the round subtree 2^k times
@@ -378,8 +301,7 @@ def coreness_hindex(
             .select("id", "val", "old"),
             eager=False,
         )
-        changed = merged.where(F.col("val") != F.col("old")).select("id")
-        n_changed = changed.count()
+        n_changed = merged.where(F.col("val") != F.col("old")).count()
         state = merged.select("id", "val")
     sym.unpersist()
     return state.select("id", F.col("val").alias("coreness"))

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 from gminer_spark.functions import h32
 from gminer_spark.graph import tables
 
+# Once |undecided| < _FRONTIER_FRAC · |V|, the scanned edge table is
+# re-materialized restricted to undecided×undecided endpoints (and
+# again on every further 4× shrink).
+_FRONTIER_FRAC = 0.25
+
 
 def _priority(col: str, seed: str):
     return (
@@ -37,20 +42,16 @@ def maximal_independent_set(
     edges: DataFrame,
     seed: str = "mis",
     max_iter: int = 100,
-    frontier_frac: float = 0.25,
 ) -> DataFrame:
     """(id) — the unique MIS selected by md5-derived priorities.
 
-    ``frontier_frac``: once ``|undecided| < frontier_frac · |V|``, the
-    scanned edge table is re-materialized restricted to
-    undecided×undecided endpoints (and again on every further 4×
-    shrink).  The restriction is a correctness no-op — the priority
-    joins already enforce both endpoints undecided (src via the pri
-    join, dst via the left join; decided winner-neighbors anti-join
-    to nothing) — but it caps the tail rounds, which otherwise
-    map-scan the FULL persisted edge table for near-empty work on a
-    100× graph.  Set ``frontier_frac=0`` to disable (always full
-    scan — fewer actions, fine for small graphs).
+    Tail rounds scan an edge table restricted to undecided endpoints
+    (see ``_FRONTIER_FRAC``).  The restriction is a correctness no-op
+    — the priority joins already enforce both endpoints undecided (src
+    via the pri join, dst via the left join; decided winner-neighbors
+    anti-join to nothing) — but it caps the tail rounds, which
+    otherwise map-scan the FULL persisted edge table for near-empty
+    work on a 100× graph.
     """
     spark = edges.sparkSession
     sym = (
@@ -76,10 +77,9 @@ def maximal_independent_set(
     for _ in range(max_iter):
         if n_und == 0:
             break
-        want_restrict = frontier_frac > 0 and (
-            (last_restrict_n is None and n_und < frontier_frac * n_total)
-            or (last_restrict_n is not None and n_und * 4 < last_restrict_n)
-        )
+        want_restrict = (
+            last_restrict_n is None and n_und < _FRONTIER_FRAC * n_total
+        ) or (last_restrict_n is not None and n_und * 4 < last_restrict_n)
         if want_restrict:
             u_src = undecided.withColumnRenamed("id", "src")
             u_dst = undecided.withColumnRenamed("id", "dst")

@@ -164,3 +164,48 @@ def test_round5_session2_ops_partitioning_invariant(spark, graph):
     a, b = (run(e) for e in _variants(graph)[:2])
     for k in a:
         assert a[k] == b[k], k
+
+
+def test_peel_family_partitioning_invariant(spark, graph):
+    """k-core / s-core / coreness (peel and h-index) / MIS / the focusco
+    pull loop under different physical partitionings — membership and
+    integer values, so equality is EXACT."""
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph.focusco import FocusCOParams, focused_clusters
+    from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
+    from gminer_spark.graph.mis import maximal_independent_set
+
+    def run(e):
+        we = e.select("src", "dst", (F.col("src") % 3 + 1).alias("w"))
+        out = {}
+        # k=6 and k=12 peel this graph for 5 and 9 rounds
+        out["k_core"] = {r["id"] for r in k_core(e, k=6).collect()}
+        out["s_core"] = {
+            r["id"] for r in s_core(we, k=12, weight_col="w").collect()
+        }
+        out["coreness"] = {
+            r["id"]: r["coreness"] for r in coreness(e).collect()
+        }
+        out["hindex"] = {
+            r["id"]: r["coreness"] for r in coreness_hindex(e).collect()
+        }
+        out["hindex_num_iter"] = {
+            r["id"]: r["coreness"]
+            for r in coreness_hindex(e, num_iter=2).collect()
+        }
+        out["mis"] = {r["id"] for r in maximal_independent_set(e).collect()}
+        wf = we.select("src", "dst", F.col("w").cast("double").alias("weight"))
+        p = FocusCOParams(min_weight=2.0, min_core_size=3, min_result_size=2)
+        out["focusco_pull"] = {
+            (tuple(r["cluster"]), tuple(r["outlier"]), r["phi"])
+            for r in focused_clusters(wf, p, full_graph_entries=0).collect()
+        }
+        return out
+
+    a, b = (run(e) for e in _variants(graph)[:2])
+    assert 0 < len(a["k_core"]) < len(a["coreness"])
+    assert 0 < len(a["s_core"]) < len(a["coreness"])
+    assert a["focusco_pull"]
+    for k in a:
+        assert a[k] == b[k], k

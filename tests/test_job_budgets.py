@@ -89,3 +89,83 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
         df, n, we_persisted = tables.ensure_materialized(raw)
     assert (n, we_persisted) == (want, True) and ids
     df.unpersist()
+
+
+# Iterative loops on an undirected random graph (n=120, p=0.08, seed
+# 21): the jobs of the call plus one collect() of its result, so a
+# lazily returned result is counted too.  Each loop runs one action per
+# round; a second action per round shows here first.
+LOOP_JOB_BUDGETS = {
+    "k_core": 27,
+    "k_core_capped": 18,
+    "s_core": 27,
+    "coreness": 97,
+    "coreness_hindex": 62,
+    "coreness_hindex_num_iter": 49,
+    "maximal_independent_set": 49,
+}
+# the focusco pull loop on the 40-vertex graph of
+# test_focusco_full_graph_path_equals_pull_loop (gseed 4)
+FOCUSCO_PULL_JOB_BUDGET = 28
+UNDIRECTED = random_graph(n=120, p=0.08, seed=21, directed=False)
+
+
+@pytest.fixture(scope="module")
+def undirected_edges(spark):
+    edges = edges_df(spark, UNDIRECTED).persist()
+    edges.count()
+    yield edges
+    edges.unpersist()
+
+
+def _loop_calls(edges):
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
+    from gminer_spark.graph.mis import maximal_independent_set
+
+    weighted = edges.select("src", "dst", (F.col("src") % 3 + 1).alias("w"))
+    return {
+        # k=7 and k=13 peel for 6 rounds; the cap stops after 3
+        "k_core": lambda: k_core(edges, k=7),
+        "k_core_capped": lambda: k_core(edges, k=7, max_iter=3),
+        "s_core": lambda: s_core(weighted, k=13, weight_col="w"),
+        "coreness": lambda: coreness(edges),
+        "coreness_hindex": lambda: coreness_hindex(edges),
+        "coreness_hindex_num_iter": lambda: coreness_hindex(edges, num_iter=10),
+        "maximal_independent_set": lambda: maximal_independent_set(edges),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(LOOP_JOB_BUDGETS))
+def test_iterative_loop_job_budget(spark, undirected_edges, name):
+    call = _loop_calls(undirected_edges)[name]
+    with _jobs(spark, f"budget-{name}") as ids:
+        rows = call().collect()
+    assert rows
+    if name.startswith(("k_core", "s_core")):
+        assert len(rows) < len({v for e in UNDIRECTED for v in e})
+    assert len(ids) == LOOP_JOB_BUDGETS[name], len(ids)
+
+
+def test_focusco_pull_loop_job_budget(spark):
+    import random
+
+    from gminer_spark.graph.focusco import FocusCOParams, focused_clusters
+
+    rng = random.Random(4)
+    wedges = [
+        (a, b, float(rng.randint(1, 9)))
+        for a in range(40)
+        for b in range(a + 1, 40)
+        if rng.random() < 0.15
+    ]
+    wdf = spark.createDataFrame(wedges, "src long, dst long, weight double")
+    wdf = wdf.persist()
+    wdf.count()
+    p = FocusCOParams(min_weight=5.0, min_core_size=3, min_result_size=2)
+    with _jobs(spark, "budget-focusco-pull") as ids:
+        rows = focused_clusters(wdf, p, full_graph_entries=0).collect()
+    wdf.unpersist()
+    assert rows
+    assert len(ids) == FOCUSCO_PULL_JOB_BUDGET, len(ids)

@@ -169,15 +169,3 @@ def test_s_core_unit_weights_equals_k_core(spark):
     b = {r["id"] for r in k_core(edges_df(spark, pairs), k=4).collect()}
     assert a == b
 
-
-def test_coreness_hindex_frontier_equals_full(spark):
-    """The delta-frontier rounds (cluster knob) must stay bit-identical
-    to the full recompute — same fixpoint AND same trajectory."""
-    from tests.conftest import edges_df, random_graph
-
-    from gminer_spark.graph.kcore import coreness_hindex
-
-    edges = edges_df(spark, random_graph(n=80, p=0.1, seed=21, directed=False))
-    full = sorted(map(tuple, coreness_hindex(edges, frontier_frac=0.0).collect()))
-    delta = sorted(map(tuple, coreness_hindex(edges, frontier_frac=1.1).collect()))
-    assert full == delta

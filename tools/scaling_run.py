@@ -194,7 +194,6 @@ def main() -> None:
             seeds=seeds,
             max_spark_rounds=30,
             full_graph_entries=0,
-            delta_pull=os.environ.get("FOCUSCO_DELTA", "0") == "1",
             # straggler ball-broadcast A/B (default ON, the shipped default)
             tail_broadcast=0
             if os.environ.get("FOCUSCO_TAILB", "1") == "0"
