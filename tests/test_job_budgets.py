@@ -91,10 +91,13 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
     df.unpersist()
 
 
-# Iterative loops on an undirected random graph (n=120, p=0.08, seed
-# 21): the jobs of the call plus one collect() of its result, so a
-# lazily returned result is counted too.  Each loop runs one action per
-# round; a second action per round shows here first.
+# Iterative loops: the jobs of the call plus one collect() of its
+# result, so a lazily returned result is counted too.  Each loop runs
+# one action per round; a second action per round shows here first.
+# Inputs (all cached before the count): an undirected random graph (n=120,
+# p=0.08, seed 21), the same graph with w = src*7 % 13 + 1, a random DAG
+# (n=120, p=0.05, seed 3, src < dst), CYCLE6, a directed random graph
+# (n=120, p=0.03, seed 21) and a table of redirect chains.
 LOOP_JOB_BUDGETS = {
     "k_core": 27,
     "k_core_capped": 18,
@@ -103,28 +106,75 @@ LOOP_JOB_BUDGETS = {
     "coreness_hindex": 62,
     "coreness_hindex_num_iter": 49,
     "maximal_independent_set": 49,
+    "connected_components": 32,
+    "shortest_paths": 30,
+    "shortest_paths_weighted": 45,
+    "label_propagation": 30,
+    "label_propagation_stable": 64,
+    "widest_paths": 45,
+    "dag_layers": 98,
+    "dag_layers_cycle": 56,
+    "cpm_communities": 161,
+    "trussness": 79,
+    "trussness_num_iter": 127,
+    "strongly_connected_components": 161,
+    "minimum_spanning_forest": 97,
+    "resolve_redirects": 21,
 }
 # the focusco pull loop on the 40-vertex graph of
 # test_focusco_full_graph_path_equals_pull_loop (gseed 4)
 FOCUSCO_PULL_JOB_BUDGET = 28
 UNDIRECTED = random_graph(n=120, p=0.08, seed=21, directed=False)
+# chains u0 -> u1 -> ... broken every 9th link, plus side exits u3k -> v3k
+REDIRECTS = [(f"u{i}", f"u{i + 1}") for i in range(40) if i % 9 != 8] + [
+    (f"u{i}", f"v{i}") for i in range(0, 40, 3)
+]
 
 
 @pytest.fixture(scope="module")
-def undirected_edges(spark):
-    edges = edges_df(spark, UNDIRECTED).persist()
-    edges.count()
-    yield edges
-    edges.unpersist()
-
-
-def _loop_calls(edges):
+def loop_inputs(spark):
     from pyspark.sql import functions as F
 
-    from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
-    from gminer_spark.graph.mis import maximal_independent_set
+    from tests.conftest import CYCLE6
 
+    edges = edges_df(spark, UNDIRECTED)
+    inputs = {
+        "edges": edges,
+        "weighted": edges.select(
+            "src", "dst", (F.col("src") * 7 % 13 + 1).alias("w")
+        ),
+        "dag": edges_df(spark, random_graph(n=120, p=0.05, seed=3, directed=False)),
+        "cycle": edges_df(spark, CYCLE6),
+        "directed": edges_df(spark, random_graph(n=120, p=0.03, seed=21)),
+        "redirects": spark.createDataFrame(
+            REDIRECTS, "src_url string, dst_url string"
+        ),
+    }
+    for df in inputs.values():
+        df.persist().count()
+    yield inputs
+    for df in inputs.values():
+        df.unpersist()
+
+
+def _loop_calls(inp):
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph.cc import connected_components
+    from gminer_spark.graph.cpm import cpm_communities
+    from gminer_spark.graph.dag import dag_layers
+    from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
+    from gminer_spark.graph.lpa import label_propagation
+    from gminer_spark.graph.mis import maximal_independent_set
+    from gminer_spark.graph.msf import minimum_spanning_forest
+    from gminer_spark.graph.scc import strongly_connected_components
+    from gminer_spark.graph.sssp import shortest_paths, widest_paths
+    from gminer_spark.graph.trussness import trussness
+    from gminer_spark.web.edges import resolve_redirects
+
+    edges, wedges = inp["edges"], inp["weighted"]
     weighted = edges.select("src", "dst", (F.col("src") % 3 + 1).alias("w"))
+    sources = edges.sparkSession.createDataFrame([(0,), (5,)], "id long")
     return {
         # k=7 and k=13 peel for 6 rounds; the cap stops after 3
         "k_core": lambda: k_core(edges, k=7),
@@ -134,12 +184,33 @@ def _loop_calls(edges):
         "coreness_hindex": lambda: coreness_hindex(edges),
         "coreness_hindex_num_iter": lambda: coreness_hindex(edges, num_iter=10),
         "maximal_independent_set": lambda: maximal_independent_set(edges),
+        "connected_components": lambda: connected_components(edges).state,
+        "shortest_paths": lambda: shortest_paths(edges, sources).state,
+        "shortest_paths_weighted": lambda: shortest_paths(
+            wedges, sources, weight_col="w"
+        ).state,
+        "label_propagation": lambda: label_propagation(edges, num_iter=4).state,
+        "label_propagation_stable": lambda: label_propagation(
+            edges, until_stable=True
+        ).state,
+        "widest_paths": lambda: widest_paths(wedges, sources),
+        "dag_layers": lambda: dag_layers(inp["dag"]),
+        # a cycle never converges: 8 capped rounds, then the warning
+        "dag_layers_cycle": lambda: dag_layers(inp["cycle"], max_rounds=8),
+        "cpm_communities": lambda: cpm_communities(edges),
+        "trussness": lambda: trussness(edges),
+        "trussness_num_iter": lambda: trussness(edges, num_iter=8),
+        "strongly_connected_components": lambda: strongly_connected_components(
+            inp["directed"]
+        ),
+        "minimum_spanning_forest": lambda: minimum_spanning_forest(wedges),
+        "resolve_redirects": lambda: resolve_redirects(inp["redirects"]),
     }
 
 
 @pytest.mark.parametrize("name", sorted(LOOP_JOB_BUDGETS))
-def test_iterative_loop_job_budget(spark, undirected_edges, name):
-    call = _loop_calls(undirected_edges)[name]
+def test_iterative_loop_job_budget(spark, loop_inputs, name):
+    call = _loop_calls(loop_inputs)[name]
     with _jobs(spark, f"budget-{name}") as ids:
         rows = call().collect()
     assert rows
