@@ -26,7 +26,3 @@ def h32_sql(expr: str) -> str:
     """The DuckDB-side rendering of :func:`h32` (ANSI-ish)."""
     return f"(('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 8))::BIGINT)"
 
-
-def h32_spark_sql(expr: str) -> str:
-    """The Spark-SQL rendering (for spark.sql-built plans)."""
-    return f"CAST(conv(substr(md5(CAST({expr} AS STRING)), 1, 8), 16, 10) AS BIGINT)"

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import SuperstepResult, run_supersteps
+from gminer_spark.graph.superstep import SuperstepResult, fixpoint
 
 
 def connected_components(
@@ -53,7 +53,7 @@ def connected_components(
         "id", F.col("id").alias("component"), F.lit(True).alias("active")
     )
 
-    def step(state: DataFrame, k: int):
+    def step(state: DataFrame, k: int) -> DataFrame:
         frontier = state.where(F.col("active"))
         msgs = (
             sym.join(frontier, sym.src == frontier.id)
@@ -61,41 +61,27 @@ def connected_components(
             .groupBy("dst")
             .agg(F.min("component").alias("msg"))
         )
-        new_state = (
-            state.join(msgs, state.id == msgs.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
-                ).alias("component"),
-                F.coalesce(F.col("msg") < F.col("component"), F.lit(False)).alias(
-                    "active"
-                ),
-            )
+        # the round plan references state twice (frontier + join):
+        # fixpoint's lazy barrier keeps it origin-free, and the
+        # changed-count that materializes it is the vote-to-halt signal
+        return state.join(msgs, state.id == msgs.dst, "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
+            ).alias("component"),
+            F.coalesce(F.col("msg") < F.col("component"), F.lit(False)).alias(
+                "active"
+            ),
         )
-        # ONE action per superstep (was three: checkpoint job +
-        # changed-agg job + the framework's re-checkpoint): a lazy
-        # plan_barrier (the round plan references state twice —
-        # frontier + join) materialized by the changed-count, which
-        # doubles as the vote-to-halt signal.
-        new_state = tables.plan_barrier(new_state, eager=False)
-        changed = new_state.where(F.col("active")).count()
-        metrics = {
-            "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
-            "delta": float(changed),
-            "changed": int(changed),
-            "_checkpointed": True,
-        }
-        return new_state, metrics
 
-    result = run_supersteps(
+    result = fixpoint(
         init,
         step,
-        lambda m: m["changed"] == 0,
+        F.col("active"),
         max_iter=max_iter,
         store=store,
         resume=resume,
+        metrics={"edges_scanned": edge_count, "messages_shuffled": edge_count},
     )
     result.state = result.state.select("id", "component")
     sym.unpersist()

@@ -29,7 +29,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import fixpoint
 
 
 def cpm_communities(
@@ -40,16 +40,11 @@ def cpm_communities(
     from gminer_spark.graph.trussness import _triangles_canonical
 
     tri = _triangles_canonical(edges).persist()
-    state = tables.plan_barrier(
-        tri.select(
-            "a",
-            "b",
-            "c",
-            F.concat_ws("|", "a", "b", "c").alias("lab"),
-        )
+    init = tri.select(
+        "a", "b", "c", F.concat_ws("|", "a", "b", "c").alias("lab")
     )
-    converged = False
-    for _ in range(max_rounds):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         tedges = state.select(
             "a", "b", "c", "lab",
             F.explode(
@@ -61,7 +56,7 @@ def cpm_communities(
             ).alias("e"),
         ).select("a", "b", "c", "lab", F.col("e.s").alias("es"), F.col("e.d").alias("ed"))
         emin = tedges.groupBy("es", "ed").agg(F.min("lab").alias("m"))
-        merged = tables.plan_barrier(
+        return (
             tedges.join(emin, on=["es", "ed"])
             .groupBy("a", "b", "c", "lab")
             .agg(F.min("m").alias("newlab"))
@@ -71,20 +66,18 @@ def cpm_communities(
                 "c",
                 F.least("lab", "newlab").alias("lab"),
                 (F.col("newlab") < F.col("lab")).alias("changed"),
-            ),
-            eager=False,
+            )
         )
-        n_changed = merged.where("changed").count()
-        state = merged.select("a", "b", "c", "lab")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
+
+    result = fixpoint(init, step, F.col("changed"), max_iter=max_rounds)
+    if not result.converged:
         warnings.warn(
             f"cpm_communities: max_rounds={max_rounds} hit before the "
             "label fixpoint — memberships may be split",
             stacklevel=2,
         )
+    state = result.state
+    tri.unpersist()
     tri.unpersist()
     members = (
         state.select(F.col("a").alias("id"), F.col("lab").alias("community"))

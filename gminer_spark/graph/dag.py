@@ -13,10 +13,11 @@ the operator is for the bounded-depth DAGs the layering question
 makes sense on (build graphs, citation DAGs, crawl frontiers), not
 for adversarial chains.  Each round is ONE join + ONE max-aggregate +
 ONE merge over the flat persisted edge table; the state table is
-referenced twice per round (neighbor lookup + carry), so rounds are
-re-based on :func:`gminer_spark.graph.tables.plan_barrier` leaves
-(the Spark-4 origin-chain pitfall) with the convergence count fused
-into the lazy barrier's first action — one Spark job per round.
+referenced twice per round (neighbor lookup + carry), so rounds run
+through :func:`gminer_spark.graph.superstep.fixpoint`: origin-free
+``plan_barrier`` leaves (the Spark-4 origin-chain pitfall) with the
+convergence count fused into the lazy barrier's first action — one
+Spark action per round.
 
 Reference analog: the superstep loop + vote-to-halt of the BPregel
 side (SURVEY §2.8) with MAX as the combiner; the unrolled oracle
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import fixpoint
 
 
 def dag_layers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -47,37 +49,27 @@ def dag_layers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
         .repartition(n_shuffle, "src")
         .persist()
     )
-    state = tables.plan_barrier(
+    init = (
         de.select(F.col("src").alias("id"))
         .union(de.select(F.col("dst").alias("id")))
         .distinct()
         .select("id", F.lit(0).cast("long").alias("layer"))
     )
-    converged = False
-    for _ in range(max_rounds):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         cand = (
             de.join(state.withColumnRenamed("id", "src"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("layer") + 1).alias("cand"))
         )
-        merged = tables.plan_barrier(
-            state.join(cand, on="id", how="left").select(
-                "id",
-                F.greatest(
-                    "layer", F.coalesce("cand", F.lit(0))
-                ).alias("layer"),
-                (F.coalesce("cand", F.lit(0)) > F.col("layer")).alias(
-                    "grew"
-                ),
-            ),
-            eager=False,
+        return state.join(cand, on="id", how="left").select(
+            "id",
+            F.greatest("layer", F.coalesce("cand", F.lit(0))).alias("layer"),
+            (F.coalesce("cand", F.lit(0)) > F.col("layer")).alias("grew"),
         )
-        n_changed = merged.where("grew").count()
-        state = merged.select("id", "layer")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
+
+    result = fixpoint(init, step, F.col("grew"), max_iter=max_rounds)
+    if not result.converged:
         warnings.warn(
             f"dag_layers: max_rounds={max_rounds} hit with layers still "
             "growing — input has a cycle or depth > max_rounds; result "
@@ -85,7 +77,7 @@ def dag_layers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
             stacklevel=2,
         )
     de.unpersist()
-    return state
+    return result.state.select("id", "layer")
 
 
 def dag_layers_oracle_sql(edges_cte: str, rounds: int) -> str:

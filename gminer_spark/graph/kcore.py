@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import fixpoint
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -234,12 +235,9 @@ def coreness_hindex(
         .repartition(tables.shuffle_partitions(spark), "dst")
         .persist()
     )
-    state = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").cast("long").alias("val"))
-        .localCheckpoint()
+    init = sym.groupBy(F.col("src").alias("id")).agg(
+        F.count("*").cast("long").alias("val")
     )
-    n_changed = state.count()
     rounds = num_iter if num_iter is not None else max_iter
     # H over a multiset = max over DISTINCT values v of min(v, #{≥v}):
     # aggregate to a per-(id, val) histogram first (map-side combined),
@@ -278,9 +276,8 @@ def coreness_hindex(
     # multi-step only when free-running: num_iter mode must match the
     # single-step unrolled oracle round count.
     steps = _HSTEPS_PER_ROUND if num_iter is None else 1
-    for _ in range(rounds):
-        if n_changed == 0:
-            break  # fixpoint; remaining num_iter rounds are no-ops
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         cur = state
         for s in range(steps):
             cur = h_step(cur)
@@ -293,16 +290,14 @@ def coreness_hindex(
             # materializes every inner step once.
             if s < steps - 1:
                 cur = tables.plan_barrier(cur, eager=False)
-        # lazy barrier: the changed-count below is the round's ONE
-        # materializing action (checkpoints the blocks as it scans)
-        merged = tables.plan_barrier(
-            state.withColumnRenamed("val", "old")
+        return (
+            state.select("id", F.col("val").alias("old"))
             .join(cur, on="id")
-            .select("id", "val", "old"),
-            eager=False,
+            .select("id", "val", "old")
         )
-        n_changed = merged.where(F.col("val") != F.col("old")).count()
-        state = merged.select("id", "val")
+
+    # rounds past the fixpoint are no-ops, so num_iter stops there too
+    state = fixpoint(init, step, F.col("val") != F.col("old"), max_iter=rounds).state
     sym.unpersist()
     return state.select("id", F.col("val").alias("coreness"))
 

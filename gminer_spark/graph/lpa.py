@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import SuperstepResult, run_supersteps
+from gminer_spark.graph.superstep import SuperstepResult, fixpoint
 
 
 def label_propagation(
@@ -116,28 +116,18 @@ def label_propagation(
         sym.unpersist()
         return result
 
-    def step(state: DataFrame, k: int):
-        # ONE action per superstep: lazy barrier materialized by the
-        # changed-count, which is the convergence signal (cc.py idiom)
-        new_state = tables.plan_barrier(advance(state), eager=False)
-        changed = new_state.where(F.col("_changed")).count()
-        metrics = {
-            "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
-            "delta": float(changed),
-            "changed": int(changed),
-            "_checkpointed": True,
-        }
-        return new_state.drop("_changed"), metrics
-
-    if until_stable:
-        converged = lambda m: m["changed"] == 0  # noqa: E731
-    else:
-        converged = lambda m: m["superstep"] >= num_iter  # noqa: E731
-        max_iter = num_iter
-
-    result = run_supersteps(
-        init, step, converged, max_iter=max_iter, store=store, resume=resume
+    # until_stable, or a store: one fused barrier + changed-count job per
+    # round; a fixed round count also stops at the fixpoint (a round
+    # that changes no label is repeated unchanged by every later one)
+    result = fixpoint(
+        init,
+        lambda state, k: advance(state),
+        F.col("_changed"),
+        max_iter=max_iter if until_stable else num_iter,
+        store=store,
+        resume=resume,
+        metrics={"edges_scanned": edge_count, "messages_shuffled": edge_count},
     )
+    result.state = result.state.drop("_changed")
     sym.unpersist()
     return result

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import fixpoint
 
 
 def minimum_spanning_forest(
@@ -127,45 +128,30 @@ def minimum_spanning_forest(
             .join(p0, on="comp", how="left")
             .select("comp", F.coalesce("s", F.col("comp")).alias("s"))
         )
-        # break each mutual 2-cycle at its smaller label (the root)
+        # break each mutual 2-cycle at its smaller label (the root),
+        # then pointer-double to the roots
         s_of_s = succ.select(
             F.col("comp").alias("s"), F.col("s").alias("ss")
         )
-        succ = tables.plan_barrier(
-            succ.join(s_of_s, on="s")
-            .select(
-                "comp",
-                F.when(
-                    (F.col("ss") == F.col("comp"))
-                    & (F.col("comp") < F.col("s")),
-                    F.col("comp"),
-                )
-                .otherwise(F.col("s"))
-                .alias("s"),
+        broken = succ.join(s_of_s, on="s").select(
+            "comp",
+            F.when(
+                (F.col("ss") == F.col("comp")) & (F.col("comp") < F.col("s")),
+                F.col("comp"),
             )
+            .otherwise(F.col("s"))
+            .alias("s"),
         )
-        for _ in range(max_pointer_rounds):
-            s_of_s = succ.select(
-                F.col("comp").alias("s"), F.col("s").alias("s2")
-            )
-            doubled = tables.plan_barrier(
-                succ.join(s_of_s, on="s").select(
-                    "comp",
-                    F.col("s2").alias("s"),
-                    (F.col("s2") != F.col("s")).alias("moved"),
-                ),
-                eager=False,
-            )
-            n_moved = doubled.where("moved").count()
-            succ = doubled.select("comp", "s")
-            if n_moved == 0:
-                break
-        else:
+        doubled = fixpoint(
+            broken, _double, F.col("moved"), max_iter=max_pointer_rounds
+        )
+        if not doubled.converged:
             warnings.warn(
                 "minimum_spanning_forest: pointer doubling hit "
                 f"max_pointer_rounds={max_pointer_rounds}",
                 stacklevel=2,
             )
+        succ = doubled.state.select("comp", "s")
         comp = tables.plan_barrier(
             comp.join(
                 succ.select(F.col("comp").alias("c"), F.col("s")), on="c"
@@ -186,6 +172,16 @@ def minimum_spanning_forest(
     for p in forest_parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _double(succ: DataFrame, k: int) -> DataFrame:
+    """One pointer-doubling step: succ <- succ o succ, flagging moves."""
+    s_of_s = succ.select(F.col("comp").alias("s"), F.col("s").alias("s2"))
+    return succ.join(s_of_s, on="s").select(
+        "comp",
+        F.col("s2").alias("s"),
+        (F.col("s2") != F.col("s")).alias("moved"),
+    )
 
 
 def minimum_spanning_forest_oracle_sql(

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import fixpoint
 
 
 def strongly_connected_components(
@@ -147,31 +148,14 @@ def strongly_connected_components(
             break
 
         # --- 2. forward hash-min coloring to fixpoint ---------------
-        lbl = tables.plan_barrier(und.select("id", F.col("id").alias("lbl")))
-        while True:
-            prop = (
-                sub.join(
-                    lbl.select(F.col("id").alias("src"), "lbl"), on="src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("lbl").alias("in_lbl"))
-            )
-            merged = tables.plan_barrier(
-                lbl.withColumnRenamed("lbl", "old")
-                .join(prop, on="id", how="left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("old"), F.coalesce("in_lbl", F.col("old"))
-                    ).alias("lbl"),
-                    "old",
-                ),
-                eager=False,
-            )
-            n_changed = merged.where(F.col("lbl") != F.col("old")).count()
-            lbl = merged.select("id", "lbl")
-            if n_changed == 0:
-                break
+        # converges within n_und rounds (the longest path plus the
+        # confirming round), so the cap never fires
+        lbl = fixpoint(
+            und.select("id", F.col("id").alias("lbl")),
+            lambda lbl, k: _color_step(sub, lbl),
+            F.col("lbl") != F.col("old"),
+            max_iter=n_und,
+        ).state.select("id", "lbl")
 
         # --- 3. backward membership sweep, all roots at once --------
         members = tables.plan_barrier(
@@ -211,6 +195,24 @@ def strongly_connected_components(
     for part in done_parts[1:]:
         out = out.unionByName(part)
     return out.select("id", "scc_id")
+
+
+def _color_step(sub: DataFrame, lbl: DataFrame) -> DataFrame:
+    """One lazy hash-min level: (id, lbl) -> (id, lbl, old)."""
+    prop = (
+        sub.join(lbl.select(F.col("id").alias("src"), "lbl"), on="src")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("lbl").alias("in_lbl"))
+    )
+    return (
+        lbl.select("id", F.col("lbl").alias("old"))
+        .join(prop, on="id", how="left")
+        .select(
+            "id",
+            F.least(F.col("old"), F.coalesce("in_lbl", F.col("old"))).alias("lbl"),
+            "old",
+        )
+    )
 
 
 def condensation(edges: DataFrame, scc: DataFrame | None = None) -> DataFrame:

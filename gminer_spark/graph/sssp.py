@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from gminer_spark.checkpoint import CheckpointStore
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import SuperstepResult, run_supersteps
+from gminer_spark.graph.superstep import SuperstepResult, fixpoint
 
 
 def shortest_paths(
@@ -71,7 +71,7 @@ def shortest_paths(
         .select("id", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("active"))
     )
 
-    def step(state: DataFrame, k: int):
+    def step(state: DataFrame, k: int) -> DataFrame:
         frontier = state.where(F.col("active"))
         msgs = (
             rel.join(frontier, rel.src == frontier.id)
@@ -79,7 +79,7 @@ def shortest_paths(
             .groupBy("dst")
             .agg(F.min("cand").alias("cand"))
         )
-        new_state = (
+        return (
             state.select("id", "dist")
             .join(msgs, state.id == msgs.dst, "full")
             .select(
@@ -94,27 +94,15 @@ def shortest_paths(
                 ).alias("active"),
             )
         )
-        # ONE action per superstep (cc.py idiom): lazy barrier (the
-        # round plan references state twice — frontier + full join)
-        # materialized by the changed-count / vote-to-halt signal.
-        new_state = tables.plan_barrier(new_state, eager=False)
-        changed = new_state.where(F.col("active")).count()
-        metrics = {
-            "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
-            "delta": float(changed),
-            "changed": int(changed),
-            "_checkpointed": True,
-        }
-        return new_state, metrics
 
-    result = run_supersteps(
+    result = fixpoint(
         init,
         step,
-        lambda m: m["changed"] == 0,
+        F.col("active"),
         max_iter=max_iter,
         store=store,
         resume=resume,
+        metrics={"edges_scanned": edge_count, "messages_shuffled": edge_count},
     )
     result.state = result.state.select("id", "dist")
     rel.unpersist()
@@ -203,13 +191,14 @@ def widest_paths(
         .persist()
     )
     rel.count()
-    state = tables.plan_barrier(
+    init = (
         rel.select(F.col("src").alias("id"))
         .distinct()
         .join(sources.select("id").distinct(), on="id")
         .select("id", F.lit(WIDEST_INF).cast("long").alias("bn"))
     )
-    for _ in range(max_iter):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         cand = (
             rel.join(state.withColumnRenamed("id", "src"), on="src")
             .select(
@@ -219,24 +208,17 @@ def widest_paths(
             .groupBy("id")
             .agg(F.max("cand").alias("cand"))
         )
-        merged = tables.plan_barrier(
-            state.join(cand, on="id", how="full")
-            .select(
-                F.col("id"),
-                F.greatest(
-                    F.coalesce("bn", F.lit(-1)), F.coalesce("cand", F.lit(-1))
-                ).alias("bn"),
-                (
-                    F.coalesce("cand", F.lit(-1))
-                    > F.coalesce("bn", F.lit(-1))
-                ).alias("grew"),
+        return state.join(cand, on="id", how="full").select(
+            F.col("id"),
+            F.greatest(
+                F.coalesce("bn", F.lit(-1)), F.coalesce("cand", F.lit(-1))
+            ).alias("bn"),
+            (F.coalesce("cand", F.lit(-1)) > F.coalesce("bn", F.lit(-1))).alias(
+                "grew"
             ),
-            eager=False,
         )
-        n_changed = merged.where("grew").count()
-        state = merged.select("id", "bn")
-        if n_changed == 0:
-            break
+
+    state = fixpoint(init, step, F.col("grew"), max_iter=max_iter).state
     rel.unpersist()
     return state.select("id", F.col("bn").alias("bottleneck"))
 

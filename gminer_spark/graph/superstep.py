@@ -19,6 +19,22 @@ materializes the checkpoint.
 Lineage is truncated every superstep (checkpoint write + re-read, or
 ``localCheckpoint`` when no store is given) — otherwise the iterative
 plan nests one join per iteration and Catalyst analysis time blows up.
+
+:func:`fixpoint` is the step adapter for the common vote-to-halt
+round — "update the state, count the vertices that changed, stop at
+zero" — and enforces the rules that make that round one Spark action
+(one job per stage under AQE):
+
+* the step's output crosses a lazy :func:`tables.plan_barrier`, an
+  origin-free leaf, so a round plan may reference its state any number
+  of times without the Spark-4 ``localCheckpoint`` origin chain
+  doubling per round;
+* the changed-count is the round's single action: it materializes the
+  barrier as it scans, so no second job re-encodes the state;
+* the round reports ``_checkpointed`` so :func:`run_supersteps` does
+  not checkpoint the leaf again, and the init is checkpointed once.
+
+Callers keep their own cap warning and gate it on ``not converged``.
 """
 
 from __future__ import annotations
@@ -27,9 +43,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from gminer_spark.checkpoint import CheckpointStore
+from gminer_spark.graph import tables
 
 StepFn = Callable[[DataFrame, int], tuple[DataFrame, dict[str, Any]]]
 ConvergedFn = Callable[[dict[str, Any]], bool]
@@ -108,6 +125,48 @@ def run_supersteps(
             break
 
     return SuperstepResult(state, len(history), k, converged, history)
+
+
+def fixpoint(
+    init: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    changed: Column,
+    max_iter: int,
+    store: CheckpointStore | None = None,
+    resume: bool = True,
+    metrics: dict[str, Any] | None = None,
+) -> SuperstepResult:
+    """Iterate ``step`` until no row of its output satisfies ``changed``.
+
+    ``step(state, superstep)`` returns the next state LAZILY, carrying
+    the column(s) the ``changed`` predicate reads; the state handed to
+    the next round (and the result's ``state``) keeps them, so callers
+    select their output columns at the end.  Each round is one Spark
+    action: the ``where(changed).count()`` that also materializes the
+    round's lazy barrier.  ``metrics`` are static per-round entries
+    (e.g. ``edges_scanned``) merged ahead of ``delta`` / ``changed`` in
+    the history and the store's lineage table.  The result is not
+    ``converged`` when ``max_iter`` rounds ran with rows still changing.
+    """
+
+    def round_(state: DataFrame, k: int) -> tuple[DataFrame, dict[str, Any]]:
+        new_state = tables.plan_barrier(step(state, k), eager=False)
+        n = new_state.where(changed).count()
+        return new_state, {
+            **(metrics or {}),
+            "delta": float(n),
+            "changed": int(n),
+            "_checkpointed": True,
+        }
+
+    return run_supersteps(
+        init,
+        round_,
+        lambda m: m["changed"] == 0,
+        max_iter=max_iter,
+        store=store,
+        resume=resume,
+    )
 
 
 def _mark_final(store: CheckpointStore, superstep: int) -> None:

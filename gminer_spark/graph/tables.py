@@ -88,29 +88,6 @@ COPURCHASE_EDGES_SQL = """
 """
 
 
-def supplier_edges(spark: SparkSession, sf_dir: str, min_shared: int = 2) -> DataFrame:
-    """Supplier co-occurrence graph (suppliers sharing >= min_shared orders).
-
-    Smaller and denser than the part graph — used for the clique-style
-    mining kernels (the reference's MCF/CD apps operate on dense ego
-    nets, /root/reference/apps/maxclique.cpp).
-    """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    return (
-        a.join(b, on="l_orderkey")
-        .where(F.col("a.l_suppkey") < F.col("b.l_suppkey"))
-        .groupBy(
-            F.col("a.l_suppkey").cast("long").alias("src"),
-            F.col("b.l_suppkey").cast("long").alias("dst"),
-        )
-        .agg(F.count("*").alias("shared"))
-        .where(F.col("shared") >= min_shared)
-        .select("src", "dst")
-    )
-
-
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected view: both directions, no self-loops, deduped.
 

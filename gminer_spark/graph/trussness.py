@@ -22,10 +22,11 @@ hash joins of the s-table onto the fixed triangle table + one
 windowed h-index — no per-k re-enumeration, no per-round wedge join.
 
 Per round: 3 equi-joins on canonical edge keys + 1 window partitioned
-by edge + 1 changed-count action (state crosses ``plan_barrier`` —
-the round plan references s twice; Spark-4 origin-chain pitfall,
-CLAUDE.md).  ``num_iter`` forces a fixed round count for the unrolled
-oracle; free-running stops when no edge changed.
+by edge + 1 changed-count action (``superstep.fixpoint``: state
+crosses a lazy ``plan_barrier`` — the round plan references s twice,
+the Spark-4 origin-chain pitfall).  ``num_iter`` caps the round
+count for the unrolled oracle; both modes stop when no edge changed
+(later rounds are no-ops).
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
 from gminer_spark.graph.ktruss import _canonical
+from gminer_spark.graph.superstep import fixpoint
 from gminer_spark.graph.triangles import _wedge_closed
 
 #: rounds executed by the most recent :func:`trussness` call — read by
@@ -77,17 +79,11 @@ def trussness(
         .unionByName(tri.select(F.col("b").alias("src"), F.col("c").alias("dst")))
     )
     support = tri_edges.groupBy("src", "dst").agg(F.count("*").alias("s"))
-    state = tables.plan_barrier(
-        canon.join(support, on=["src", "dst"], how="left").select(
-            "src", "dst", F.coalesce("s", F.lit(0)).cast("long").alias("s")
-        )
+    init = canon.join(support, on=["src", "dst"], how="left").select(
+        "src", "dst", F.coalesce("s", F.lit(0)).cast("long").alias("s")
     )
 
-    global last_rounds
-    last_rounds = 0
-    rounds = max_iter if num_iter is None else num_iter
-    for _ in range(rounds):
-        last_rounds += 1
+    def step(state: DataFrame, k: int) -> DataFrame:
         sv = state.select("src", "dst", "s")
         ab = sv.select(
             F.col("src").alias("a"), F.col("dst").alias("b"), F.col("s").alias("s_ab")
@@ -126,34 +122,34 @@ def trussness(
             .groupBy("src", "dst")
             .agg(F.max(F.least(F.col("m"), F.col("rn"))).alias("h"))
         )
-        merged = tables.plan_barrier(
-            state.withColumnRenamed("s", "old")
+        return (
+            sv.withColumnRenamed("s", "old")
             .join(h, on=["src", "dst"], how="left")
             .select(
                 "src",
                 "dst",
                 F.least(F.col("old"), F.coalesce("h", F.lit(0))).alias("s"),
                 "old",
-            ),
-            eager=False,
-        )
-        n_changed = merged.where(F.col("s") != F.col("old")).count()
-        state = merged.select("src", "dst", "s")
-        if num_iter is None and n_changed == 0:
-            break
-    else:
-        if num_iter is None and n_changed > 0:
-            import warnings
-
-            warnings.warn(
-                f"trussness: free-running h-index hit max_iter={max_iter} "
-                f"with {n_changed} edges still changing — result is an "
-                "upper bound, not the fixpoint; raise max_iter",
-                stacklevel=2,
             )
+        )
+
+    # num_iter rounds stop at the fixpoint too: rounds past it are no-ops
+    rounds = max_iter if num_iter is None else num_iter
+    result = fixpoint(init, step, F.col("s") != F.col("old"), max_iter=rounds)
+    global last_rounds
+    last_rounds = result.supersteps_run
+    if num_iter is None and not result.converged:
+        import warnings
+
+        warnings.warn(
+            f"trussness: free-running h-index hit max_iter={max_iter} "
+            f"with {result.history[-1]['changed']} edges still changing — "
+            "result is an upper bound, not the fixpoint; raise max_iter",
+            stacklevel=2,
+        )
     tri.unpersist()
     canon.unpersist()
-    return state.select(
+    return result.state.select(
         "src", "dst", (F.col("s") + 2).cast("int").alias("trussness")
     )
 

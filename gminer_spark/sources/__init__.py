@@ -24,13 +24,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, ref: str) -> DataFrame:
-    """``catalog.db.table`` (Iceberg) or a parquet path/glob."""
-    if "/" not in ref and iceberg_available(spark):
-        return spark.read.table(ref)
-    return spark.read.parquet(ref)
-
-
 def write_table(
     df: DataFrame, ref: str, mode: str = "overwrite", partition_by: list[str] | None = None
 ) -> None:

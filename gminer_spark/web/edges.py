@@ -185,8 +185,8 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 32) -> DataFrame:
     web scale that is ~5 joins for depth-32 chains instead of 32
     sequential ones.  Each round is ONE self-join shuffled on the
     pointer key plus ONE fused action (lazy plan barrier +
-    convergence count, the coreness discipline); the state is
-    multi-referenced per round, hence :func:`plan_barrier` instead of
+    convergence count, :func:`gminer_spark.graph.superstep.fixpoint`);
+    the state is multi-referenced per round, hence a barrier instead of
     ``localCheckpoint`` (Spark-4 origin-chain growth).
 
     Redirect CYCLES never converge; the loop stops at ``max_rounds``
@@ -196,7 +196,7 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 32) -> DataFrame:
     """
     import warnings
 
-    from gminer_spark.graph.tables import plan_barrier
+    from gminer_spark.graph.superstep import fixpoint
 
     f = (
         redirects.where(F.col("src_url") != F.col("dst_url"))
@@ -204,35 +204,30 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 32) -> DataFrame:
         .agg(F.min("dst_url").alias("nxt"))
         .select("src", "nxt", F.lit(1).cast("long").alias("hops"))
     )
-    moved = None
-    for _ in range(max_rounds):
+
+    def double(f: DataFrame, k: int) -> DataFrame:
         nxt_map = f.select(
             F.col("src").alias("nxt"),
             F.col("nxt").alias("nxt2"),
             F.col("hops").alias("h2"),
         )
-        stepped = plan_barrier(
-            f.join(nxt_map, on="nxt", how="left").select(
-                "src",
-                F.coalesce("nxt2", "nxt").alias("nxt"),
-                (F.col("hops") + F.coalesce("h2", F.lit(0))).alias("hops"),
-                F.col("nxt2").isNotNull().alias("moved"),
-            ),
-            eager=False,
+        return f.join(nxt_map, on="nxt", how="left").select(
+            "src",
+            F.coalesce("nxt2", "nxt").alias("nxt"),
+            (F.col("hops") + F.coalesce("h2", F.lit(0))).alias("hops"),
+            F.col("nxt2").isNotNull().alias("moved"),
         )
-        moved = stepped.where(F.col("moved")).count()
-        f = stepped.drop("moved")
-        if moved == 0:
-            break
-    else:
-        if moved:
-            warnings.warn(
-                f"resolve_redirects(): {moved} sources still moving after "
-                f"max_rounds={max_rounds} doublings — redirect cycle or "
-                f"chain deeper than 2**{max_rounds}; their final_url is "
-                "NOT terminal",
-                stacklevel=2,
-            )
+
+    result = fixpoint(f, double, F.col("moved"), max_iter=max_rounds)
+    if not result.converged and result.history:
+        warnings.warn(
+            f"resolve_redirects(): {result.history[-1]['changed']} sources "
+            f"still moving after max_rounds={max_rounds} doublings — "
+            f"redirect cycle or chain deeper than 2**{max_rounds}; their "
+            "final_url is NOT terminal",
+            stacklevel=2,
+        )
+    f = result.state
     return f.select(
         F.col("src").alias("src_url"),
         F.col("nxt").alias("final_url"),

@@ -209,3 +209,55 @@ def test_peel_family_partitioning_invariant(spark, graph):
     assert a["focusco_pull"]
     for k in a:
         assert a[k] == b[k], k
+
+
+def test_fixpoint_loops_partitioning_invariant(spark, graph):
+    """SCC / CPM / trussness / shortest paths / redirect resolution
+    under different physical partitionings — ids, labels and integer
+    distances, so equality is EXACT."""
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph.cpm import cpm_communities
+    from gminer_spark.graph.scc import strongly_connected_components
+    from gminer_spark.graph.sssp import shortest_paths
+    from gminer_spark.graph.trussness import trussness
+    from gminer_spark.web.edges import resolve_redirects
+
+    def run(e):
+        out = {}
+        out["scc"] = {
+            r["id"]: r["scc_id"]
+            for r in strongly_connected_components(e).collect()
+        }
+        out["cpm"] = {
+            (r["id"], r["community"]) for r in cpm_communities(e).collect()
+        }
+        out["trussness"] = {
+            (r["src"], r["dst"]): r["trussness"] for r in trussness(e).collect()
+        }
+        srcs = e.select(F.col("src").alias("id")).distinct().where(
+            F.col("id") % 7 == 0
+        )
+        we = e.select("src", "dst", (F.col("src") % 5 + 1).alias("w"))
+        out["sssp"] = {
+            r["id"]: r["dist"]
+            for r in shortest_paths(we, srcs, weight_col="w").state.collect()
+        }
+        # src < dst: every chain climbs, so the redirect map is acyclic
+        red = e.where(F.col("src") < F.col("dst")).select(
+            F.concat(F.lit("u"), "src").alias("src_url"),
+            F.concat(F.lit("u"), "dst").alias("dst_url"),
+        )
+        out["redirects"] = {
+            r["src_url"]: (r["final_url"], r["hops"])
+            for r in resolve_redirects(red).collect()
+        }
+        return out
+
+    a, b = (run(e) for e in _variants(graph)[:2])
+    assert a["cpm"] and a["redirects"]
+    assert max(a["trussness"].values()) > 2
+    assert len(set(a["scc"].values())) < len(a["scc"])
+    assert max(h for _, h in a["redirects"].values()) > 1
+    for k in a:
+        assert a[k] == b[k], k

@@ -103,22 +103,22 @@ LOOP_JOB_BUDGETS = {
     "k_core_capped": 18,
     "s_core": 27,
     "coreness": 97,
-    "coreness_hindex": 62,
-    "coreness_hindex_num_iter": 49,
+    "coreness_hindex": 60,
+    "coreness_hindex_num_iter": 47,
     "maximal_independent_set": 49,
     "connected_components": 32,
     "shortest_paths": 30,
     "shortest_paths_weighted": 45,
     "label_propagation": 30,
     "label_propagation_stable": 64,
-    "widest_paths": 45,
-    "dag_layers": 98,
-    "dag_layers_cycle": 56,
-    "cpm_communities": 161,
-    "trussness": 79,
-    "trussness_num_iter": 127,
-    "strongly_connected_components": 161,
-    "minimum_spanning_forest": 97,
+    "widest_paths": 44,
+    "dag_layers": 97,
+    "dag_layers_cycle": 54,
+    "cpm_communities": 159,
+    "trussness": 76,
+    "trussness_num_iter": 76,
+    "strongly_connected_components": 160,
+    "minimum_spanning_forest": 95,
     "resolve_redirects": 21,
 }
 # the focusco pull loop on the 40-vertex graph of
