@@ -97,7 +97,10 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
 # Inputs (all cached before the count): an undirected random graph (n=120,
 # p=0.08, seed 21), the same graph with w = src*7 % 13 + 1, a random DAG
 # (n=120, p=0.05, seed 3, src < dst), CYCLE6, a directed random graph
-# (n=120, p=0.03, seed 21) and a table of redirect chains.
+# (n=120, p=0.03, seed 21) and a table of redirect chains.  The
+# target and source sets of hitting_time and earliest_arrival are the
+# directed graph's ids divisible by 7; its temporal edges carry
+# t = src*7 % 50.
 LOOP_JOB_BUDGETS = {
     "k_core": 27,
     "k_core_capped": 18,
@@ -120,6 +123,28 @@ LOOP_JOB_BUDGETS = {
     "strongly_connected_components": 160,
     "minimum_spanning_forest": 95,
     "resolve_redirects": 21,
+    "hits": 328,
+    "salsa": 425,
+    "katz": 46,
+    "katz_dag_horizon_40": 250,
+    "hitting_time": 50,
+    "earliest_arrival": 37,
+    "earliest_arrival_num_iter_30": 193,
+    "wl_colors": 26,
+    "pagerank_tol": 167,
+    "betweenness_sampled": 74,
+    "random_walks": 18,
+    "random_walks_node2vec": 28,
+}
+# Calls whose count moved by a job between runs of the same code
+# (AQE's re-planning races the stages it has already submitted):
+# pinned as a ceiling at the highest count seen.
+JOB_CEILINGS = {
+    "betweenness_sampled",
+    "hitting_time",
+    "katz",
+    "katz_dag_horizon_40",
+    "salsa",
 }
 # the focusco pull loop on the 40-vertex graph of
 # test_focusco_full_graph_path_equals_pull_loop (gseed 4)
@@ -160,21 +185,37 @@ def loop_inputs(spark):
 def _loop_calls(inp):
     from pyspark.sql import functions as F
 
+    from gminer_spark.graph import tables
+    from gminer_spark.graph.betweenness import betweenness_sampled
     from gminer_spark.graph.cc import connected_components
     from gminer_spark.graph.cpm import cpm_communities
     from gminer_spark.graph.dag import dag_layers
+    from gminer_spark.graph.hits import hits
+    from gminer_spark.graph.hitting import hitting_time
+    from gminer_spark.graph.katz import katz
     from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
     from gminer_spark.graph.lpa import label_propagation
     from gminer_spark.graph.mis import maximal_independent_set
     from gminer_spark.graph.msf import minimum_spanning_forest
+    from gminer_spark.graph.pagerank import pagerank
+    from gminer_spark.graph.salsa import salsa
     from gminer_spark.graph.scc import strongly_connected_components
     from gminer_spark.graph.sssp import shortest_paths, widest_paths
+    from gminer_spark.graph.temporal import earliest_arrival
     from gminer_spark.graph.trussness import trussness
+    from gminer_spark.graph.walks import random_walks, random_walks_node2vec
+    from gminer_spark.graph.wl import wl_colors
     from gminer_spark.web.edges import resolve_redirects
 
     edges, wedges = inp["edges"], inp["weighted"]
     weighted = edges.select("src", "dst", (F.col("src") % 3 + 1).alias("w"))
     sources = edges.sparkSession.createDataFrame([(0,), (5,)], "id long")
+    directed = inp["directed"]
+    temporal = directed.select("src", "dst", (F.col("src") * 7 % 50).alias("t"))
+
+    def sevens():
+        return tables.vertices(directed).where(F.col("id") % 7 == 0)
+
     return {
         # k=7 and k=13 peel for 6 rounds; the cap stops after 3
         "k_core": lambda: k_core(edges, k=7),
@@ -205,6 +246,22 @@ def _loop_calls(inp):
         ),
         "minimum_spanning_forest": lambda: minimum_spanning_forest(wedges),
         "resolve_redirects": lambda: resolve_redirects(inp["redirects"]),
+        "hits": lambda: hits(directed, num_iter=10),
+        "salsa": lambda: salsa(directed, num_iter=10),
+        "katz": lambda: katz(directed, horizon=6),
+        "katz_dag_horizon_40": lambda: katz(inp["dag"], horizon=40),
+        "hitting_time": lambda: hitting_time(directed, sevens(), horizon=6),
+        "earliest_arrival": lambda: earliest_arrival(temporal, sevens(), num_iter=4),
+        "earliest_arrival_num_iter_30": lambda: earliest_arrival(
+            temporal, sevens(), num_iter=30
+        ),
+        "wl_colors": lambda: wl_colors(edges, rounds=3),
+        "pagerank_tol": lambda: pagerank(directed).state,
+        "betweenness_sampled": lambda: betweenness_sampled(edges, sources),
+        "random_walks": lambda: random_walks(edges, walk_len=6),
+        "random_walks_node2vec": lambda: random_walks_node2vec(
+            edges, walk_len=6, ret_bias=2, out_bias=3
+        ),
     }
 
 
@@ -216,7 +273,10 @@ def test_iterative_loop_job_budget(spark, loop_inputs, name):
     assert rows
     if name.startswith(("k_core", "s_core")):
         assert len(rows) < len({v for e in UNDIRECTED for v in e})
-    assert len(ids) == LOOP_JOB_BUDGETS[name], len(ids)
+    if name in JOB_CEILINGS:
+        assert len(ids) <= LOOP_JOB_BUDGETS[name], len(ids)
+    else:
+        assert len(ids) == LOOP_JOB_BUDGETS[name], len(ids)
 
 
 def test_focusco_pull_loop_job_budget(spark):
