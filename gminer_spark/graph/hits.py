@@ -13,26 +13,20 @@ key, map-side partial sums as the combiner), and the L1 normalizer
 enters the plan as a broadcast 1-row aggregate — NOT a driver-side
 ``.first()``: a half-step's normalizer is consumed by the SAME
 iteration's next half-step, so unlike the PageRank dangling mass it
-cannot ride the previous round's action.  The whole iteration is
-therefore ONE Spark job: the materializing action of the
-end-of-iteration ``plan_barrier``.  The
-barrier (not ``localCheckpoint``) matters because the iteration plan
-references the intermediate auth state twice (hub sums + carry) —
-exactly the multi-reference shape that builds a 2^rounds Spark-4
-origin tree under ``localCheckpoint`` (see tables.plan_barrier); the
-two references share their shuffle via ReusedExchange.
+cannot ride the previous round's action.  The iteration is
+:func:`_reinforce`, shared with SALSA (:mod:`gminer_spark.graph.salsa`
+passes degree-normalized shares), and the rounds run through
+:func:`superstep.fixpoint` with a constant-true ``changed`` predicate:
+exactly ``num_iter`` rounds, one action each (the count that
+materializes the round's origin-free barrier — the iteration plan
+references the state twice, see tables.plan_barrier).  Under AQE that
+action runs each query stage and broadcast as its own Spark job:
+32 jobs per iteration on a 120-vertex graph at 8 shuffle partitions.
 
 L1 normalization (not the classic L2) keeps the arithmetic a mirrored
 sum/divide in both engines; the fixpoint direction is identical and
 the unrolled DuckDB oracle matches at micro rounding exactly like
 ``pagerank_micro``.
-
-``tol`` enables delta-based convergence auto-stop (L1 distance of the
-hub vector between iterations); it is OFF by default so fixed-iter
-runs stay bit-comparable with the unrolled oracle.  With ``tol`` set
-the per-iteration action count is still one: the barrier is lazy
-(``eager=False``) and the delta aggregate is the action that
-materializes it.
 
 Vertices with no out-edges keep hub 0; no in-edges keep auth 0 (they
 stay in the output — full vertex coverage).
@@ -40,89 +34,61 @@ stay in the output — full vertex coverage).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
 
 
-def hits(
-    edges: DataFrame, num_iter: int = 10, tol: float | None = None
+def _half_step(
+    e: DataFrame, state: DataFrame, share: Column, frm: str, to: str, out: str
 ) -> DataFrame:
+    """Replace ``state[out]`` by the L1-normalized sum of ``share``
+    over the ``frm -> to`` edges (0 where no edge arrives)."""
+    raw = (
+        e.join(state.select(F.col("id").alias(frm), share.alias("_share")), on=frm)
+        .groupBy(F.col(to).alias("id"))
+        .agg(F.sum("_share").alias("_raw"))
+    )
+    # the normalizer rides the plan as a broadcast 1-row aggregate — no
+    # driver action; the zero-sum guard only fires on edgeless graphs
+    norm = raw.agg(
+        F.coalesce(F.nullif(F.sum("_raw"), F.lit(0.0)), F.lit(1.0)).alias("_norm")
+    )
+    value = (F.coalesce("_raw", F.lit(0.0)) / F.col("_norm")).alias(out)
+    return (
+        state.join(raw, on="id", how="left")
+        .crossJoin(F.broadcast(norm))
+        .select(*[value if c == out else c for c in state.columns])
+    )
+
+
+def _reinforce(
+    e: DataFrame, state: DataFrame, hub_share: Column, auth_share: Column
+) -> DataFrame:
+    """One mutual-reinforcement iteration over ``state(id, hub, auth,
+    ...)``: authorities collect ``hub_share`` along out-edges, then hubs
+    collect ``auth_share`` (read from the new authorities) back along
+    them.  Other state columns ride along unchanged."""
+    state = _half_step(e, state, hub_share, "src", "dst", "auth")
+    return _half_step(e, state, auth_share, "dst", "src", "hub")
+
+
+def hits(edges: DataFrame, num_iter: int = 10) -> DataFrame:
     """(id, hub, auth) after ``num_iter`` iterations over the directed
-    edge table (or earlier, if ``tol`` is set and the hub vector's L1
-    delta drops below it)."""
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_shuffle, "src")
-        .persist()
+    edge table."""
+    e = tables.distinct_edges(edges)
+    init = tables.vertices(e).select(
+        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
     )
-    verts = tables.vertices(e)
-    state = tables.plan_barrier(
-        verts.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+    res = superstep.fixpoint(
+        init,
+        lambda state, _k: _reinforce(e, state, F.col("hub"), F.col("auth")),
+        F.lit(True),
+        max_iter=num_iter,
     )
-    for _ in range(num_iter):
-        auth_raw = (
-            e.join(state.select(F.col("id").alias("src"), "hub"), on="src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("a_raw"))
-        )
-        # normalizers ride the plan as broadcast 1-row aggregates — no
-        # driver action; zero-sum guard only fires on edgeless graphs
-        # (the oracle's graphs always have edges, arithmetic unchanged)
-        a_sum = auth_raw.agg(
-            F.coalesce(F.nullif(F.sum("a_raw"), F.lit(0.0)), F.lit(1.0)).alias(
-                "_asum"
-            )
-        )
-        a_state = (
-            state.select("id", "hub")
-            .join(auth_raw, on="id", how="left")
-            .crossJoin(F.broadcast(a_sum))
-            .select(
-                "id",
-                "hub",
-                (F.coalesce("a_raw", F.lit(0.0)) / F.col("_asum")).alias("auth"),
-            )
-        )
-        hub_raw = (
-            e.join(a_state.select(F.col("id").alias("dst"), "auth"), on="dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("auth").alias("h_raw"))
-        )
-        h_sum = hub_raw.agg(
-            F.coalesce(F.nullif(F.sum("h_raw"), F.lit(0.0)), F.lit(1.0)).alias(
-                "_hsum"
-            )
-        )
-        new_state = (
-            a_state.select("id", "auth")
-            .join(hub_raw, on="id", how="left")
-            .crossJoin(F.broadcast(h_sum))
-            .select(
-                "id",
-                (F.coalesce("h_raw", F.lit(0.0)) / F.col("_hsum")).alias("hub"),
-                "auth",
-            )
-        )
-        if tol is None:
-            state = tables.plan_barrier(new_state)
-        else:
-            prev = state
-            state = tables.plan_barrier(new_state, eager=False)
-            delta = (
-                state.select("id", F.col("hub").alias("new_hub"))
-                .join(prev.select("id", "hub"), on="id")
-                .agg(F.sum(F.abs(F.col("new_hub") - F.col("hub"))))
-                .first()[0]
-            )
-            if delta is not None and float(delta) < tol:
-                break
     e.unpersist()
-    return state.select("id", "hub", "auth")
+    return res.state.select("id", "hub", "auth")
 
 
 def hits_oracle_sql(edges_cte: str, iters: int = 10) -> str:

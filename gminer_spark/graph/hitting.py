@@ -20,10 +20,13 @@ therefore compares exact integers, so the cap can never flip on a
 1-ulp engine difference.
 
 Spark shape: one equi-join of the persisted edge table against the
-state per round (map-side partial sums), one ``plan_barrier`` action
-per round — the PageRank superstep posture (pagerank.py), reference
-analog apps/reachability-style BVertex::compute with a min-combiner
-(core/bvertex.hpp).
+state per round (map-side partial sums); the static ``is_t`` and
+``out_deg`` columns ride in the state, and the rounds run through
+:func:`superstep.fixpoint` — one action per round, the PageRank
+superstep posture (pagerank.py).  The update is exact, so the loop
+stops early once no ``h`` changes, with output identical to running
+all ``horizon`` rounds.  Reference analog: apps/reachability-style
+BVertex::compute with a min-combiner (core/bvertex.hpp).
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
 
 MICRO = 1_000_000
 
@@ -44,18 +47,41 @@ def hitting_time(
 
     ``targets``: one column ``id``.
     """
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_shuffle, "src")
-        .persist()
-    )
-    verts = tables.vertices(e)
+    e = tables.distinct_edges(edges)
     cap = horizon * MICRO
-    base = tables.plan_barrier(
-        verts.join(
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        sums = (
+            e.join(state.select(F.col("id").alias("dst"), "h"), on="dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("h").alias("s"))
+        )
+        return (
+            state.select("id", "is_t", "out_deg", F.col("h").alias("old"))
+            .join(sums, on="id", how="left")
+            .select(
+                "id",
+                "is_t",
+                "out_deg",
+                F.when(F.col("is_t"), F.lit(0).cast("long"))
+                .when(F.col("out_deg") == 0, F.lit(cap).cast("long"))
+                .otherwise(
+                    F.least(
+                        F.lit(cap).cast("long"),
+                        F.lit(MICRO)
+                        + F.round(
+                            F.col("s").cast("double") / F.col("out_deg"), 0
+                        ).cast("long"),
+                    )
+                )
+                .alias("h"),
+                "old",
+            )
+        )
+
+    init = (
+        tables.vertices(e)
+        .join(
             targets.select(F.col("id"), F.lit(True).alias("is_t")),
             on="id",
             how="left",
@@ -72,40 +98,14 @@ def hitting_time(
             F.coalesce("is_t", F.lit(False)).alias("is_t"),
             F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
         )
-    ).persist()
-    state = base.select(
-        "id",
-        F.when(F.col("is_t"), F.lit(0))
-        .otherwise(F.lit(cap))
-        .cast("long")
-        .alias("h"),
+        .withColumn(
+            "h",
+            F.when(F.col("is_t"), F.lit(0)).otherwise(F.lit(cap)).cast("long"),
+        )
     )
-    for _ in range(horizon):
-        sums = (
-            e.join(state.select(F.col("id").alias("dst"), "h"), on="dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("h").alias("s"))
-        )
-        state = tables.plan_barrier(
-            base.join(sums, on="id", how="left").select(
-                "id",
-                F.when(F.col("is_t"), F.lit(0).cast("long"))
-                .when(F.col("out_deg") == 0, F.lit(cap).cast("long"))
-                .otherwise(
-                    F.least(
-                        F.lit(cap).cast("long"),
-                        F.lit(MICRO)
-                        + F.round(
-                            F.col("s").cast("double") / F.col("out_deg"), 0
-                        ).cast("long"),
-                    )
-                )
-                .alias("h"),
-            )
-        )
+    res = superstep.fixpoint(init, step, F.col("h") != F.col("old"), horizon)
     e.unpersist()
-    base.unpersist()
-    return state.select("id", F.col("h").alias("hit_micro"))
+    return res.state.select("id", F.col("h").alias("hit_micro"))
 
 
 def hitting_time_oracle_sql(

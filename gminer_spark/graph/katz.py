@@ -26,8 +26,11 @@ up to ~9e6 at full saturation — beyond that, switch the sum to
 DECIMAL(38,0) (structure.py discipline).
 
 Spark shape: one equi-join of the persisted edge table against the
-state per round (map-side partial BIGINT sums), one ``plan_barrier``
-per round — the PageRank superstep posture.  Reference analog:
+state per round (map-side partial BIGINT sums), the rounds run through
+:func:`superstep.fixpoint` — one action per round, the PageRank
+superstep posture.  The update is exact, so the loop stops early once
+no ``x`` changes (on a DAG: after the longest path), with output
+identical to running all ``horizon`` rounds.  Reference analog:
 apps/pagerank.cpp's BVertex::compute superstep with a sum combiner;
 Katz swaps the rank expression and drops the degree normalization.
 """
@@ -37,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
 
 MICRO = 1_000_000
 ATT = 64  # dyadic attenuation alpha = 1/64
@@ -47,24 +50,18 @@ CAP = 10**12  # saturation, in micro units
 def katz(edges: DataFrame, horizon: int = 6) -> DataFrame:
     """(id, katz_micro) — truncated Katz centrality after ``horizon``
     exact-integer rounds over the directed edge table."""
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_shuffle, "src")
-        .persist()
-    )
-    verts = tables.plan_barrier(tables.vertices(e)).persist()
-    state = verts.select("id", F.lit(MICRO).cast("long").alias("x"))
-    for _ in range(horizon):
+    e = tables.distinct_edges(edges)
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
         sums = (
             e.join(state.select(F.col("id").alias("src"), "x"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("x").alias("s"))
         )
-        state = tables.plan_barrier(
-            verts.join(sums, on="id", how="left").select(
+        return (
+            state.select("id", F.col("x").alias("old"))
+            .join(sums, on="id", how="left")
+            .select(
                 "id",
                 (
                     F.lit(MICRO)
@@ -73,11 +70,14 @@ def katz(edges: DataFrame, horizon: int = 6) -> DataFrame:
                         F.expr(f"(coalesce(s, 0L) + {ATT // 2}) div {ATT}"),
                     )
                 ).cast("long").alias("x"),
+                "old",
             )
         )
+
+    init = tables.vertices(e).select("id", F.lit(MICRO).cast("long").alias("x"))
+    res = superstep.fixpoint(init, step, F.col("x") != F.col("old"), horizon)
     e.unpersist()
-    verts.unpersist()
-    return state.select("id", F.col("x").alias("katz_micro"))
+    return res.state.select("id", F.col("x").alias("katz_micro"))
 
 
 def katz_oracle_sql(edges_cte: str, horizon: int = 6) -> str:

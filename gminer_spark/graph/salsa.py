@@ -15,14 +15,18 @@ scores).  Each vector is L1-normalized per half-step exactly like
 out-edges / authorities with no in-edges) is redistributed
 proportionally instead of leaking.
 
-Spark shape — identical scale posture to HITS/PageRank: the degree
-table is computed ONCE and joined into each half-step; every
-half-step is one equi-join of the persisted edge table against the
-state (map-side partial sums), the L1 normalizer rides the plan as a
-broadcast 1-row aggregate, and the iteration ends in ONE
-``plan_barrier`` action (the multi-reference state shape that melts
-``localCheckpoint`` into a 2^rounds origin tree, see
-tables.plan_barrier).
+Spark shape — identical scale posture to HITS/PageRank, and the
+same code: the iteration is :func:`hits._reinforce` with the shares
+``hub/out_deg`` and ``auth/in_deg``.  The degrees are computed ONCE
+and ride in the state as static columns, so no half-step joins a
+degree table; every half-step is one equi-join of the persisted edge
+table against the state (map-side partial sums), the L1 normalizer
+rides the plan as a broadcast 1-row aggregate, and the rounds run
+through :func:`superstep.fixpoint` with a constant-true ``changed``
+predicate — exactly ``num_iter`` rounds, one action each.  Under AQE
+that action runs each query stage and broadcast as its own Spark job:
+about 32 jobs per iteration on a 120-vertex graph at 8 shuffle
+partitions, as for HITS.
 
 Reference analog: the BVertex::compute superstep loop
 (core/bvertex.hpp, apps/pagerank.cpp:18-52) — per-superstep keyed
@@ -34,99 +38,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
+from gminer_spark.graph.hits import _reinforce
 
 
 def salsa(edges: DataFrame, num_iter: int = 10) -> DataFrame:
     """(id, hub, auth) after ``num_iter`` degree-normalized,
     L1-renormalized iterations over the directed edge table."""
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_shuffle, "src")
-        .persist()
-    )
-    verts = tables.vertices(e)
+    e = tables.distinct_edges(edges)
     out_deg = e.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("double").alias("out_deg")
     )
     in_deg = e.groupBy(F.col("dst").alias("id")).agg(
         F.count("*").cast("double").alias("in_deg")
     )
-    deg = tables.plan_barrier(
-        verts.join(out_deg, on="id", how="left")
+    init = (
+        tables.vertices(e)
+        .join(out_deg, on="id", how="left")
         .join(in_deg, on="id", how="left")
         .select(
             "id",
+            F.lit(1.0).alias("hub"),
+            F.lit(1.0).alias("auth"),
             F.coalesce("out_deg", F.lit(0.0)).alias("out_deg"),
             F.coalesce("in_deg", F.lit(0.0)).alias("in_deg"),
         )
-    ).persist()
-    state = tables.plan_barrier(
-        verts.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
     )
-    for _ in range(num_iter):
-        auth_raw = (
-            e.join(
-                state.join(deg.select("id", "out_deg"), on="id").select(
-                    F.col("id").alias("src"),
-                    (F.col("hub") / F.col("out_deg")).alias("contrib"),
-                ),
-                on="src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("a_raw"))
-        )
-        a_sum = auth_raw.agg(
-            F.coalesce(F.nullif(F.sum("a_raw"), F.lit(0.0)), F.lit(1.0)).alias(
-                "_asum"
-            )
-        )
-        a_state = (
-            state.select("id", "hub")
-            .join(auth_raw, on="id", how="left")
-            .crossJoin(F.broadcast(a_sum))
-            .select(
-                "id",
-                "hub",
-                (F.coalesce("a_raw", F.lit(0.0)) / F.col("_asum")).alias(
-                    "auth"
-                ),
-            )
-        )
-        hub_raw = (
-            e.join(
-                a_state.join(deg.select("id", "in_deg"), on="id").select(
-                    F.col("id").alias("dst"),
-                    (F.col("auth") / F.col("in_deg")).alias("contrib"),
-                ),
-                on="dst",
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("contrib").alias("h_raw"))
-        )
-        h_sum = hub_raw.agg(
-            F.coalesce(F.nullif(F.sum("h_raw"), F.lit(0.0)), F.lit(1.0)).alias(
-                "_hsum"
-            )
-        )
-        state = tables.plan_barrier(
-            a_state.select("id", "auth")
-            .join(hub_raw, on="id", how="left")
-            .crossJoin(F.broadcast(h_sum))
-            .select(
-                "id",
-                (F.coalesce("h_raw", F.lit(0.0)) / F.col("_hsum")).alias(
-                    "hub"
-                ),
-                "auth",
-            )
-        )
+    res = superstep.fixpoint(
+        init,
+        lambda state, _k: _reinforce(
+            e,
+            state,
+            F.col("hub") / F.col("out_deg"),
+            F.col("auth") / F.col("in_deg"),
+        ),
+        F.lit(True),
+        max_iter=num_iter,
+    )
     e.unpersist()
-    deg.unpersist()
-    return state.select("id", "hub", "auth")
+    return res.state.select("id", "hub", "auth")
 
 
 def salsa_oracle_sql(edges_cte: str, iters: int = 10) -> str:

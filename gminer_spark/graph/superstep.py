@@ -147,6 +147,10 @@ def fixpoint(
     (e.g. ``edges_scanned``) merged ahead of ``delta`` / ``changed`` in
     the history and the store's lineage table.  The result is not
     ``converged`` when ``max_iter`` rounds ran with rows still changing.
+
+    A constant-true ``changed`` (``F.lit(True)``) gives a fixed-round
+    loop: exactly ``max_iter`` rounds (HITS, SALSA), each counting every
+    row — the same job an eager ``plan_barrier`` runs.
     """
 
     def round_(state: DataFrame, k: int) -> tuple[DataFrame, dict[str, Any]]:

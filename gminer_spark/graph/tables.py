@@ -129,6 +129,14 @@ def degrees(edges: DataFrame) -> DataFrame:
         .withColumn("degree", F.col("out_deg") + F.col("in_deg"))
     )
 
+
+def distinct_edges(edges: DataFrame) -> DataFrame:
+    """The distinct ``(src, dst)`` pairs, hash-partitioned on ``src``
+    and persisted: the table a link-analysis loop joins every round."""
+    n = shuffle_partitions(edges.sparkSession)
+    return edges.select("src", "dst").distinct().repartition(n, "src").persist()
+
+
 def ensure_materialized(df: DataFrame) -> tuple[DataFrame, int, bool]:
     """Persist ``df`` (if the caller hasn't) and force one materialization.
 

@@ -20,11 +20,12 @@ epoch); every round is a pure BIGINT min — no floats anywhere
 (the hitting-time discipline).  ``INF`` marks unreached.
 
 Spark shape: one equi-join of the persisted temporal edge table
-against the state per round + a min-combine (map-side partial), one
-``plan_barrier`` per round — the SSSP superstep posture
-(graph/sssp-style frontier could be added; arrival times are
-monotone non-increasing so rounds are idempotent and the fixed
-horizon bounds cost at scale).  Reference analog: the hash-min CC /
+against the state per round + a min-combine (map-side partial), the
+rounds run through :func:`superstep.fixpoint` — one action per round,
+the SSSP superstep posture.  Arrival times are monotone non-increasing
+and exact, so the loop stops early once no ``arr`` changes, with
+output identical to running all ``num_iter`` rounds; the fixed horizon
+bounds cost at scale.  Reference analog: the hash-min CC /
 SSSP BVertex::compute superstep (apps/*.cpp) with the message filter
 ``t >= arr(u)`` — GMiner's message-filter hook (SURVEY §2.2).
 """
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
 
 INF = 10**15
 
@@ -54,33 +55,36 @@ def earliest_arrival(
         .repartition(n_shuffle, "src")
         .persist()
     )
-    verts = tables.plan_barrier(tables.vertices(e)).persist()
-    state = verts.join(
-        sources.select("id", F.lit(0).cast("long").alias("s0")),
-        on="id",
-        how="left",
-    ).select("id", F.coalesce("s0", F.lit(INF)).cast("long").alias("arr"))
-    state = tables.plan_barrier(state)
-    for _ in range(num_iter):
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
         msgs = (
-            e.join(
-                state.select(F.col("id").alias("src"), "arr"), on="src"
-            )
+            e.join(state.select(F.col("id").alias("src"), "arr"), on="src")
             .where(F.col("t") >= F.col("arr"))
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("t").alias("m"))
         )
-        state = tables.plan_barrier(
-            state.join(msgs, on="id", how="left").select(
+        return (
+            state.select("id", F.col("arr").alias("old"))
+            .join(msgs, on="id", how="left")
+            .select(
                 "id",
-                F.least(
-                    F.col("arr"), F.coalesce("m", F.lit(INF))
-                ).alias("arr"),
+                F.least(F.col("old"), F.coalesce("m", F.lit(INF))).alias("arr"),
+                "old",
             )
         )
+
+    init = (
+        tables.vertices(e)
+        .join(
+            sources.select("id", F.lit(0).cast("long").alias("s0")),
+            on="id",
+            how="left",
+        )
+        .select("id", F.coalesce("s0", F.lit(INF)).cast("long").alias("arr"))
+    )
+    res = superstep.fixpoint(init, step, F.col("arr") != F.col("old"), num_iter)
     e.unpersist()
-    verts.unpersist()
-    return state.select("id", F.col("arr").alias("arrival"))
+    return res.state.select("id", F.col("arr").alias("arrival"))
 
 
 def earliest_arrival_oracle_sql(

@@ -24,8 +24,12 @@ shared md5 idiom.
 Spark shape per round: one equi-join of the color table onto the
 symmetric edges, one groupBy(v) with collect_list + array_sort (the
 per-vertex multiset is degree-bounded), one projection — the same
-scan posture as an LPA round.  State crosses ``plan_barrier``
-(referenced twice per round — Spark-4 origin-chain pitfall).
+scan posture as an LPA round.  The rounds run through
+:func:`superstep.fixpoint` (one action per round; its origin-free
+barrier matters because the state is referenced twice per round —
+Spark-4 origin-chain pitfall).  The ``changed`` test is
+``color != old``: a refinement rehashes every color, so WL runs every
+round it is asked for.
 
 Reference analog: the reference's Voronoi/BDG partitioning spreads
 labels by hash-min (partition/BPartitioner.tpp:91-165); WL is the
@@ -38,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.functions import h32
-from gminer_spark.graph import tables
+from gminer_spark.graph import superstep, tables
 
 
 def wl_colors(edges: DataFrame, rounds: int = 3) -> DataFrame:
@@ -51,41 +55,42 @@ def wl_colors(edges: DataFrame, rounds: int = 3) -> DataFrame:
         .persist()
     )
     sym.count()
-    state = tables.plan_barrier(
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("deg"))
-        .select("id", h32(F.col("deg").cast("string")).alias("color"))
-    )
-    for _ in range(rounds):
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
         nbr = (
-            sym.join(
-                state.select(F.col("id").alias("src"), "color"), on="src"
-            )
+            sym.join(state.select(F.col("id").alias("src"), "color"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg(
                 F.concat_ws(
                     ",",
-                    F.array_sort(
-                        F.collect_list(F.col("color").cast("string"))
-                    ),
+                    F.array_sort(F.collect_list(F.col("color").cast("string"))),
                 ).alias("nbrs")
             )
         )
-        state = tables.plan_barrier(
-            state.join(nbr, on="id", how="left")
+        return (
+            state.select("id", F.col("color").alias("old"))
+            .join(nbr, on="id", how="left")
             .select(
                 "id",
                 h32(
                     F.concat_ws(
                         "|",
-                        F.col("color").cast("string"),
+                        F.col("old").cast("string"),
                         F.coalesce("nbrs", F.lit("")),
                     )
                 ).alias("color"),
+                "old",
             )
         )
+
+    init = (
+        sym.groupBy(F.col("src").alias("id"))
+        .agg(F.count("*").alias("deg"))
+        .select("id", h32(F.col("deg").cast("string")).alias("color"))
+    )
+    res = superstep.fixpoint(init, step, F.col("color") != F.col("old"), rounds)
     sym.unpersist()
-    return state
+    return res.state.select("id", "color")
 
 
 def wl_histogram(edges: DataFrame, rounds: int = 3) -> DataFrame:

@@ -62,20 +62,22 @@ def test_triangles_partitioning_invariant(spark, graph):
 
 
 def test_round5_micro_ops_partitioning_invariant(spark, graph):
-    """Katz / hitting-time / SALSA / temporal arrivals / linkpred AUC
-    / community metrics under three physical partitionings — all
-    exact-integer (or micro-rounded via exact sums), so equality is
-    EXACT."""
+    """Katz / hitting-time / HITS / SALSA / temporal arrivals / WL
+    colors / linkpred AUC / community metrics under two physical
+    partitionings — exact integers or hashes, and float scores rounded
+    to 9 digits, so equality is EXACT."""
     from pyspark.sql import functions as F
 
     from gminer_spark.graph import tables as gt
     from gminer_spark.graph.community_metrics import community_quality
+    from gminer_spark.graph.hits import hits
     from gminer_spark.graph.hitting import hitting_time
     from gminer_spark.graph.katz import katz
     from gminer_spark.graph.linkpred import linkpred_auc
     from gminer_spark.graph.lpa import label_propagation
     from gminer_spark.graph.salsa import salsa
     from gminer_spark.graph.temporal import earliest_arrival
+    from gminer_spark.graph.wl import wl_colors
 
     def run(e):
         out = {}
@@ -87,10 +89,15 @@ def test_round5_micro_ops_partitioning_invariant(spark, graph):
             r["id"]: r["hit_micro"]
             for r in hitting_time(e, tgt, horizon=4).collect()
         }
+        out["hits"] = {
+            r["id"]: (round(r["hub"], 9), round(r["auth"], 9))
+            for r in hits(e, num_iter=4).collect()
+        }
         out["salsa"] = {
             r["id"]: (round(r["hub"], 9), round(r["auth"], 9))
             for r in salsa(e, num_iter=4).collect()
         }
+        out["wl"] = {r["id"]: r["color"] for r in wl_colors(e, rounds=3).collect()}
         te = e.select("src", "dst", (F.col("src") * 7 % 50).alias("t"))
         srcs = gt.vertices(e).where(F.col("id") % 7 == 0)
         out["temporal"] = {

@@ -123,21 +123,20 @@ LOOP_JOB_BUDGETS = {
     "strongly_connected_components": 160,
     "minimum_spanning_forest": 95,
     "resolve_redirects": 21,
-    "hits": 328,
-    "salsa": 425,
-    "katz": 46,
-    "katz_dag_horizon_40": 250,
-    "hitting_time": 50,
-    "earliest_arrival": 37,
-    "earliest_arrival_num_iter_30": 193,
-    "wl_colors": 26,
+    "hits": 327,
+    "salsa": 332,
+    "katz": 43,
+    "katz_dag_horizon_40": 43,
+    "hitting_time": 47,
+    "earliest_arrival": 33,
+    "earliest_arrival_num_iter_30": 45,
+    "wl_colors": 25,
     "pagerank_tol": 167,
     "betweenness_sampled": 74,
     "random_walks": 18,
     "random_walks_node2vec": 28,
 }
-# Calls whose count moved by a job between runs of the same code
-# (AQE's re-planning races the stages it has already submitted):
+# Calls whose count moved by a job between runs of the same code:
 # pinned as a ceiling at the highest count seen.
 JOB_CEILINGS = {
     "betweenness_sampled",
