@@ -9,8 +9,8 @@ from graph/triangles.py so hub fan-out stays arboricity-bounded) and
 the degree-threshold seed filtering the reference applies per task
 (:139-140), iterated to convergence (SURVEY.md §2.10 analog set).
 
-Scale shape per round: one oriented wedge join (the TC plan), one
-explode of each triangle into its three canonical edges, one
+Scale shape per round: one oriented triangle enumeration (the TC
+plan), one explode of each triangle into its three canonical edges, one
 count-per-edge aggregate, one survivor filter — all shuffle-bounded,
 lineage truncated per round.  Peeling is idempotent past the
 fixpoint, so a run capped at N >= convergence rounds equals the

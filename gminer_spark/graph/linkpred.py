@@ -9,11 +9,11 @@ ratios of integers survive micro-rounding bit-identically across
 engines, while `ln` may differ in the last ulp between libm and the
 JVM.
 
-Plan shape: both features reduce to the TC wedge join — edge (u, v)
-⋈ sym(u, w) ⋈ sym(v, w) — the same shuffle the triangle counter
-does, with the closing-edge check replaced by aggregation over w.
-Degree-ordered orientation (graph.triangles) is the skew fix when the
-candidate set is the edge table itself.
+Plan shape: both features reduce to the TC triangle list — the common
+neighbors of edge (u, v) are the w with triangle (u, v, w), which the
+triangle counter's oriented CSR intersection enumerates — followed by
+an aggregation over w.  Degree-ordered orientation (graph.triangles)
+is the skew fix when the candidate set is the edge table itself.
 """
 
 from __future__ import annotations
@@ -30,9 +30,9 @@ def link_features(edges: DataFrame) -> DataFrame:
     resource-allocation index — micro-rounded ints.
 
     Common neighbors of edge (u, v) are exactly the triangles through
-    that edge, so the enumeration rides the degree-ORIENTED wedge join
-    (graph.triangles._wedge_closed): per-vertex fan-out is bounded
-    ~√|E| instead of the hub-degree² blow-up a naive
+    that edge, so the enumeration rides the degree-ORIENTED CSR
+    intersection (graph.triangles._wedge_closed): per-vertex fan-out is
+    bounded ~√|E| instead of the hub-degree² blow-up a naive
     neighbors-of-u ⋈ neighbors-of-v join pays.  Each oriented triangle
     (u,v,w) then credits all three of its edges — cn += 1 and
     ra += 1/deg(third vertex) — one union + one aggregate.

@@ -22,11 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gminer_spark.graph.triangles import (
-    BROADCAST_ROW_LIMIT,
-    gated_broadcast,
-    oriented_edges,
-)
+from gminer_spark.graph.triangles import BROADCAST_ROW_LIMIT, _closed, _csr_pairs
 
 
 
@@ -77,44 +73,20 @@ def _seed_egonets(
     reference's id-ordered seeding (maxclique.cpp:230-254) with the
     degree-ordered skew fix.
 
-    Every lookup-table broadcast here is SIZE-GATED on the oriented
-    edge count (same policy as triangles._wedge_closed): above the
-    gate the key and wedge-closer joins fall back to shuffle joins,
-    matching the reference's shuffled pull (core/slave.tpp:307-401).
+    Both come off the oriented CSR of triangles._csr_pairs: cands is
+    the out-list N⁺(u), and the ego edges are the closed wedges
+    (v, w ∈ N⁺(u) ∩ N⁺(v)) grouped by u.  Its one lookup broadcast is
+    SIZE-GATED on the oriented edge count: above ``broadcast_limit``
+    it is a shuffle join, matching the reference's shuffled pull
+    (core/slave.tpp:307-401).
     """
-    e = oriented_edges(edges, orient="degree").localCheckpoint()
-    n_e = e.count()
-    base = e.select("src", "dst")
-    cands = base.groupBy(F.col("src").alias("u")).agg(
-        F.collect_list("dst").alias("cands")
+    adj, pairs = _csr_pairs(edges, "degree", broadcast_limit)
+    ego_edges = (
+        _closed(pairs)
+        .groupBy("u")
+        .agg(F.collect_list("v").alias("eg_src"), F.collect_list("w").alias("eg_dst"))
     )
-    # wedge ordering MUST use the rank keys, not ids: the closing edge
-    # (v, w) exists in the oriented table only as rank(v) < rank(w).
-    # The oriented table already CARRIES each endpoint's rank key
-    # (dst_key), so the wedge sides project it directly — the former
-    # dedup'd key-table joins re-derived a value that was already on
-    # the row (two broadcast probes over |E| rows for nothing; same
-    # shape triangles._wedge_closed has always used).
-    e1 = e.select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("v"),
-        F.col("dst_key").alias("v_key"),
-    )
-    e2 = e.select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("w"),
-        F.col("dst_key").alias("w_key"),
-    )
-    closer = base.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    wedges = (
-        e1.join(e2, on="u")
-        .where(F.col("v_key") < F.col("w_key"))
-        .join(gated_broadcast(closer, n_e, broadcast_limit), on=["v", "w"])
-    )
-    ego_edges = wedges.groupBy("u").agg(
-        F.collect_list("v").alias("eg_src"), F.collect_list("w").alias("eg_dst")
-    )
-    return cands.join(ego_edges, on="u", how="left")
+    return adj.withColumnRenamed("nu", "cands").join(ego_edges, on="u", how="left")
 
 
 def _kernel_max_clique(cands, eg_src, eg_dst, lower_bound: int) -> list[int]:

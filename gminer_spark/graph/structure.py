@@ -349,7 +349,7 @@ def egonet_density(edges: DataFrame) -> DataFrame:
     The egonet of v (v plus its neighbors) has n_ego = deg(v)+1
     vertices and ego_edges = deg(v) + triangles(v) edges — the spokes
     plus one neighbor-neighbor edge per triangle through v — so the
-    whole profile rides the already-oriented wedge join
+    whole profile rides the already-oriented triangle enumeration
     (:func:`gminer_spark.graph.triangles.triangles_per_vertex`); no
     new quadratic quantity is introduced.  Density is exact-integer
     2·ego_edges·1e6 over n_ego·(n_ego−1) with ONE final double
@@ -423,7 +423,7 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     Onnela et al. edge-strength signal: embeddedness 0 marks bridges,
     the edges whose removal fragments communities).
 
-    support rides the same degree-oriented wedge join as k-truss
+    support rides the same degree-oriented triangle enumeration as k-truss
     (per-edge triangle count); the union size is assembled from exact
     integers (deg_u + deg_v − 2 − support) with ONE final micro
     division, 0 when the union is empty (a two-leaf bridge).
@@ -549,7 +549,7 @@ def forman_curvature(edges: DataFrame) -> DataFrame:
     neighborhood — inter-community bridges, the complement signal to
     :func:`edge_embeddedness`'s ratio); positive edges sit inside
     dense cliques.  Pure BIGINT arithmetic over the same degree +
-    wedge-join tables as embeddedness — no division, no rounding, the
+    triangle tables as embeddedness — no division, no rounding, the
     strongest oracle class.
     """
     from gminer_spark.graph.triangles import _wedge_closed

@@ -7,26 +7,27 @@ sorted adjacency lists (:84-111); the global count is a partial+final
 sum aggregator (:45-77).
 
 Spark-first re-expression: orient every undirected edge from the
-lower-ranked endpoint to the higher-ranked one, then
+lower-ranked endpoint to the higher-ranked one, group the oriented
+edges into out-lists N⁺(u) (a CSR, materialized once), and give each
+oriented edge u→v both out-lists.  Then
 
-    triangles = |{(u,v), (u,w), (v,w)} ⊆ E_oriented, rank v < rank w|
+    triangles = Σ_{u→v} |N⁺(u) ∩ N⁺(v)|
 
-i.e. a wedge self-join plus one semi-join — all shuffle-bounded,
-no iteration.  Orientation by id matches the reference exactly;
-orientation by (degree, id) is the skew-robust variant (hub fan-out
-bounded by arboricity — SURVEY.md §4 row 3): each vertex's out-degree
-in the oriented graph is O(sqrt(|E|)) for any graph.
+with the intersection a JVM ``array_intersect`` — no wedge rows, no
+iteration, and the one lookup (N⁺(v) by ``v``) is a broadcast on a
+single bigint key under the size gate.  Orientation by id matches the
+reference exactly; orientation by (degree, id) is the skew-robust
+variant (hub fan-out bounded by arboricity — SURVEY.md §4 row 3):
+each vertex's out-degree in the oriented graph is O(sqrt(|E|)) for
+any graph.
 
 Rank keys are packed into one bigint ``(deg << 32) | id`` so the
-orientation and wedge conditions stay single-column comparisons that
-Catalyst pushes into the joins.
+orientation condition stays a single-column comparison.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
@@ -56,10 +57,10 @@ def oriented_edges(edges: DataFrame, orient: str = "degree") -> DataFrame:
     Output columns ``(src, dst)`` with rank(src) < rank(dst) plus the
     packed rank keys ``(src_key, dst_key)``.
     """
-    sym = tables.symmetrize(edges)
     if orient == "id":
         return (
-            sym.where(F.col("src") < F.col("dst"))
+            tables.symmetrize(edges)
+            .where(F.col("src") < F.col("dst"))
             .select(
                 "src",
                 "dst",
@@ -67,34 +68,81 @@ def oriented_edges(edges: DataFrame, orient: str = "degree") -> DataFrame:
                 F.col("dst").alias("dst_key"),
             )
         )
-    # undirected degree = out-degree over the symmetric view (every
-    # vertex appears as src), so ONE aggregation suffices — the
-    # generic degrees() helper would add an in-degree groupBy plus a
-    # full outer join for values that are identical here (r6: two
-    # shuffles removed from every oriented_edges caller)
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("deg")
+    # One reference chain over the input, so its symmetric shuffle runs
+    # once: AQE reuses no exchange above a cached input, and the former
+    # symmetrize + degree self-join ran that shuffle three times.  The
+    # src-partitioned symmetric view serves the dedup and the degree
+    # window without a second exchange; one regroup per undirected pair
+    # {a < b} then brings both endpoint degrees onto one row.  Each
+    # side ships its degree signed (+ from a, − from b): three longs a
+    # row instead of two aggregation buffers.
+    n = tables.shuffle_partitions(edges.sparkSession)
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = (
+        edges.select("src", "dst")
+        .unionByName(rev)
+        .where(F.col("src") != F.col("dst"))
+        .repartition(n, "src")
+        .distinct()
     )
-    keyed = (
-        sym.join(deg.withColumnRenamed("id", "src"), on="src")
-        .withColumnRenamed("deg", "src_deg")
-        .join(
-            deg.withColumnRenamed("id", "dst").withColumnRenamed("deg", "dst_deg"),
-            on="dst",
-        )
-        .select(
-            "src",
-            "dst",
-            (F.shiftleft(F.col("src_deg"), 32) + F.col("src")).alias("src_key"),
-            (F.shiftleft(F.col("dst_deg"), 32) + F.col("dst")).alias("dst_key"),
+    deg = F.count("*").over(Window.partitionBy("src"))
+    ends = sym.select(
+        F.least("src", "dst").alias("a"),
+        F.greatest("src", "dst").alias("b"),
+        F.when(F.col("src") < F.col("dst"), deg).otherwise(-deg).alias("sdeg"),
+    )
+    pairs = (
+        ends.repartition(n, "a", "b")
+        .groupBy("a", "b")
+        .agg(
+            (F.shiftleft(F.max("sdeg"), 32) + F.col("a")).alias("a_key"),
+            (F.shiftleft(-F.min("sdeg"), 32) + F.col("b")).alias("b_key"),
         )
     )
-    return keyed.where(F.col("src_key") < F.col("dst_key"))
+    fwd = F.col("a_key") < F.col("b_key")
+    return pairs.where(F.col("a_key") != F.col("b_key")).select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
+        F.least("a_key", "b_key").alias("src_key"),
+        F.greatest("a_key", "b_key").alias("dst_key"),
+    )
+
+
+def _csr_pairs(
+    edges: DataFrame, orient: str, broadcast_limit: int = BROADCAST_ROW_LIMIT
+) -> tuple[DataFrame, DataFrame]:
+    """The oriented CSR and its edge pairs: ``(adj, pairs)``.
+
+    ``adj`` is ``(u, nu)``, the out-list N⁺(u) of every vertex with an
+    oriented out-edge, materialized once; ``pairs`` is ``(u, v, nu,
+    nv)``, one row per oriented edge u→v carrying both out-lists, so
+    N⁺(u) ∩ N⁺(v) are exactly the w closing u→v→w.  The degree
+    orientation keeps every list at O(√|E|).  The N⁺(v) lookup is
+    broadcast on the single bigint key ``v`` when |E⁺| (observed by
+    the materializing job, no count job) is under ``broadcast_limit``;
+    above it the join is a shuffle join.
+    """
+    e = oriented_edges(edges, orient=orient)
+    obs = Observation()
+    adj = (
+        e.groupBy(F.col("src").alias("u"))
+        .agg(F.collect_list("dst").alias("nu"))
+        .observe(obs, F.coalesce(F.sum(F.size("nu")), F.lit(0)).alias("n"))
+        .localCheckpoint()
+    )
+    nbrs = adj.select(F.col("u").alias("v"), F.col("nu").alias("nv"))
+    pairs = adj.select("u", F.explode("nu").alias("v"), "nu").join(
+        gated_broadcast(nbrs, obs.get["n"], broadcast_limit), on="v"
+    )
+    return adj, pairs.select("u", "v", "nu", "nv")
 
 
 def triangle_count(edges: DataFrame, orient: str = "degree") -> int:
-    """Global exact triangle count (wedge join formulation)."""
-    return int(_wedge_closed(edges, orient).agg(F.count("*")).first()[0])
+    """Global exact triangle count: Σ |N⁺(u) ∩ N⁺(v)| over oriented
+    edges u→v, with no per-triangle rows."""
+    _, pairs = _csr_pairs(edges, orient)
+    tris = F.sum(F.size(F.array_intersect("nu", "nv")))
+    return int(pairs.agg(F.coalesce(tris, F.lit(0))).first()[0])
 
 
 def triangles_per_vertex(edges: DataFrame, orient: str = "degree") -> DataFrame:
@@ -103,82 +151,26 @@ def triangles_per_vertex(edges: DataFrame, orient: str = "degree") -> DataFrame:
     Each closed wedge (u, v, w) contributes to all three corners —
     the per-task counts the reference folds into its aggregator.
     """
-    closed = _wedge_closed(edges, orient)
-    corners = (
-        closed.select(F.col("u").alias("id"))
-        .unionAll(closed.select(F.col("v").alias("id")))
-        .unionAll(closed.select(F.col("w").alias("id")))
+    corners = _wedge_closed(edges, orient).select(
+        F.explode(F.array("u", "v", "w")).alias("id")
     )
     return corners.groupBy("id").agg(F.count("*").alias("triangles"))
 
 
 def _wedge_closed(edges: DataFrame, orient: str) -> DataFrame:
-    """Closed wedges (u, v, w): u→v, u→w, v→w all oriented edges.
+    """Closed wedges (u, v, w): u→v, u→w, v→w all oriented edges, so
+    rank u < rank v < rank w and each triangle appears once."""
+    return _closed(_csr_pairs(edges, orient)[1])
 
-    The oriented table is materialized once (localCheckpoint) — it is
-    referenced three times in the wedge join and would otherwise be
-    recomputed (symmetrize + degree join) per reference, turning one
-    wide CPU-bound stage into a deep serial chain.
-    """
-    e = oriented_edges(edges, orient=orient).localCheckpoint()
-    e1 = e.select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("v"),
-        F.col("dst_key").alias("v_key"),
+
+def _closed(pairs: DataFrame) -> DataFrame:
+    """(u, v, w) rows of :func:`_csr_pairs` output: each oriented edge
+    u→v explodes the intersection N⁺(u) ∩ N⁺(v) of its two out-lists
+    (the reference's merge-intersection, apps/trianglecount.cpp:84-111),
+    so no wedge row is ever built."""
+    return pairs.select(
+        "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
     )
-    e2 = e.select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("w"),
-        F.col("dst_key").alias("w_key"),
-    )
-    wedges = e1.join(e2, on="u").where(F.col("v_key") < F.col("w_key"))
-    closer = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    # The wedge set is O(Σ outdeg²) ≫ |E| — never shuffle it.  When the
-    # oriented edge table fits an executor (common: orientation bounds
-    # it to |E| rows of two longs), broadcast the closing side so the
-    # wedge join is a map-side hash probe; beyond that fall back to a
-    # shuffle join, where wedges re-use the e1/e2 partitioning on u.
-    closer = gated_broadcast(closer, e.count())
-    return wedges.join(closer, on=["v", "w"]).select("u", "v", "w")
-
-
-def triangle_count_kernel(edges: DataFrame, orient: str = "degree") -> int:
-    """Kernel variant: vectorized sorted-adjacency intersection.
-
-    Mirrors the reference's merge-intersection compute
-    (apps/trianglecount.cpp:84-111): group the oriented graph into
-    per-vertex sorted adjacency arrays, join each oriented edge (u,v)
-    with adj(u) and adj(v), and intersect with ``np.intersect1d``
-    inside an Arrow-batched pandas UDF (both arrays pre-sorted — the
-    invariant the reference maintains at parse time, :176).
-    """
-    e = oriented_edges(edges, orient=orient).select("src", "dst")
-    adj = e.groupBy(F.col("src").alias("id")).agg(
-        F.sort_array(F.collect_list("dst")).alias("nbrs")
-    )
-
-    @F.pandas_udf("long")
-    def intersect_size(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a), dtype=np.int64)
-        for i in range(len(a)):
-            av, bv = a.iloc[i], b.iloc[i]
-            if av is None or bv is None:
-                out[i] = 0
-            else:
-                out[i] = np.intersect1d(
-                    np.asarray(av, dtype=np.int64),
-                    np.asarray(bv, dtype=np.int64),
-                    assume_unique=True,
-                ).size
-        return pd.Series(out)
-
-    joined = (
-        e.join(adj.withColumnRenamed("id", "src").withColumnRenamed("nbrs", "src_nbrs"), on="src", how="left")
-        .join(adj.withColumnRenamed("id", "dst").withColumnRenamed("nbrs", "dst_nbrs"), on="dst", how="left")
-        .select(intersect_size("src_nbrs", "dst_nbrs").alias("tris"))
-    )
-    res = joined.agg(F.coalesce(F.sum("tris"), F.lit(0))).first()[0]
-    return int(res)
 
 
 def triad_census(edges: DataFrame, coin_salt: str = "dir") -> DataFrame:
@@ -193,9 +185,9 @@ def triad_census(edges: DataFrame, coin_salt: str = "dir") -> DataFrame:
     web graph is overwhelmingly transitive — the cyclic fraction is a
     cheap anomaly signal for link-exchange rings.
 
-    Scale shape: rides the degree-oriented wedge join (the skew-robust
-    enumeration), then classifies each triangle with three JVM-side
-    hash bits — no extra join against a direction table, no shuffle
+    Scale shape: rides the degree-oriented CSR intersection (the
+    skew-robust enumeration), then classifies each triangle with three
+    JVM-side hash bits — no extra join against a direction table, no shuffle
     beyond the triangle count itself.
     """
     from gminer_spark.functions import h32

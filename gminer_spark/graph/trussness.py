@@ -15,11 +15,12 @@ Each round, for every triangle T ∋ e the other two edges contribute
 
 Monotone non-increasing per edge, fixpoint s(e) = trussness(e) - 2.
 The decisive scale property vs peeling: the TRIANGLE LIST NEVER
-CHANGES — it is enumerated ONCE with the degree-oriented wedge join
-(the TC plan, /root/reference/apps/trianglecount.cpp:84-159; hub
-fan-out arboricity-bounded), persisted, and every round is just three
-hash joins of the s-table onto the fixed triangle table + one
-windowed h-index — no per-k re-enumeration, no per-round wedge join.
+CHANGES — it is enumerated ONCE with the degree-oriented CSR
+intersection (the TC plan, /root/reference/apps/trianglecount.cpp:84-159;
+hub fan-out arboricity-bounded), persisted, and every round is just
+three hash joins of the s-table onto the fixed triangle table + one
+windowed h-index — no per-k re-enumeration, no per-round triangle
+enumeration.
 
 Per round: 3 equi-joins on canonical edge keys + 1 window partitioned
 by edge + 1 changed-count action (``superstep.fixpoint``: state

@@ -55,10 +55,24 @@ def test_pagerank_partitioning_invariant(spark, graph):
 
 
 def test_triangles_partitioning_invariant(spark, graph):
-    from gminer_spark.graph.triangles import triangle_count
+    from gminer_spark.graph.ktruss import k_truss
+    from gminer_spark.graph.triangles import (
+        triad_census,
+        triangle_count,
+        triangles_per_vertex,
+    )
 
-    counts = {triangle_count(e) for e in _variants(graph)}
-    assert len(counts) == 1
+    def run(e):
+        return (
+            triangle_count(e),
+            sorted(tuple(r) for r in triangles_per_vertex(e).collect()),
+            tuple(triad_census(e).first()),
+            sorted(tuple(r) for r in k_truss(e, k=3).collect()),
+        )
+
+    results = [run(e) for e in _variants(graph)]
+    assert results[0][0] > 0 and results[0][3]
+    assert results[0] == results[1] == results[2]
 
 
 def test_round5_micro_ops_partitioning_invariant(spark, graph):

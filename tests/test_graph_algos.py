@@ -167,11 +167,11 @@ def test_triangle_count_random_both_orientations(spark, orient):
 
 
 def test_triangle_kernel_variant(spark):
-    from gminer_spark.graph.triangles import triangle_count_kernel
+    from gminer_spark.graph.triangles import triangle_count
 
     pairs = random_graph(n=60, p=0.1, directed=False)
-    assert triangle_count_kernel(edges_df(spark, pairs)) == oracle.triangles(pairs)
-    assert triangle_count_kernel(edges_df(spark, K5)) == 10
+    assert triangle_count(edges_df(spark, pairs)) == oracle.triangles(pairs)
+    assert triangle_count(edges_df(spark, K5)) == 10
 
 
 def test_triangles_per_vertex(spark):

@@ -118,11 +118,11 @@ LOOP_JOB_BUDGETS = {
     "widest_paths": 44,
     "dag_layers": 97,
     "dag_layers_cycle": 54,
-    "cpm_communities": 159,
-    "trussness": 76,
-    "trussness_num_iter": 76,
-    "triangle_count": 14,
-    "triangles_per_vertex": 14,
+    "cpm_communities": 148,
+    "trussness": 65,
+    "trussness_num_iter": 65,
+    "triangle_count": 7,
+    "triangles_per_vertex": 7,
     "strongly_connected_components": 160,
     "minimum_spanning_forest": 95,
     "resolve_redirects": 21,

@@ -66,11 +66,10 @@ def test_pages_spine_reproduces_sample(spark):
 
 
 def test_sample_triangles(spark, sample_edges):
-    from gminer_spark.graph.triangles import triangle_count, triangle_count_kernel
+    from gminer_spark.graph.triangles import triangle_count
 
     want = oracle.triangles(PAIRS)
     assert triangle_count(sample_edges) == want
-    assert triangle_count_kernel(sample_edges) == want
 
 
 def test_sample_cc_single_component(spark, sample_edges):

@@ -144,7 +144,7 @@ def main() -> None:
     ap.add_argument(
         "--jobs",
         default="extract,pagerank,tc",
-        help="comma list; also available: tc_kernel, sssp (slower, "
+        help="comma list; also available: sssp (slower, "
         "measured manually in BENCH.md's dedicated sections)",
     )
     args = ap.parse_args()
@@ -157,7 +157,6 @@ def main() -> None:
         "extract": (ppath, 1),
         "pagerank": (epath, 5),
         "tc": (tcpath, 1),
-        "tc_kernel": (epath, 1),
         "sssp": (epath, 1),
         "coloring": (gen_sparse_edges(), 1),
         "matching": (gen_sparse_edges(), 1),

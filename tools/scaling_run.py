@@ -4,7 +4,7 @@ parallelism first (python workers, JIT, shuffle service), so the
 measurement is steady-state.
 
 Usage: python tools/scaling_run.py <job> <cores> <input_path> [iters]
-jobs: pagerank | extract | tc | tc_kernel | sssp | coreness | betweenness
+jobs: pagerank | extract | tc | sssp | coreness | betweenness
       | focusco | hits | node2vec
 """
 
@@ -98,21 +98,6 @@ def main() -> None:
         sec = min(secs)
         throughput = n_items / sec
         extra = {"reached": reached, "reps_sec": [round(s, 1) for s in secs]}
-    elif job == "tc_kernel":
-        from gminer_spark.graph.triangles import triangle_count_kernel
-
-        edges = spark.read.parquet(path).persist()
-        n_items = edges.count()
-        triangle_count_kernel(edges)  # warm-up (python workers + JIT)
-        secs = []
-        n_tri = 0
-        for _ in range(REPS):
-            t0 = time.time()
-            n_tri = triangle_count_kernel(edges)
-            secs.append(time.time() - t0)
-        sec = min(secs)
-        throughput = n_items / sec
-        extra = {"triangles": n_tri, "reps_sec": [round(s, 1) for s in secs]}
     elif job == "coreness":
         # fixed round count (num_iter) so both parallelism levels do
         # IDENTICAL work — a fair throughput ratio without waiting for
