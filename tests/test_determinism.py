@@ -54,6 +54,35 @@ def test_pagerank_partitioning_invariant(spark, graph):
         assert results[0][v] == pytest.approx(results[2][v], abs=1e-9)
 
 
+def test_pagerank_weighted_and_personalized_partitioning_invariant(spark, graph):
+    """``weight_col`` (out-strength normalization) and ``reset``
+    (teleport and dangling mass onto the seed set) under each
+    partitioning, to the same 1e-9 as plain PageRank."""
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph import tables
+    from gminer_spark.graph.pagerank import pagerank
+
+    def run(e):
+        we = e.select("src", "dst", (F.col("src") * 7 % 13 + 1).alias("w"))
+        seeds = tables.vertices(e).where(F.col("id") % 10 == 0)
+        return {
+            "weighted": pagerank(we, num_iter=8, weight_col="w").state,
+            "personalized": pagerank(e, num_iter=8, reset=seeds).state,
+        }
+
+    results = [
+        {k: {r["id"]: r["rank"] for r in df.collect()} for k, df in run(e).items()}
+        for e in _variants(graph)
+    ]
+    for k in results[0]:
+        assert sum(results[0][k].values()) == pytest.approx(1.0, abs=1e-9), k
+        for other in results[1:]:
+            assert other[k].keys() == results[0][k].keys(), k
+            for v, r in results[0][k].items():
+                assert other[k][v] == pytest.approx(r, abs=1e-9), (k, v)
+
+
 def test_triangles_partitioning_invariant(spark, graph):
     from gminer_spark.graph.ktruss import k_truss
     from gminer_spark.graph.triangles import (

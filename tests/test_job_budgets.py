@@ -91,10 +91,11 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
     df.unpersist()
 
 
-# Iterative loops, and the triangle enumeration k-truss and trussness
-# run: the jobs of the call plus one collect() of its result, so a
-# lazily returned result is counted too.  Each loop runs one action per
-# round; a second action per round shows here first.
+# Iterative loops, and the triangle enumeration k-truss, trussness,
+# edge embeddedness and Forman curvature run: the jobs of the call plus
+# one collect() of its result, so a lazily returned result is counted
+# too.  Each loop runs one action per round; a second action per round
+# shows here first.
 # Inputs (all cached before the count): an undirected random graph (n=120,
 # p=0.08, seed 21), the same graph with w = src*7 % 13 + 1, a random DAG
 # (n=120, p=0.05, seed 3, src < dst), CYCLE6, a directed random graph
@@ -123,6 +124,8 @@ LOOP_JOB_BUDGETS = {
     "trussness_num_iter": 65,
     "triangle_count": 7,
     "triangles_per_vertex": 7,
+    "edge_embeddedness": 17,
+    "forman_curvature": 17,
     "strongly_connected_components": 160,
     "minimum_spanning_forest": 95,
     "resolve_redirects": 21,
@@ -203,6 +206,7 @@ def _loop_calls(inp):
     from gminer_spark.graph.salsa import salsa
     from gminer_spark.graph.scc import strongly_connected_components
     from gminer_spark.graph.sssp import shortest_paths, widest_paths
+    from gminer_spark.graph.structure import edge_embeddedness, forman_curvature
     from gminer_spark.graph.temporal import earliest_arrival
     from gminer_spark.graph.triangles import triangle_count, triangles_per_vertex
     from gminer_spark.graph.trussness import trussness
@@ -246,6 +250,8 @@ def _loop_calls(inp):
         "trussness_num_iter": lambda: trussness(edges, num_iter=8),
         "triangle_count": lambda: triangle_count(edges),
         "triangles_per_vertex": lambda: triangles_per_vertex(edges),
+        "edge_embeddedness": lambda: edge_embeddedness(edges),
+        "forman_curvature": lambda: forman_curvature(edges),
         "strongly_connected_components": lambda: strongly_connected_components(
             inp["directed"]
         ),
