@@ -5,23 +5,31 @@ PageRank-style systems, /root/reference/README.md:5) — semantics are
 fixed by BASELINE.json: damping 0.85, dangling-mass redistribution,
 per-vertex allclose 1e-6 at convergence.
 
-Each superstep is one shuffle-bounded plan:
+Each superstep is one join and one message shuffle, the reference's
+BSP round (its partition/BPartitioner.tpp:104-161), where a vertex's
+own value reaches its next compute as a message:
 
-    contribs  = edges ⋈ state(on src) → groupBy(dst).sum(rank/out_deg)
-    new_rank  = (1-d)/N + d * (contribs + dangling/N)
+    msgs      = edges⁺ ⋈ state (on src)
+                  edge row (u, v):  rank_u · w / out_deg_u  → v
+                  self row (v, v):  0.0, out_deg_v [, reset_v] → v
+    state'    = msgs.groupBy(id): Σ contributions, the self row's columns
+    new_rank  = (1-d)/N + d * (Σ + dangling/N)
 
-where ``dangling`` = Σ rank over out_deg == 0 of the previous state is a
-driver-side scalar collected by the action that materialized that state
-(an ``Observation`` on the store write or ``localCheckpoint``; one more
-column of the delta aggregate in tol mode), so no round plan carries a
-dangling aggregate.  The plan is one message shuffle plus one state
-write; under AQE each shuffle stage is its own Spark job, so a round
-runs a few jobs, none of them bookkeeping.
+``edges⁺`` is the edge table plus one self row per vertex,
+hash-partitioned on ``src`` and persisted once; the round reads the
+state once, joins no degree table, and its last stage reads the
+message shuffle, so AQE sizes its partitions.  The degree table is one
+aggregation over the input, checkpointed once, whose observation
+yields |V| (|E| is the input's row count).  ``dangling`` = Σ rank over
+out_deg == 0 of the previous state is a driver-side scalar collected
+by the action that materialized that state (an ``Observation`` on the
+store write or ``localCheckpoint``; one more column of the delta
+aggregate in tol mode), so no round plan carries a dangling aggregate.
+Under AQE each shuffle stage is its own Spark job, so a round runs a
+few jobs, none of them bookkeeping.
 
 Spark's partial aggregation is the message combiner
-(/root/reference/util/vecs.tpp:79-107 analog); AQE skew-join plus the
-optional salted two-stage aggregation (gminer_spark.graph.salt)
-handle hub-vertex skew in the contribution shuffle.
+(/root/reference/util/vecs.tpp:79-107 analog).
 """
 
 from __future__ import annotations
@@ -58,8 +66,8 @@ def pagerank(
     teleport seeds — personalized PageRank: both the teleport term and
     the dangling-mass redistribution land uniformly on the seed set
     instead of all vertices, and the walk starts from the seeds.  The
-    plan shape is identical in every variant: one rank-shuffle join
-    per superstep, dangling mass as a literal carried from the
+    plan shape is identical in every variant: one join and one message
+    shuffle per superstep, dangling mass as a literal carried from the
     previous round's action.
 
     ``init_state`` is a ``(id, rank)`` DataFrame to WARM-START from
@@ -70,13 +78,11 @@ def pagerank(
     from ``init_state`` start at the cold-start value.
     """
     spark = edges.sparkSession
-    # Static tables, computed once and reused across all supersteps.
-    # At cluster scale these are hash-co-partitioned with the state on
-    # the join key (src) so each iteration's join shuffles only ranks.
     # The sizing count runs on a PERSISTED input so expensive upstream
-    # lineage (e.g. the co-purchase self-join) materializes exactly once.
-    edges_in, n_in, we_persisted = tables.ensure_materialized(edges)
-    n_shuffle = tables.sized_partitions(spark, n_in)
+    # lineage (e.g. the co-purchase self-join) materializes exactly once;
+    # its row count is |E|.
+    edges_in, edge_count, we_persisted = tables.ensure_materialized(edges)
+    n_shuffle = tables.sized_partitions(spark, edge_count)
     if weight_col is not None:
         edges = edges_in.select(
             "src", "dst", F.col(weight_col).cast("double").alias("w")
@@ -85,31 +91,41 @@ def pagerank(
     else:
         edges = edges_in.select("src", "dst")
         strength, no_strength = F.lit(1).cast("long"), F.lit(0).cast("long")
-    edges = edges.repartition(n_shuffle, "src").persist()
-    # Degree table in ONE aggregation: every vertex appears as a source
-    # (its strength, one edge) or a sink (0, no edge), so sink-only
-    # vertices get out_deg 0 without a distinct + join.
+    # Degree table in ONE aggregation, checkpointed once: every vertex
+    # appears as a source (its strength) or a sink (0), so sink-only
+    # vertices get out_deg 0 without a distinct + join.  The observation
+    # rides the checkpoint's job and yields |V|.
+    sized = Observation()
     out_deg = (
-        edges.select(
-            F.col("src").alias("id"), strength.alias("s"), F.lit(1).alias("e")
-        )
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("id"), no_strength.alias("s"), F.lit(0).alias("e")
-            )
-        )
+        edges.select(F.col("src").alias("id"), strength.alias("out_deg"))
+        .unionByName(edges.select(F.col("dst").alias("id"), no_strength.alias("out_deg")))
         .groupBy("id")
-        .agg(F.sum("s").alias("out_deg"), F.sum("e").alias("_edges"))
-        .repartition(n_shuffle, "id")
-        .persist()
+        .agg(F.sum("out_deg").alias("out_deg"))
+        .observe(sized, F.count("*").alias("n"))
+        .localCheckpoint()
     )
-    # one action: materializes both persists and yields |V| and |E|
-    n, edge_count = out_deg.agg(F.count("*"), F.sum("_edges")).first()
-    if we_persisted:
-        edges_in.unpersist()  # repartitioned copy is materialized now
+    n = sized.get["n"]
     if n == 0:
+        if we_persisted:
+            edges_in.unpersist()
         empty = spark.createDataFrame([], "id long, rank double")
         return SuperstepResult(empty, 0, 0, True, [])
+    # The static message table: every edge, plus one self row (v, v) per
+    # vertex that carries v's own columns to its next state, persisted
+    # once hash-partitioned on src (the round's join key).
+    msg_edges = (
+        edges.withColumn("_self", F.lit(False))
+        .unionByName(
+            out_deg.select(
+                F.col("id").alias("src"),
+                F.col("id").alias("dst"),
+                *([no_strength.alias("w")] if weight_col is not None else []),
+                F.lit(True).alias("_self"),
+            )
+        )
+        .repartition(n_shuffle, "src")
+        .persist()
+    )
 
     if reset is not None:
         # Seed set is tiny relative to |V| (that's the point of PPR) —
@@ -117,51 +133,51 @@ def pagerank(
         # materialize the (tiny) seed set once: its lineage may be an
         # expensive derive (vertices() over the edge table) that would
         # otherwise run again for the broadcast below
+        seeded = Observation()
         seeds = (
             reset.select(F.col("id").cast("long").alias("id"))
             .distinct()
+            .observe(seeded, F.count("*").alias("n"))
             .localCheckpoint()
         )
-        n_seeds = seeds.count()
+        n_seeds = seeded.get["n"]
         if n_seeds == 0:
             raise ValueError("personalized PageRank needs a non-empty seed set")
-        base_deg = out_deg
-        out_deg = (
-            out_deg.join(
-                F.broadcast(seeds.withColumn("_s", F.lit(True))), on="id", how="left"
-            )
-            .select(
-                "id",
-                "out_deg",
-                F.when(F.col("_s"), F.lit(1.0 / n_seeds))
-                .otherwise(F.lit(0.0))
-                .alias("reset"),
-            )
-            .persist()
+        vertices = out_deg.join(
+            F.broadcast(seeds.withColumn("_s", F.lit(True))), on="id", how="left"
+        ).select(
+            "id",
+            "out_deg",
+            F.when(F.col("_s"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("reset"),
         )
-        out_deg.count()
-        base_deg.unpersist()  # reset-annotated copy is materialized now
         cold = F.col("reset")
         carry = ["out_deg", "reset"]
     else:
+        vertices = out_deg
         cold = F.lit(1.0 / n)
         carry = ["out_deg"]
     if init_state is not None:
         init = (
-            out_deg.join(
+            vertices.join(
                 init_state.select("id", F.col("rank").alias("_warm")), on="id", how="left"
             )
             .select("id", F.coalesce("_warm", cold).alias("rank"), *carry)
         )
     else:
-        init = out_deg.select("id", cold.alias("rank"), *carry)
+        init = vertices.select("id", cold.alias("rank"), *carry)
 
     teleport = (1.0 - damping) / n
-    contrib_expr = (
+    share = (
         (F.col("rank") * F.col("w") / F.col("out_deg"))
         if weight_col is not None
         else (F.col("rank") / F.col("out_deg"))
     )
+    # a self row sends 0.0 (never dividing by a dangling vertex's
+    # out_deg = 0) and carries the state's static columns
+    messages = [F.when(F.col("_self"), F.lit(0.0)).otherwise(share).alias("contrib")]
+    messages += [F.when(F.col("_self"), F.col(c)).alias(c) for c in carry]
+    combine = [F.sum("contrib").alias("contrib")]
+    combine += [F.max(c).alias(c) for c in carry]
     dangling_sum = F.coalesce(
         F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
     ).alias("_dangling")
@@ -190,27 +206,25 @@ def pagerank(
             d = prev.get["_dangling"]
         else:
             d = prev
-        contribs = (
-            edges.join(state, edges.src == state.id)
-            .select(F.col("dst"), contrib_expr.alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
         if reset is not None:
             rank_expr = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
-                contrib + F.lit(d) * F.col("reset")
+                F.col("contrib") + F.lit(d) * F.col("reset")
             )
         else:
             rank_expr = F.lit(teleport) + F.lit(damping) * (
-                contrib + F.lit(d) / F.lit(float(n))
+                F.col("contrib") + F.lit(d) / F.lit(float(n))
             )
-        new_state = out_deg.join(contribs, out_deg.id == contribs.dst, "left").select(
-            "id", rank_expr.alias("rank"), *carry
+        # the superstep: one join on src, one message shuffle on dst
+        new_state = (
+            msg_edges.join(state, msg_edges.src == state.id)
+            .select(F.col("dst").alias("id"), *messages)
+            .groupBy("id")
+            .agg(*combine)
+            .select("id", rank_expr.alias("rank"), *carry)
         )
         metrics = {
             "edges_scanned": edge_count,
-            "messages_shuffled": edge_count,
+            "messages_shuffled": edge_count + n,
         }
         if num_iter is None:
             # ONE action per superstep: the lazy barrier is materialized
@@ -249,8 +263,9 @@ def pagerank(
         init, step, converged, max_iter=max_iter, store=store, resume=resume
     )
     result.state = result.state.select("id", "rank")
-    edges.unpersist()
-    out_deg.unpersist()
+    msg_edges.unpersist()
+    if we_persisted:
+        edges_in.unpersist()
     return result
 
 

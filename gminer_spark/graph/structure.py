@@ -416,33 +416,20 @@ SELECT d.id, d.deg,
 FROM deg d LEFT JOIN tcount t ON t.id = d.id"""
 
 
-def edge_embeddedness(edges: DataFrame) -> DataFrame:
-    """(src, dst, support, deg_src, deg_dst, embeddedness_micro) per
-    canonical (src < dst) undirected edge — neighborhood-overlap
-    Jaccard: |N(u)∩N(v)| / |N(u)∪N(v)\\{u,v}| (Granovetter weak-tie /
-    Onnela et al. edge-strength signal: embeddedness 0 marks bridges,
-    the edges whose removal fragments communities).
+def _edge_support(edges: DataFrame) -> DataFrame:
+    """(src, dst, support, deg_src, deg_dst) per canonical (src < dst)
+    undirected edge: its triangle count and both endpoint degrees.
 
-    support rides the same degree-oriented triangle enumeration as k-truss
-    (per-edge triangle count); the union size is assembled from exact
-    integers (deg_u + deg_v − 2 − support) with ONE final micro
-    division, 0 when the union is empty (a two-leaf bridge).
+    One reference chain over the input: the degree-oriented edges are
+    checkpointed once, so the input scan and the symmetric shuffle run
+    once.  Each oriented edge already carries both endpoint degrees in
+    its rank keys ``(deg << 32) | id``, and its CSR gives the closed
+    wedges — no degree table, no degree join.
     """
-    from gminer_spark.graph.triangles import _wedge_closed
+    from gminer_spark.graph.triangles import _closed, _oriented_csr, oriented_edges
 
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    sym = tables.symmetrize(edges)
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("deg")
-    )
-    closed = _wedge_closed(canon, orient="degree")
+    oriented = oriented_edges(edges, orient="degree").localCheckpoint()
+    closed = _closed(_oriented_csr(oriented)[1])
     pairs = (
         closed.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionAll(closed.select(F.col("u").alias("a"), F.col("w").alias("b")))
@@ -455,44 +442,56 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     support = pairs.groupBy("src", "dst").agg(
         F.count("*").cast("long").alias("support")
     )
+    fwd = F.col("src") < F.col("dst")
+    lo_key = F.when(fwd, F.col("src_key")).otherwise(F.col("dst_key"))
+    hi_key = F.when(fwd, F.col("dst_key")).otherwise(F.col("src_key"))
+    canon = oriented.select(
+        F.least("src", "dst").alias("src"),
+        F.greatest("src", "dst").alias("dst"),
+        F.shiftright(lo_key, 32).alias("deg_src"),
+        F.shiftright(hi_key, 32).alias("deg_dst"),
+    )
+    return canon.join(support, on=["src", "dst"], how="left").select(
+        "src",
+        "dst",
+        F.coalesce("support", F.lit(0)).cast("long").alias("support"),
+        "deg_src",
+        "deg_dst",
+    )
+
+
+def edge_embeddedness(edges: DataFrame) -> DataFrame:
+    """(src, dst, support, deg_src, deg_dst, embeddedness_micro) per
+    canonical (src < dst) undirected edge — neighborhood-overlap
+    Jaccard: |N(u)∩N(v)| / |N(u)∪N(v)\\{u,v}| (Granovetter weak-tie /
+    Onnela et al. edge-strength signal: embeddedness 0 marks bridges,
+    the edges whose removal fragments communities).
+
+    support rides the same degree-oriented triangle enumeration as k-truss
+    (per-edge triangle count); the union size is assembled from exact
+    integers (deg_u + deg_v − 2 − support) with ONE final micro
+    division, 0 when the union is empty (a two-leaf bridge).
+    """
     denom = (
         F.col("deg_src") + F.col("deg_dst") - 2 - F.col("support")
     )
-    return (
-        canon.join(support, on=["src", "dst"], how="left")
-        .join(
-            deg.select(F.col("id").alias("src"), F.col("deg").alias("deg_src")),
-            on="src",
+    return _edge_support(edges).select(
+        "src",
+        "dst",
+        "support",
+        "deg_src",
+        "deg_dst",
+        F.when(denom <= 0, F.lit(0))
+        .otherwise(
+            F.round(
+                F.col("support").cast("double")
+                / denom.cast("double")
+                * F.lit(1e6),
+                0,
+            ).cast("long")
         )
-        .join(
-            deg.select(F.col("id").alias("dst"), F.col("deg").alias("deg_dst")),
-            on="dst",
-        )
-        .select(
-            "src",
-            "dst",
-            F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-            "deg_src",
-            "deg_dst",
-        )
-        .select(
-            "src",
-            "dst",
-            "support",
-            "deg_src",
-            "deg_dst",
-            F.when(denom <= 0, F.lit(0))
-            .otherwise(
-                F.round(
-                    F.col("support").cast("double")
-                    / denom.cast("double")
-                    * F.lit(1e6),
-                    0,
-                ).cast("long")
-            )
-            .cast("long")
-            .alias("embeddedness_micro"),
-        )
+        .cast("long")
+        .alias("embeddedness_micro"),
     )
 
 
@@ -552,65 +551,20 @@ def forman_curvature(edges: DataFrame) -> DataFrame:
     triangle tables as embeddedness — no division, no rounding, the
     strongest oracle class.
     """
-    from gminer_spark.graph.triangles import _wedge_closed
-
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
+    return _edge_support(edges).select(
+        "src",
+        "dst",
+        "support",
+        "deg_src",
+        "deg_dst",
+        (
+            F.lit(4)
+            - F.col("deg_src")
+            - F.col("deg_dst")
+            + 3 * F.col("support")
         )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    sym = tables.symmetrize(edges)
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("deg")
-    )
-    closed = _wedge_closed(canon, orient="degree")
-    pairs = (
-        closed.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionAll(closed.select(F.col("u").alias("a"), F.col("w").alias("b")))
-        .unionAll(closed.select(F.col("v").alias("a"), F.col("w").alias("b")))
-        .select(
-            F.least("a", "b").alias("src"),
-            F.greatest("a", "b").alias("dst"),
-        )
-    )
-    support = pairs.groupBy("src", "dst").agg(
-        F.count("*").cast("long").alias("support")
-    )
-    return (
-        canon.join(support, on=["src", "dst"], how="left")
-        .join(
-            deg.select(F.col("id").alias("src"), F.col("deg").alias("deg_src")),
-            on="src",
-        )
-        .join(
-            deg.select(F.col("id").alias("dst"), F.col("deg").alias("deg_dst")),
-            on="dst",
-        )
-        .select(
-            "src",
-            "dst",
-            F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-            "deg_src",
-            "deg_dst",
-        )
-        .select(
-            "src",
-            "dst",
-            "support",
-            "deg_src",
-            "deg_dst",
-            (
-                F.lit(4)
-                - F.col("deg_src")
-                - F.col("deg_dst")
-                + 3 * F.col("support")
-            )
-            .cast("long")
-            .alias("curvature"),
-        )
+        .cast("long")
+        .alias("curvature"),
     )
 
 

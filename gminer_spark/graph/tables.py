@@ -217,8 +217,10 @@ def plan_barrier(df: DataFrame, eager: bool = True) -> DataFrame:
     origin-free leaf.  Cost: one Row<->InternalRow re-encode of the
     table per downstream action — negligible for O(|V|) state tables,
     which is the only place it should be used.  For single-reference
-    chains (PageRank, CC) plain ``localCheckpoint`` stays preferable
-    (origin chain grows linearly and the encoder hop is avoided).
+    chains (fixed-round PageRank, whose round reads its state once)
+    plain ``localCheckpoint`` stays preferable (origin chain grows
+    linearly and the encoder hop is avoided); the vote-to-halt loops
+    get the lazy form from ``superstep.fixpoint``.
 
     ``eager=False`` skips the materializing count: the FIRST downstream
     action checkpoints the blocks instead, letting a loop fuse the

@@ -122,7 +122,14 @@ def _csr_pairs(
     the materializing job, no count job) is under ``broadcast_limit``;
     above it the join is a shuffle join.
     """
-    e = oriented_edges(edges, orient=orient)
+    return _oriented_csr(oriented_edges(edges, orient=orient), broadcast_limit)
+
+
+def _oriented_csr(
+    e: DataFrame, broadcast_limit: int = BROADCAST_ROW_LIMIT
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`_csr_pairs` over edges ``e`` already oriented by
+    :func:`oriented_edges`."""
     obs = Observation()
     adj = (
         e.groupBy(F.col("src").alias("u"))
