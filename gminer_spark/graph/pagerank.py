@@ -198,7 +198,15 @@ def pagerank(
     if not resuming:
         init = observed(init, 0)
 
+    # The first round's action materializes msg_edges, the last reader
+    # of an input persisted here: the next round releases it.
+    rounds_built = 0
+
     def step(state: DataFrame, k: int):
+        nonlocal rounds_built
+        rounds_built += 1
+        if rounds_built == 2 and we_persisted:
+            edges_in.unpersist()
         prev = dangling.pop(k - 1, None)
         if prev is None:
             d = state.agg(dangling_sum).first()[0]

@@ -422,9 +422,9 @@ def _edge_support(edges: DataFrame) -> DataFrame:
 
     One reference chain over the input: the degree-oriented edges are
     checkpointed once, so the input scan and the symmetric shuffle run
-    once.  Each oriented edge already carries both endpoint degrees in
-    its rank keys ``(deg << 32) | id``, and its CSR gives the closed
-    wedges — no degree table, no degree join.
+    once.  Each oriented edge already carries both endpoint degrees,
+    and its CSR gives the closed wedges — no degree table, no degree
+    join.
     """
     from gminer_spark.graph.triangles import _closed, _oriented_csr, oriented_edges
 
@@ -443,13 +443,11 @@ def _edge_support(edges: DataFrame) -> DataFrame:
         F.count("*").cast("long").alias("support")
     )
     fwd = F.col("src") < F.col("dst")
-    lo_key = F.when(fwd, F.col("src_key")).otherwise(F.col("dst_key"))
-    hi_key = F.when(fwd, F.col("dst_key")).otherwise(F.col("src_key"))
     canon = oriented.select(
         F.least("src", "dst").alias("src"),
         F.greatest("src", "dst").alias("dst"),
-        F.shiftright(lo_key, 32).alias("deg_src"),
-        F.shiftright(hi_key, 32).alias("deg_dst"),
+        F.when(fwd, F.col("src_deg")).otherwise(F.col("dst_deg")).alias("deg_src"),
+        F.when(fwd, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("deg_dst"),
     )
     return canon.join(support, on=["src", "dst"], how="left").select(
         "src",

@@ -21,8 +21,10 @@ variant (hub fan-out bounded by arboricity — SURVEY.md §4 row 3):
 each vertex's out-degree in the oriented graph is O(sqrt(|E|)) for
 any graph.
 
-Rank keys are packed into one bigint ``(deg << 32) | id`` so the
-orientation condition stays a single-column comparison.
+The degree rank compares ``(deg, id)`` as a pair, never packed into
+one bigint: ids span the full signed 64-bit range (web ids are
+xxhash64 values), so a packed key would lose the degree and could
+collide.
 """
 
 from __future__ import annotations
@@ -54,20 +56,12 @@ def oriented_edges(edges: DataFrame, orient: str = "degree") -> DataFrame:
     ``orient="id"``: rank = vertex id (reference semantics,
     apps/trianglecount.cpp:144-148).  ``orient="degree"``: rank =
     (undirected degree, id) — the load-balance orientation.
-    Output columns ``(src, dst)`` with rank(src) < rank(dst) plus the
-    packed rank keys ``(src_key, dst_key)``.
+    Output columns ``(src, dst)`` with rank(src) < rank(dst); the
+    degree orientation adds both endpoint degrees ``(src_deg,
+    dst_deg)``.
     """
     if orient == "id":
-        return (
-            tables.symmetrize(edges)
-            .where(F.col("src") < F.col("dst"))
-            .select(
-                "src",
-                "dst",
-                F.col("src").alias("src_key"),
-                F.col("dst").alias("dst_key"),
-            )
-        )
+        return tables.symmetrize(edges).where(F.col("src") < F.col("dst"))
     # One reference chain over the input, so its symmetric shuffle runs
     # once: AQE reuses no exchange above a cached input, and the former
     # symmetrize + degree self-join ran that shuffle three times.  The
@@ -75,7 +69,8 @@ def oriented_edges(edges: DataFrame, orient: str = "degree") -> DataFrame:
     # window without a second exchange; one regroup per undirected pair
     # {a < b} then brings both endpoint degrees onto one row.  Each
     # side ships its degree signed (+ from a, − from b): three longs a
-    # row instead of two aggregation buffers.
+    # row instead of two aggregation buffers.  As a < b, (deg_a, a) <
+    # (deg_b, b) iff deg_a <= deg_b.
     n = tables.shuffle_partitions(edges.sparkSession)
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     sym = (
@@ -94,17 +89,14 @@ def oriented_edges(edges: DataFrame, orient: str = "degree") -> DataFrame:
     pairs = (
         ends.repartition(n, "a", "b")
         .groupBy("a", "b")
-        .agg(
-            (F.shiftleft(F.max("sdeg"), 32) + F.col("a")).alias("a_key"),
-            (F.shiftleft(-F.min("sdeg"), 32) + F.col("b")).alias("b_key"),
-        )
+        .agg(F.max("sdeg").alias("da"), (-F.min("sdeg")).alias("db"))
     )
-    fwd = F.col("a_key") < F.col("b_key")
-    return pairs.where(F.col("a_key") != F.col("b_key")).select(
+    fwd = F.col("da") <= F.col("db")
+    return pairs.select(
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.least("a_key", "b_key").alias("src_key"),
-        F.greatest("a_key", "b_key").alias("dst_key"),
+        F.when(fwd, F.col("da")).otherwise(F.col("db")).alias("src_deg"),
+        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dst_deg"),
     )
 
 

@@ -2526,6 +2526,63 @@ def test_forman_curvature_hand_values(spark):
     assert rows[(0, 10)] == 4 - 4 - 4 + 0
 
 
+def test_edge_support_full_range_ids(spark):
+    """The barbell of the two tests above relabeled with negative ids
+    and ids above 2^32, as xxhash64 web ids are.  A degree packed beside
+    the id into one bigint is misread on such ids, and vertices 0 and 1
+    (degrees 4 and 3, ids 2^32 apart) would get equal packed keys."""
+    from gminer_spark.graph.structure import edge_embeddedness, forman_curvature
+    from gminer_spark.graph.triangles import triangle_count, triangles_per_vertex
+
+    big = {
+        0: -(1 << 40),
+        1: -(1 << 40) + (1 << 32),
+        2: -7,
+        3: (1 << 62) + 5,
+        10: 1 << 33,
+        11: -1,
+        12: (1 << 63) - 1,
+        13: -(1 << 63),
+        20: 1 << 32,
+        21: 3 << 32,
+    }
+    k4a = [(i, j) for i in range(4) for j in range(4) if i < j]
+    k4b = [(i, j) for i in range(10, 14) for j in range(10, 14) if i < j]
+    pairs = [(big[a], big[b]) for a, b in k4a + k4b + [(0, 10), (20, 21)]]
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = {}
+    for a, b in pairs:
+        u, v = min(a, b), max(a, b)
+        t, du, dv = len(adj[u] & adj[v]), len(adj[u]), len(adj[v])
+        denom = du + dv - 2 - t
+        micro = 0 if denom <= 0 else int(t * 1e6 / denom + 0.5)
+        want[(u, v)] = (t, du, dv, micro, 4 - du - dv + 3 * t)
+
+    e = edges_df(spark, pairs)
+    curv = {(r["src"], r["dst"]): r["curvature"] for r in forman_curvature(e).collect()}
+    got = {
+        (r["src"], r["dst"]): (
+            r["support"],
+            r["deg_src"],
+            r["deg_dst"],
+            r["embeddedness_micro"],
+            curv[(r["src"], r["dst"])],
+        )
+        for r in edge_embeddedness(e).collect()
+    }
+    assert got == want
+    # N(0) = {1,2,3,10}, N(1) = {0,2,3}: support 2, union 3, 4-4-3+3*2
+    assert got[(big[0], big[1])] == (2, 4, 3, 666_667, 3)
+    assert got[(big[0], big[10])] == (0, 4, 4, 0, -4)
+    assert triangle_count(e) == 8
+    assert {r["id"]: r["triangles"] for r in triangles_per_vertex(e).collect()} == {
+        big[v]: 3 for v in (0, 1, 2, 3, 10, 11, 12, 13)
+    }
+
+
 def test_bond_percolation_monotone_and_exact(spark):
     """p=100 keeps everything (components = CC of the full graph);
     p=0 keeps nothing (every vertex isolated); kept-edge counts

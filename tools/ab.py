@@ -1,14 +1,15 @@
 """Interleaved A/B of two git revisions on the repository benchmark.
 
     python tools/ab.py BASE NEW [--workload W ...] [--pairs N] [--trace 0|1]
-                       [--seconds S] [--seed0 K] [--out runs.jsonl] [--workdir D]
+                       [--seed0 K] [--out runs.jsonl]
     python tools/ab.py --report runs.jsonl
 
 Each revision is exported (``git archive``) into a throwaway directory,
 so neither the working tree nor the repository's worktree list is
 touched; ``.`` stands for the working tree as it is, uncommitted files
 included.  Each pair runs ``perfbench/run.py`` once per side with the
-same seed, alternating which side goes first.  Every run's result JSON
+same seed and ``BENCHMARK.json``'s ``run_seconds``, alternating which
+side goes first.  Every run's result JSON
 and notes line are appended to ``--out``; ``--report`` prints the
 summary of a saved file again.
 
@@ -32,6 +33,7 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+RUN_TIMEOUT_S = 900
 
 
 def export(rev: str, dest: str) -> str:
@@ -57,12 +59,12 @@ def export(rev: str, dest: str) -> str:
 
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float,
-             trace: int, timeout: float) -> dict:
+             trace: int) -> dict:
     """One benchmark run; its result JSON plus the notes line."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
-                          timeout=timeout)
+                          timeout=RUN_TIMEOUT_S)
     lines = [line for line in proc.stdout.splitlines() if line.startswith("{")]
     if proc.returncode != 0 or len(lines) < 2:
         return {"error": proc.returncode, "stderr": proc.stderr[-2000:]}
@@ -124,13 +126,8 @@ def main(argv=None) -> int:
                     help="repeatable (default: every workload in BENCHMARK.json)")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="timed seconds per run (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--seed0", type=int, default=900, help="seed of pair 0; pair i uses seed0 + i")
-    ap.add_argument("--timeout", type=float, default=900.0, help="seconds per run")
     ap.add_argument("--out", default=None, help="append each run as a JSON line here")
-    ap.add_argument("--workdir", default=None,
-                    help="where the throwaway checkouts go (default: the system temp dir)")
     ap.add_argument("--report", default=None, help="summarize a saved --out file and exit")
     args = ap.parse_args(argv)
 
@@ -143,10 +140,9 @@ def main(argv=None) -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
-    seconds = args.seconds if args.seconds is not None else bench["run_seconds"]
 
     runs: list[dict] = []
-    tmp = tempfile.mkdtemp(prefix="ab-", dir=args.workdir)
+    tmp = tempfile.mkdtemp(prefix="ab-")
     try:
         checkouts = {
             "base": export(args.base, os.path.join(tmp, "base")),
@@ -156,8 +152,8 @@ def main(argv=None) -> int:
             order = ("base", "new") if i % 2 == 0 else ("new", "base")
             for w in workloads:
                 for side in order:
-                    res = run_once(checkouts[side], w, args.seed0 + i, seconds,
-                                   args.trace, args.timeout)
+                    res = run_once(checkouts[side], w, args.seed0 + i,
+                                   bench["run_seconds"], args.trace)
                     rec = {"pair": i, "side": side, "workload": w,
                            "rev": getattr(args, side), "result": res}
                     runs.append(rec)
