@@ -93,20 +93,28 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
     df.unpersist()
 
 
-# Iterative loops, and the triangle enumeration k-truss, trussness,
-# edge embeddedness and Forman curvature run: the jobs of the call plus
-# one collect() of its result, so a lazily returned result is counted
-# too.  Each loop runs one action per round; a second action per round
-# shows here first.
+# Iterative loops, the triangle enumeration k-truss, trussness, edge
+# embeddedness and Forman curvature run, link features and degree
+# assortativity: the jobs of the call plus one collect() of its result,
+# so a lazily returned result is counted too.  Each loop runs one action
+# per round; a second action per round shows here first.
 # Inputs (all cached before the count): an undirected random graph (n=120,
 # p=0.08, seed 21), the same graph with w = src*7 % 13 + 1, a random DAG
 # (n=120, p=0.05, seed 3, src < dst), CYCLE6, a directed random graph
-# (n=120, p=0.03, seed 21) and a table of redirect chains.  The
+# (n=120, p=0.03, seed 21), a table of redirect chains and the 400-pair
+# bipartite incidence of test_bitruss_peel_fixpoint_and_support_floor
+# (40 left x 25 right ids, seed 5).  The
 # target and source sets of hitting_time and earliest_arrival are the
 # directed graph's ids divisible by 7; its temporal edges carry
 # t = src*7 % 50.
 LOOP_JOB_BUDGETS = {
     "k_core": 27,
+    "k_truss": 59,
+    "bitruss": 187,
+    "greedy_coloring": 427,
+    "maximal_matching": 58,
+    "link_features": 21,
+    "degree_assortativity": 9,
     "k_core_capped": 18,
     "s_core": 27,
     "coreness": 97,
@@ -151,6 +159,7 @@ JOB_CEILINGS = {
     "hitting_time",
     "katz",
     "katz_dag_horizon_40",
+    "maximal_matching",
     "minimum_spanning_forest",
     "salsa",
 }
@@ -162,6 +171,17 @@ UNDIRECTED = random_graph(n=120, p=0.08, seed=21, directed=False)
 REDIRECTS = [(f"u{i}", f"u{i + 1}") for i in range(40) if i % 9 != 8] + [
     (f"u{i}", f"v{i}") for i in range(0, 40, 3)
 ]
+
+
+def bipartite_incidence(n_pairs=400, seed=5):
+    """Distinct (left, right) pairs over 40 left and 25 right ids."""
+    import random
+
+    rng = random.Random(seed)
+    rows = set()
+    while len(rows) < n_pairs:
+        rows.add((rng.randrange(40), rng.randrange(25)))
+    return sorted(rows)
 
 
 @pytest.fixture(scope="module")
@@ -182,6 +202,9 @@ def loop_inputs(spark):
         "redirects": spark.createDataFrame(
             REDIRECTS, "src_url string, dst_url string"
         ),
+        "incidence": spark.createDataFrame(
+            bipartite_incidence(), "left long, right long"
+        ),
     }
     for df in inputs.values():
         df.persist().count()
@@ -195,21 +218,30 @@ def _loop_calls(inp):
 
     from gminer_spark.graph import tables
     from gminer_spark.graph.betweenness import betweenness_sampled
+    from gminer_spark.graph.butterflies import bitruss
     from gminer_spark.graph.cc import connected_components
+    from gminer_spark.graph.coloring import greedy_coloring
     from gminer_spark.graph.cpm import cpm_communities
     from gminer_spark.graph.dag import dag_layers
     from gminer_spark.graph.hits import hits
     from gminer_spark.graph.hitting import hitting_time
     from gminer_spark.graph.katz import katz
     from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
+    from gminer_spark.graph.ktruss import k_truss
+    from gminer_spark.graph.linkpred import link_features
     from gminer_spark.graph.lpa import label_propagation
+    from gminer_spark.graph.matching import maximal_matching
     from gminer_spark.graph.mis import maximal_independent_set
     from gminer_spark.graph.msf import minimum_spanning_forest
     from gminer_spark.graph.pagerank import pagerank
     from gminer_spark.graph.salsa import salsa
     from gminer_spark.graph.scc import strongly_connected_components
     from gminer_spark.graph.sssp import shortest_paths, widest_paths
-    from gminer_spark.graph.structure import edge_embeddedness, forman_curvature
+    from gminer_spark.graph.structure import (
+        degree_assortativity,
+        edge_embeddedness,
+        forman_curvature,
+    )
     from gminer_spark.graph.temporal import earliest_arrival
     from gminer_spark.graph.triangles import triangle_count, triangles_per_vertex
     from gminer_spark.graph.trussness import trussness
@@ -235,6 +267,10 @@ def _loop_calls(inp):
         "coreness_hindex": lambda: coreness_hindex(edges),
         "coreness_hindex_num_iter": lambda: coreness_hindex(edges, num_iter=10),
         "maximal_independent_set": lambda: maximal_independent_set(edges),
+        "greedy_coloring": lambda: greedy_coloring(edges),
+        "maximal_matching": lambda: maximal_matching(edges),
+        "k_truss": lambda: k_truss(edges, k=4),
+        "bitruss": lambda: bitruss(inp["incidence"], k=30, max_right_deg=64),
         "connected_components": lambda: connected_components(edges).state,
         "shortest_paths": lambda: shortest_paths(edges, sources).state,
         "shortest_paths_weighted": lambda: shortest_paths(
@@ -255,6 +291,8 @@ def _loop_calls(inp):
         "triangles_per_vertex": lambda: triangles_per_vertex(edges),
         "edge_embeddedness": lambda: edge_embeddedness(edges),
         "forman_curvature": lambda: forman_curvature(edges),
+        "link_features": lambda: link_features(edges),
+        "degree_assortativity": lambda: degree_assortativity(directed),
         "strongly_connected_components": lambda: strongly_connected_components(
             inp["directed"]
         ),
