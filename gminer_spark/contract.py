@@ -1350,9 +1350,10 @@ def build_queries() -> dict[str, QueryFn]:
     def bitruss2(s, d):
         """(2,2)-bitruss of the order-part incidence: iterated
         support peel over the SAME capped butterfly wedge join — the
-        bipartite k-truss analog (r4 verdict stretch #10).  num_iter
+        bipartite k-truss analog (r4 verdict stretch #10).  max_iter
         pinned to the oracle's unroll depth (fixpoint at sf0.01
-        measured lower; idempotent past it)."""
+        measured lower; idempotent past it, so stopping there gives
+        the unrolled rows)."""
         from gminer_spark.graph.butterflies import bitruss
 
         li = gt.load_table(s, d, "lineitem")
@@ -1361,7 +1362,7 @@ def build_queries() -> dict[str, QueryFn]:
             F.col("l_partkey").cast("long").alias("right"),
         )
         return bitruss(
-            incid, k=2, max_right_deg=BFLY_MAXDEG, num_iter=BITRUSS_ITERS
+            incid, k=2, max_right_deg=BFLY_MAXDEG, max_iter=BITRUSS_ITERS
         )
 
     q["bitruss2"] = bitruss2

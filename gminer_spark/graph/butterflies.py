@@ -106,7 +106,6 @@ def bitruss(
     incid: DataFrame,
     k: int,
     max_right_deg: int = 1024,
-    num_iter: int | None = None,
     max_iter: int = 50,
 ) -> DataFrame:
     """(lid, rid, sup) — the k-bitruss of the (right-hub-capped)
@@ -115,19 +114,20 @@ def bitruss(
 
     The bipartite analog of k-truss peeling, riding the SAME capped
     wedge join as :func:`butterfly_counts` (r4 verdict stretch #10):
-    each round recomputes per-edge support on the survivors and drops
-    edges below k, to fixpoint.  Dropping an edge only ever lowers
-    other edges' support, so the peel is monotone and the fixpoint
-    unique — and idempotent past convergence, so a fixed ``num_iter``
-    ≥ the observed round count unrolls into an exact DuckDB oracle.
+    each :func:`superstep.peel` round recomputes per-edge support on
+    the survivors and drops edges below k, to fixpoint.  Dropping an
+    edge only ever lowers other edges' support, so the peel is monotone
+    and the fixpoint unique — and idempotent past convergence, so a run
+    capped at ``max_iter`` ≥ the observed round count equals the
+    ``max_iter``-times-unrolled DuckDB oracle.
 
     Scale posture: per round one wedge self-join (center-capped, the
     quantity that squares), one pair count, one sum — no per-k rework
     and no butterfly ENUMERATION (supports aggregate wedge counts;
     #butterflies never materializes).
     """
-    spark = incid.sparkSession
     from gminer_spark.graph import tables
+    from gminer_spark.graph.superstep import peel
 
     dd = incid.select(
         F.col("left").alias("member"), F.col("right").alias("center")
@@ -138,38 +138,27 @@ def bitruss(
             deg.where(F.col("cdeg") <= max_right_deg).select("center"),
             on="center",
             how="left_semi",
-        ).repartition(tables.shuffle_partitions(spark), "center")
+        ),
+        eager=False,
     )
-    rounds = max_iter if num_iter is None else num_iter
-    n_edges = cur.count()
-    global last_rounds
-    last_rounds = 0
-    for _ in range(rounds):
-        last_rounds += 1
-        sup = _edge_support(cur)
-        nxt = (
-            cur.join(sup, on=["member", "center"], how="left")
+
+    def step(cur: DataFrame, n: int) -> DataFrame:
+        return (
+            cur.join(_edge_support(cur), on=["member", "center"], how="left")
             .where(F.coalesce("sup", F.lit(0)) >= k)
             .select("member", "center")
         )
-        # multi-ref state (wedge self-join references cur twice) —
-        # plan_barrier per round, constant-depth plans
-        cur = tables.plan_barrier(
-            nxt.repartition(tables.shuffle_partitions(spark), "center")
-        )
-        n_next = cur.count()
-        if num_iter is None and n_next == n_edges:
-            break
-        n_edges = n_next
-    else:
-        if num_iter is None and rounds > 0:
-            import warnings
 
-            warnings.warn(
-                f"bitruss: peel hit max_iter={max_iter} before fixpoint — "
-                "result is a superset of the k-bitruss; raise max_iter",
-                stacklevel=2,
-            )
+    cur, _, rounds = peel(cur, cur.count(), step, max_iter)
+    if rounds == max_iter:
+        import warnings
+
+        warnings.warn(
+            f"bitruss: peel hit max_iter={max_iter} without confirming the "
+            "fixpoint — the result may be a superset of the k-bitruss; "
+            "raise max_iter",
+            stacklevel=2,
+        )
     return _edge_support(cur).join(cur, on=["member", "center"], how="right").select(
         F.col("member").alias("lid"),
         F.col("center").alias("rid"),

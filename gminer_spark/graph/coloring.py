@@ -11,11 +11,16 @@ Priorities are the repo's derandomized md5 idiom (shared with Luby MIS,
 coloring is a pure function of the graph and the oracle checks exact
 per-vertex colors.
 
-Spark shape per round (same scan posture as MIS): one min-combined
-join for the winner test, one join + collect_set for the used-color
-sets, `array_except`/`array_min` over `sequence(0, |used|)` for the
-smallest-free-color pick (a vertex with k used colors always finds a
-free color <= k) — all JVM-side, no UDF.
+Spark shape per round (a :func:`superstep.peel` round over the
+uncolored vertices, one action; same scan posture as MIS): one
+min-combined join for the winner test, `array_except`/`array_min` over
+`sequence(0, |used|)` for the smallest-free-color pick (a vertex with k
+used colors always finds a free color <= k), one join + collect_set
+that hands the new colors to the winners' uncolored neighbors — each
+uncolored vertex carries the set of colors its colored neighbors use,
+so no round joins the colors decided so far — all JVM-side, no UDF.
+Each round's new colors are a lazy leaf that the next uncolored set is
+derived from, so the round's count materializes them.
 
 Reference analog: the reference's B&B mining kernel greedy-colors each
 task's candidate subgraph to bound clique size
@@ -26,11 +31,14 @@ parallel version of that kernel step.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
 from gminer_spark.graph.mis import _priority
+from gminer_spark.graph.superstep import peel
 
 
 def greedy_coloring(
@@ -45,54 +53,53 @@ def greedy_coloring(
         .repartition(tables.shuffle_partitions(spark), "src")
         .persist()
     )
-    undecided = tables.vertices(sym).localCheckpoint()
-    colored = spark.createDataFrame([], "id long, color int")
-    for _ in range(max_iter):
-        if undecided.isEmpty():
-            break
-        pri = undecided.select("id", _priority("id", seed).alias("pri"))
+    no_colors = F.array().cast("array<int>")
+    undecided, n = tables.counted_checkpoint(
+        tables.vertices(sym).select("id", no_colors.alias("used"))
+    )
+    colored: list[DataFrame] = []
+
+    def step(undecided: DataFrame, n: int) -> DataFrame:
+        pri = undecided.select("id", "used", _priority("id", seed).alias("pri"))
         nbr_min = (
-            sym.join(pri.withColumnRenamed("id", "src"), on="src")
+            sym.join(pri.select(F.col("id").alias("src"), "pri"), on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("pri").alias("nbr_pri"))
         )
-        winners = (
+        new_colors = (
             pri.join(nbr_min, on="id", how="left")
             .where(F.col("nbr_pri").isNull() | (F.col("pri") < F.col("nbr_pri")))
-            .select("id")
-        )
-        used = (
-            sym.join(winners.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
-            .join(colored.withColumnRenamed("id", "src"), on="src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.collect_set("color").alias("used"))
-        )
-        new_colors = (
-            winners.join(used, on="id", how="left")
             .select(
                 "id",
                 F.array_min(
-                    F.array_except(
-                        F.sequence(
-                            F.lit(0),
-                            F.coalesce(F.size("used"), F.lit(0)),
-                        ),
-                        F.coalesce("used", F.array().cast("array<int>")),
-                    )
+                    F.array_except(F.sequence(F.lit(0), F.size("used")), "used")
                 )
                 .cast("int")
                 .alias("color"),
             )
+            .localCheckpoint(eager=False)
         )
-        # both state tables are referenced 2-3x by the next round's
-        # plan — route through plan_barrier, not localCheckpoint, or
-        # the Spark-4 origin-plan tree goes geometric (CLAUDE.md)
-        colored = tables.plan_barrier(colored.unionByName(new_colors))
-        undecided = tables.plan_barrier(
+        colored.append(new_colors)
+        # the winners' undecided neighbors add the new colors to `used`
+        told = (
+            sym.join(new_colors.withColumnRenamed("id", "src"), on="src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.collect_set("color").alias("told"))
+        )
+        return (
             undecided.join(new_colors.select("id"), on="id", how="left_anti")
+            .join(told, on="id", how="left")
+            .select(
+                "id",
+                F.array_union("used", F.coalesce("told", no_colors)).alias("used"),
+            )
         )
+
+    peel(undecided, n, step, max_iter)
     sym.unpersist()
-    return colored
+    if not colored:
+        return spark.createDataFrame([], "id long, color int")
+    return functools.reduce(DataFrame.unionByName, colored)
 
 
 def coloring_oracle_sql(edges_cte: str, iters: int, seed: str = "color") -> str:

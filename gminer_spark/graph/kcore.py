@@ -19,13 +19,11 @@ N-times-unrolled SQL oracle exactly.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import fixpoint
+from gminer_spark.graph.superstep import fixpoint, peel
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -38,53 +36,39 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     )
 
 
-def _peel(
-    sym: DataFrame,
-    core: DataFrame,
-    n: int,
-    k: int,
-    measure: Column,
-    max_iter: int | None,
-) -> tuple[DataFrame, int]:
-    """Peel ``core`` (``n`` rows) down to the vertices whose ``measure``
-    over their survivor-induced edges is >= ``k`` -> (core, n).
+def _peel_step(sym: DataFrame, k: int, measure: Column):
+    """The peel round for :func:`superstep.peel`: keep the survivors
+    whose ``measure`` over their survivor-induced edges is >= ``k``.
 
     ``measure`` aggregates the ``sym`` rows of one src (``F.count("*")``
-    for degree, ``F.sum("w")`` for strength); ``max_iter`` None peels to
-    the fixpoint.  The survivor set shrinks monotonically, so under the
-    broadcast gate BOTH membership joins are map-side hash probes of the
-    persisted edge table — a round shuffles only the (small) aggregated
-    measure table.  Above the gate: ordinary shuffle joins.  The
-    survivors feed TWO membership joins next round, so they cross an
-    origin-free :func:`tables.plan_barrier`; it is lazy, so the
-    convergence count is the round's ONE job.
+    for degree, ``F.sum("w")`` for strength).  The survivor set shrinks
+    monotonically, so under the broadcast gate BOTH membership joins are
+    map-side hash probes of the persisted edge table — a round shuffles
+    only the (small) aggregated measure table.  Above the gate: ordinary
+    shuffle joins.
     """
     from gminer_spark.graph.triangles import gated_broadcast
 
-    for _ in itertools.count() if max_iter is None else range(max_iter):
+    def step(core: DataFrame, n: int) -> DataFrame:
         c_src = gated_broadcast(core.withColumnRenamed("id", "src"), n)
         c_dst = gated_broadcast(core.withColumnRenamed("id", "dst"), n)
-        new_core = tables.plan_barrier(
+        return (
             sym.join(c_src, on="src")
             .join(c_dst, on="dst")
             .groupBy("src")
             .agg(measure.alias("m"))
             .where(F.col("m") >= k)
-            .select(F.col("src").alias("id")),
-            eager=False,
+            .select(F.col("src").alias("id"))
         )
-        core, n_prev = new_core, n
-        n = core.count()
-        if n in (n_prev, 0):
-            break
-    return core, n
+
+    return step
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """(id) — vertices of the k-core of the undirected graph."""
     sym = _symmetric(edges)
-    core = tables.vertices(sym).localCheckpoint()
-    core, _ = _peel(sym, core, core.count(), k, F.count("*"), max_iter)
+    core, n = tables.counted_checkpoint(tables.vertices(sym))
+    core, _, _ = peel(core, n, _peel_step(sym, k, F.count("*")), max_iter)
     sym.unpersist()
     return core
 
@@ -99,15 +83,13 @@ def coreness(edges: DataFrame, max_k: int | None = None) -> DataFrame:
     graphs; for huge k_max switch to h-index iteration.
     """
     sym = _symmetric(edges)
-    verts = tables.vertices(sym).localCheckpoint()
-    result = verts.select("id", F.lit(0).alias("coreness"))
-    core = verts
-    n_core = core.count()
+    core, n_core = tables.counted_checkpoint(tables.vertices(sym))
+    result = core.select("id", F.lit(0).alias("coreness"))
     k = 0
     while max_k is None or k < max_k:
         k += 1
         # peel the (k)-core out of the previous survivor set
-        core, n_core = _peel(sym, core, n_core, k, F.count("*"), None)
+        core, n_core, _ = peel(core, n_core, _peel_step(sym, k, F.count("*")))
         if n_core == 0:
             break
         result = (
@@ -147,8 +129,8 @@ def s_core(
         .repartition(tables.shuffle_partitions(spark), "src")
         .persist()
     )
-    core = tables.vertices(sym).localCheckpoint()
-    core, _ = _peel(sym, core, core.count(), k, F.sum("w"), max_iter)
+    core, n = tables.counted_checkpoint(tables.vertices(sym))
+    core, _, _ = peel(core, n, _peel_step(sym, k, F.sum("w")), max_iter)
     sym.unpersist()
     return core
 

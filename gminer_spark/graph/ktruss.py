@@ -9,12 +9,14 @@ from graph/triangles.py so hub fan-out stays arboricity-bounded) and
 the degree-threshold seed filtering the reference applies per task
 (:139-140), iterated to convergence (SURVEY.md §2.10 analog set).
 
-Scale shape per round: one oriented triangle enumeration (the TC
-plan), one explode of each triangle into its three canonical edges, one
-count-per-edge aggregate, one survivor filter — all shuffle-bounded,
-lineage truncated per round.  Peeling is idempotent past the
-fixpoint, so a run capped at N >= convergence rounds equals the
-N-times-unrolled SQL oracle exactly.
+Spark shape per round (a :func:`superstep.peel` round, two actions):
+one oriented triangle enumeration over the surviving edges (the TC
+plan; its CSR checkpoint is the first action), one explode of each
+triangle into its three canonical edges, one count-per-edge aggregate,
+one survivor filter, then the surviving-edge count that materializes
+the round.
+Peeling is idempotent past the fixpoint, so a run capped at N >=
+convergence rounds equals the N-times-unrolled SQL oracle exactly.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import peel
 from gminer_spark.graph.triangles import _wedge_closed
 
 
@@ -40,11 +44,8 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     """(src, dst) canonical (src < dst) edges of the k-truss."""
     if k < 3:
         raise ValueError("k-truss is defined for k >= 3")
-    cur = _canonical(edges).localCheckpoint()
-    n = cur.count()
-    for _ in range(max_iter):
-        if n == 0:
-            break
+
+    def step(cur: DataFrame, n: int) -> DataFrame:
         closed = _wedge_closed(cur, orient="degree")
         pairs = (
             closed.select(F.col("u").alias("a"), F.col("v").alias("b"))
@@ -55,18 +56,14 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             )
         )
         support = pairs.groupBy("src", "dst").agg(F.count("*").alias("sup"))
-        new_cur = (
+        return (
             cur.join(support, on=["src", "dst"], how="left")
             .where(F.coalesce(F.col("sup"), F.lit(0)) >= k - 2)
             .select("src", "dst")
-            .localCheckpoint()
         )
-        n_new = new_cur.count()
-        cur = new_cur
-        if n_new == n:
-            break
-        n = n_new
-    return cur
+
+    cur, n = tables.counted_checkpoint(_canonical(edges))
+    return peel(cur, n, step, max_iter)[0]
 
 
 def ktruss_oracle_sql(edges_cte: str, k: int, iters: int) -> str:

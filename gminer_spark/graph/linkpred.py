@@ -37,24 +37,14 @@ def link_features(edges: DataFrame) -> DataFrame:
     (u,v,w) then credits all three of its edges — cn += 1 and
     ra += 1/deg(third vertex) — one union + one aggregate.
     """
-    from gminer_spark.graph.triangles import _wedge_closed
+    from gminer_spark.graph.triangles import _closed, _oriented_csr, oriented_edges
 
-    spark = edges.sparkSession
-    n_shuffle = tables.shuffle_partitions(spark)
-    sym = tables.symmetrize(edges).repartition(n_shuffle, "src").persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("deg")
-    ).persist()
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    # one reference chain over the input: the degree-oriented edges are
+    # checkpointed once and carry both endpoint degrees, so the input
+    # scan and its symmetric shuffle run once
+    oriented = oriented_edges(edges, orient="degree").localCheckpoint()
     # materialize the triangle list once — it is projected three times
-    closed = _wedge_closed(e, "degree").localCheckpoint()
+    closed = _closed(_oriented_csr(oriented)[1]).localCheckpoint()
     tri_pairs = (
         closed.select(F.col("u").alias("a"), F.col("v").alias("b"), F.col("w").alias("other"))
         .unionAll(closed.select(F.col("u").alias("a"), F.col("w").alias("b"), F.col("v").alias("other")))
@@ -65,41 +55,41 @@ def link_features(edges: DataFrame) -> DataFrame:
             "other",
         )
     )
-    common = (
-        tri_pairs.join(
-            deg.withColumnRenamed("id", "other").withColumnRenamed("deg", "deg_o"),
-            on="other",
+    deg = (
+        oriented.select(F.col("src").alias("other"), F.col("src_deg").alias("deg_o"))
+        .unionByName(
+            oriented.select(F.col("dst").alias("other"), F.col("dst_deg").alias("deg_o"))
         )
+        .groupBy("other")
+        .agg(F.max("deg_o").alias("deg_o"))
+    )
+    common = (
+        tri_pairs.join(deg, on="other")
         .groupBy("src", "dst")
         .agg(
             F.count("*").cast("long").alias("cn"),
             F.sum(F.lit(1.0) / F.col("deg_o")).alias("ra"),
         )
     )
-    du = deg.select(F.col("id").alias("src"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("id").alias("dst"), F.col("deg").alias("deg_v"))
-    out = (
-        e.join(common, on=["src", "dst"], how="left")
-        .join(du, on="src")
-        .join(dv, on="dst")
-        .select(
-            "src",
-            "dst",
-            F.coalesce("cn", F.lit(0)).alias("cn"),
-            F.round(
-                F.coalesce("cn", F.lit(0))
-                / (F.col("deg_u") + F.col("deg_v") - F.coalesce("cn", F.lit(0)))
-                * 1e6,
-                0,
-            )
-            .cast("long")
-            .alias("jaccard_micro"),
-            F.round(F.coalesce("ra", F.lit(0.0)) * 1e6, 0)
-            .cast("long")
-            .alias("ra_micro"),
-        )
+    fwd = F.col("src") < F.col("dst")
+    e = oriented.select(
+        F.least("src", "dst").alias("src"),
+        F.greatest("src", "dst").alias("dst"),
+        F.when(fwd, F.col("src_deg")).otherwise(F.col("dst_deg")).alias("deg_u"),
+        F.when(fwd, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("deg_v"),
     )
-    return out
+    cn = F.coalesce("cn", F.lit(0))
+    return e.join(common, on=["src", "dst"], how="left").select(
+        "src",
+        "dst",
+        cn.alias("cn"),
+        F.round(cn / (F.col("deg_u") + F.col("deg_v") - cn) * 1e6, 0)
+        .cast("long")
+        .alias("jaccard_micro"),
+        F.round(F.coalesce("ra", F.lit(0.0)) * 1e6, 0)
+        .cast("long")
+        .alias("ra_micro"),
+    )
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

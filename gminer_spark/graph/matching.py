@@ -15,10 +15,13 @@ string comparison is identical across Spark and DuckDB (pure-ASCII),
 so the matching is a pure function of the graph and the unrolled SQL
 oracle checks exact membership.
 
-Spark shape per round: one semi-join pair to restrict to live edges,
-one union + min-combined groupBy for the per-vertex minimum, one join
-for the winner test — all shuffle-bounded, no UDF, same posture as
-the MIS round.
+Spark shape per round (a :func:`superstep.peel` round over the live
+edges, one action): one union + min-combined groupBy for the per-vertex
+minimum, one join pair for the winner test, one anti-join pair that
+drops the edges touching a matched vertex — all shuffle-bounded, no
+UDF, same posture as the MIS round.  Each round's matched edges are a
+lazy leaf that the next live set is derived from, so the round's
+live-edge count materializes them.
 
 Reference analog: matching is the edge-dual of the reference's
 hash-min exchange (/root/reference/partition/BPartitioner.tpp:91-165);
@@ -28,10 +31,13 @@ used at corpus scale to pair near-duplicate hosts/pages one-to-one
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import peel
 
 
 def _edge_pri(seed: str):
@@ -54,11 +60,12 @@ def maximal_matching(
         .where(F.col("src") < F.col("dst"))
         .repartition(tables.shuffle_partitions(spark), "src")
     )
-    live = canon.select("src", "dst", _edge_pri(seed).alias("pri")).localCheckpoint()
-    matched_parts: list[DataFrame] = []
-    for _ in range(max_iter):
-        if live.isEmpty():
-            break
+    live, n = tables.counted_checkpoint(
+        canon.select("src", "dst", _edge_pri(seed).alias("pri"))
+    )
+    matched: list[DataFrame] = []
+
+    def step(live: DataFrame, n: int) -> DataFrame:
         vmin = (
             live.select(F.col("src").alias("id"), "pri")
             .unionByName(live.select(F.col("dst").alias("id"), "pri"))
@@ -76,30 +83,21 @@ def maximal_matching(
             )
             .where((F.col("pri") == F.col("smin")) & (F.col("pri") == F.col("dmin")))
             .select("src", "dst")
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-        matched_parts.append(winners)
-        matched_v = (
-            winners.select(F.col("src").alias("id"))
-            .unionByName(winners.select(F.col("dst").alias("id")))
-            .distinct()
+        matched.append(winners)
+        matched_v = winners.select(F.col("src").alias("id")).unionByName(
+            winners.select(F.col("dst").alias("id"))
         )
-        # drop every edge touching a matched vertex; live is referenced
-        # twice below (src + dst anti-joins) -> plan_barrier, not
-        # localCheckpoint (Spark-4 origin-tree pitfall, CLAUDE.md)
-        live = tables.plan_barrier(
-            live.join(
-                matched_v.withColumnRenamed("id", "src"), on="src", how="left_anti"
-            ).join(
-                matched_v.withColumnRenamed("id", "dst"), on="dst", how="left_anti"
-            )
-        )
-    if not matched_parts:
+        # drop every edge touching a matched vertex
+        return live.join(
+            matched_v.withColumnRenamed("id", "src"), on="src", how="left_anti"
+        ).join(matched_v.withColumnRenamed("id", "dst"), on="dst", how="left_anti")
+
+    peel(live, n, step, max_iter)
+    if not matched:
         return spark.createDataFrame([], "src long, dst long")
-    out = matched_parts[0]
-    for p in matched_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, matched)
 
 
 def matching_oracle_sql(edges_cte: str, iters: int, seed: str = "match") -> str:

@@ -8,21 +8,31 @@ with the engine's md5 idiom: priority = (h32(seed:id) >> 1) * 2^31 + id
 bits, < 2^62 so BIGINT-safe in both engines), so the MIS is UNIQUE
 and an unrolled SQL oracle checks exact membership.
 
-Spark shape per round: one join of the undecided edge view with the
-priority table (min-combiner pre-shuffle, the reference's message
-fold, /root/reference/partition/BDGPartitioner.tpp:259-263), one
-anti-join to drop decided vertices.  The undecided set shrinks
-geometrically; survivors' edges are re-filtered by membership —
-frontier-tracking like the CC vote-to-halt.
+Spark shape per round (a :func:`superstep.peel` round over the
+undecided vertices, one action): one join of the undecided edge view
+with the priority table (min-combiner pre-shuffle, the reference's
+message fold, /root/reference/partition/BDGPartitioner.tpp:259-263),
+one anti-join to drop decided vertices.  Under the row gate the
+undecided side of each edge join is broadcast (as in the k-core peel),
+so the edge table is probed map-side.  The round's winners, and the
+restricted edge view when a round rebuilds it, are lazy leaves that
+the next undecided set is derived from, so the round's count
+materializes them.  The undecided set shrinks geometrically;
+survivors' edges are re-filtered by membership — frontier-tracking
+like the CC vote-to-halt.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.functions import h32
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import peel
+from gminer_spark.graph.triangles import gated_broadcast
 
 # Once |undecided| < _FRONTIER_FRAC · |V|, the scanned edge table is
 # re-materialized restricted to undecided×undecided endpoints (and
@@ -59,30 +69,18 @@ def maximal_independent_set(
         .repartition(tables.shuffle_partitions(spark), "src")
         .persist()
     )
-    undecided = tables.vertices(sym).localCheckpoint()
-    n_und = n_total = undecided.count()
+    undecided, n_total = tables.counted_checkpoint(tables.vertices(sym))
     cur_edges = sym  # shrinks to the undecided-restricted view at the tail
     last_restrict_n = None  # |undecided| at the last restriction
-    mis_parts: list[DataFrame] = []
-    # Round shape: map-side scan of the (possibly restricted) edge
-    # table against the shrinking undecided priorities, min-combined
-    # pre-shuffle.  The shuffle volume is O(undecided edges) either
-    # way (same per-round scan posture as PageRank).  ONE action per
-    # round (was three): winners, the restricted edge view and the
-    # next undecided set are all LAZY localCheckpoints (LogicalRDD
-    # leaves, each computed once), and the undecided count() at the
-    # round's end materializes the lot while doubling as the
-    # termination signal — the same fused-barrier idiom as the
-    # coreness/focusco loops.
-    for _ in range(max_iter):
-        if n_und == 0:
-            break
-        want_restrict = (
-            last_restrict_n is None and n_und < _FRONTIER_FRAC * n_total
-        ) or (last_restrict_n is not None and n_und * 4 < last_restrict_n)
-        if want_restrict:
-            u_src = undecided.withColumnRenamed("id", "src")
-            u_dst = undecided.withColumnRenamed("id", "dst")
+    mis: list[DataFrame] = []
+
+    def step(undecided: DataFrame, n_und: int) -> DataFrame:
+        nonlocal cur_edges, last_restrict_n
+        if (last_restrict_n is None and n_und < _FRONTIER_FRAC * n_total) or (
+            last_restrict_n is not None and n_und * 4 < last_restrict_n
+        ):
+            u_src = gated_broadcast(undecided.withColumnRenamed("id", "src"), n_und)
+            u_dst = gated_broadcast(undecided.withColumnRenamed("id", "dst"), n_und)
             cur_edges = (
                 cur_edges.join(u_src, on="src", how="left_semi")
                 .join(u_dst, on="dst", how="left_semi")
@@ -91,7 +89,9 @@ def maximal_independent_set(
             last_restrict_n = n_und
         pri = undecided.select("id", _priority("id", seed).alias("pri"))
         nbr_min = (
-            cur_edges.join(pri.withColumnRenamed("id", "src"), on="src")
+            cur_edges.join(
+                gated_broadcast(pri.withColumnRenamed("id", "src"), n_und), on="src"
+            )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("pri").alias("nbr_pri"))
         )
@@ -101,7 +101,7 @@ def maximal_independent_set(
             .select("id")
             .localCheckpoint(eager=False)
         )
-        mis_parts.append(winners)
+        mis.append(winners)
         # drop winners and their neighbors from the undecided set
         # (already-decided neighbors anti-join to nothing — harmless)
         removed = winners.unionByName(
@@ -109,17 +109,13 @@ def maximal_independent_set(
                 F.col("dst").alias("id")
             )
         ).distinct()
-        undecided = undecided.join(removed, on="id", how="left_anti").localCheckpoint(
-            eager=False
-        )
-        n_und = undecided.count()
+        return undecided.join(removed, on="id", how="left_anti")
+
+    peel(undecided, n_total, step, max_iter)
     sym.unpersist()
-    if not mis_parts:
+    if not mis:
         return spark.createDataFrame([], "id long")
-    mis = mis_parts[0]
-    for part in mis_parts[1:]:
-        mis = mis.unionByName(part)
-    return mis
+    return functools.reduce(DataFrame.unionByName, mis)
 
 
 def mis_oracle_sql(edges_cte: str, iters: int, seed: str = "mis") -> str:

@@ -13,10 +13,11 @@ FW-BW-Trim family: Orzan 2004, Slota et al. "Multistep" 2014; the
 reference's hash-min BSP loop ``partition/BPartitioner.tpp:91-165`` is
 the undirected ancestor of the coloring step).  Each outer round:
 
-1. **Trim** (capped fixpoint): vertices with no in-edge or no out-edge
-   inside the undecided subgraph are singleton SCCs — decide them
-   immediately.  This kills the long tendril/DAG tail that would
-   otherwise cost one coloring round per chain link.
+1. **Trim** (a capped :func:`superstep.peel`): vertices with no
+   in-edge or no out-edge inside the undecided subgraph are singleton
+   SCCs — decide them immediately, as the difference of the undecided
+   sets before and after the trim.  This kills the long tendril/DAG
+   tail that would otherwise cost one coloring round per chain link.
 2. **Forward hash-min coloring**: propagate ``lbl(v) = min(v, min
    lbl(u) over in-neighbors u)`` to fixpoint over the undecided
    subgraph — lbl(v) = the smallest undecided vertex that reaches v.
@@ -43,13 +44,14 @@ pathologies with a warning rather than a silent wrong answer.
 
 from __future__ import annotations
 
+import functools
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import fixpoint
+from gminer_spark.graph.superstep import fixpoint, peel
 
 
 def strongly_connected_components(
@@ -70,9 +72,21 @@ def strongly_connected_components(
     )
     # vertex set from the UNFILTERED input: a vertex that appears only
     # via a self-loop is still a (singleton) SCC
-    und = tables.plan_barrier(tables.vertices(edges))  # (id,) undecided
+    und = tables.plan_barrier(tables.vertices(edges), eager=False)  # (id,)
     n_und = und.count()
     done_parts: list[DataFrame] = []
+
+    def trim(und: DataFrame, n: int) -> DataFrame:
+        """Keep the vertices with an in- and an out-edge inside the
+        undecided subgraph.  The subgraph is rebuilt from the flat
+        persisted base and the state leaf, so the plan stays
+        constant-depth: one derived from the previous round's subgraph
+        nested ~3x per round, and Spark's per-action explain string
+        expanded that into a ~3^rounds tree (driver OOM in
+        generateTreeString by round ~14 on a DAG-shaped input)."""
+        sub = _subgraph(e, und)
+        has_in = sub.select(F.col("dst").alias("id")).distinct()
+        return has_in.join(sub.select(F.col("src").alias("id")).distinct(), on="id")
 
     rounds = 0
     while n_und > 0:
@@ -87,65 +101,18 @@ def strongly_connected_components(
             break
         rounds += 1
 
-        # undecided subgraph (both endpoints undecided)
-        sub = (
-            e.join(und.withColumnRenamed("id", "src"), on="src", how="leftsemi")
-            .join(und.withColumnRenamed("id", "dst"), on="dst", how="leftsemi")
-            .select("src", "dst")
-            .persist()
-        )
-
         # --- 1. trim: no-in / no-out vertices are singleton SCCs ----
-        for _ in range(trim_rounds):
-            has_in = sub.select(F.col("dst").alias("id")).distinct()
-            has_out = sub.select(F.col("src").alias("id")).distinct()
-            trimmed = tables.plan_barrier(
-                und.join(has_in, on="id", how="left_anti").unionByName(
-                    und.join(has_in, on="id", how="leftsemi").join(
-                        has_out, on="id", how="left_anti"
-                    )
-                ),
-                eager=False,
+        before = und
+        und, n_und, _ = peel(und, n_und, trim, trim_rounds)
+        done_parts.append(
+            before.join(und, on="id", how="left_anti").select(
+                "id", F.col("id").alias("scc_id")
             )
-            n_trim = trimmed.count()
-            if n_trim == 0:
-                break
-            done_parts.append(trimmed.select("id", F.col("id").alias("scc_id")))
-            und = tables.plan_barrier(
-                und.join(trimmed, on="id", how="left_anti"), eager=False
-            )
-            n_und -= n_trim
-            # Rebuild the undecided subgraph from the FLAT persisted
-            # base (e + the barrier-leaf und), NOT incrementally from
-            # old_sub: an old_sub-derived chain nests each round's
-            # InMemoryRelation ~3x inside the next trim plan (has_in +
-            # has_in + has_out), and Spark's per-action explain string
-            # expands that DAG into a ~3^rounds tree — observed
-            # driver OOM purely in generateTreeString by trim round
-            # ~14 on a DAG-shaped input (all-singleton SCCs).  The
-            # flat rebuild keeps every trim plan constant-depth; the
-            # two semi-joins against the persisted edge base cost the
-            # same shuffle as the anti-join pair they replace.
-            old_sub = sub
-            sub = (
-                e.join(
-                    und.withColumnRenamed("id", "src"),
-                    on="src",
-                    how="leftsemi",
-                )
-                .join(
-                    und.withColumnRenamed("id", "dst"),
-                    on="dst",
-                    how="leftsemi",
-                )
-                .select("src", "dst")
-                .persist()
-            )
-            sub.count()
-            old_sub.unpersist()
-        if n_und <= 0:
-            sub.unpersist()
+        )
+        if n_und == 0:
             break
+        # undecided subgraph (both endpoints undecided)
+        sub = _subgraph(e, und).persist()
 
         # --- 2. forward hash-min coloring to fixpoint ---------------
         # converges within n_und rounds (the longest path plus the
@@ -191,10 +158,16 @@ def strongly_connected_components(
         return und.select(
             F.col("id"), F.col("id").alias("scc_id")
         ).limit(0)
-    out = done_parts[0]
-    for part in done_parts[1:]:
-        out = out.unionByName(part)
-    return out.select("id", "scc_id")
+    return functools.reduce(DataFrame.unionByName, done_parts).select("id", "scc_id")
+
+
+def _subgraph(e: DataFrame, und: DataFrame) -> DataFrame:
+    """The edges of ``e`` whose endpoints are both in ``und``."""
+    return (
+        e.join(und.withColumnRenamed("id", "src"), on="src", how="leftsemi")
+        .join(und.withColumnRenamed("id", "dst"), on="dst", how="leftsemi")
+        .select("src", "dst")
+    )
 
 
 def _color_step(sub: DataFrame, lbl: DataFrame) -> DataFrame:

@@ -83,21 +83,26 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     out-degree with the target's in-degree (the standard directed
     out-in assortativity; the web is famously disassortative).
 
-    Plan: degree tables are two map-side-combinable groupBys; each
-    edge picks up (x=out_deg(src), y=in_deg(dst)) via two joins (both
-    degree tables are broadcastable at host grain); the five moment
-    sums reduce in one pass.  Sums are exact BIGINTs, the Pearson
-    combination runs in DECIMAL(38,0), only the final division is
-    double.
+    Plan: one reference chain over the input, so its map stage runs
+    once (AQE reuses no exchange above a cached input): the edges are
+    deduplicated inside a src partitioning that also serves the
+    out-degree window, one dst regroup serves the in-degree window, and
+    the five moment sums reduce in one pass.  Sums are exact BIGINTs,
+    the Pearson combination runs in DECIMAL(38,0), only the final
+    division is double.
     """
+    from pyspark.sql import Window
+
+    n = tables.shuffle_partitions(edges.sparkSession)
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
+        .repartition(n, "src")
         .distinct()
+        .withColumn("x", F.count("*").over(Window.partitionBy("src")))
+        .repartition(n, "dst")
     )
-    outd = e.groupBy("src").agg(F.count("*").alias("x"))
-    ind = e.groupBy("dst").agg(F.count("*").alias("y"))
-    xy = e.join(outd, on="src").join(ind, on="dst")
+    xy = e.withColumn("y", F.count("*").over(Window.partitionBy("dst")))
     s = xy.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),

@@ -35,6 +35,16 @@ zero" — and enforces the rules that make that round one Spark action
   not checkpoint the leaf again, and the init is checkpointed once.
 
 Callers keep their own cap warning and gate it on ``not converged``.
+
+:func:`peel` is the round of the other common loop — "remove rows until
+none go" (k-core, k-truss, bitruss, matching, colouring, MIS, the SCC
+trim).  The state is a set that each round shrinks, so its row count is
+the whole convergence signal: a round is the lazy barrier plus one
+``count()``, and the loop stops when that count reaches 0 or stays
+where it was.  Rows a round decides (MIS winners, new colours, matched
+edges) stay lazy leaves in the caller: the next state is derived from
+them, so the round's count materializes them, and the caller unions
+them once at the end.
 """
 
 from __future__ import annotations
@@ -171,6 +181,35 @@ def fixpoint(
         store=store,
         resume=resume,
     )
+
+
+def peel(
+    init: DataFrame,
+    n: int,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_iter: int | None = None,
+) -> tuple[DataFrame, int, int]:
+    """Shrink ``init`` (``n`` rows) with ``step`` -> ``(state, n, rounds)``.
+
+    ``step(state, n)`` returns the next state LAZILY as a subset of
+    ``state`` (``n`` is its row count, e.g. for a broadcast gate).  Each
+    round is one Spark action: the ``count()`` that also materializes
+    the round's lazy :func:`tables.plan_barrier`, so the step may read
+    its state any number of times.  The loop stops when the count is 0
+    or equals the previous round's — a subset with as many rows is the
+    same set, and a monotone peel is idempotent from there — or after
+    ``max_iter`` rounds (None: no cap).  A state that starts empty runs
+    no round.  Callers keep their own cap warning: ``rounds ==
+    max_iter`` means the fixpoint was not confirmed.
+    """
+    state, rounds = init, 0
+    while n and (max_iter is None or rounds < max_iter):
+        state = tables.plan_barrier(step(state, n), eager=False)
+        n_prev, n = n, state.count()
+        rounds += 1
+        if n == n_prev:
+            break
+    return state, n, rounds
 
 
 def _mark_final(store: CheckpointStore, superstep: int) -> None:

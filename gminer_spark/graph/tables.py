@@ -21,7 +21,7 @@ Two sources:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -162,6 +162,14 @@ def ensure_materialized(df: DataFrame) -> tuple[DataFrame, int, bool]:
         if n_rows is not None:
             return df, n_rows, False
     return df, df.count(), we_persisted
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint()`` and its row count, both from the one job
+    that writes the checkpoint (an ``Observation``): no count job."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return df, obs.get["n"]
 
 
 def _loaded_cache_rows(df: DataFrame) -> int | None:

@@ -206,13 +206,16 @@ def test_round5_session2_ops_partitioning_invariant(spark, graph):
 
 
 def test_peel_family_partitioning_invariant(spark, graph):
-    """k-core / s-core / coreness (peel and h-index) / MIS / the focusco
-    pull loop under different physical partitionings — membership and
-    integer values, so equality is EXACT."""
+    """k-core / s-core / coreness (peel and h-index) / MIS / colouring /
+    matching / the focusco pull loop under different physical
+    partitionings — membership and integer values, so equality is
+    EXACT."""
     from pyspark.sql import functions as F
 
+    from gminer_spark.graph.coloring import greedy_coloring
     from gminer_spark.graph.focusco import FocusCOParams, focused_clusters
     from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
+    from gminer_spark.graph.matching import maximal_matching
     from gminer_spark.graph.mis import maximal_independent_set
 
     def run(e):
@@ -234,6 +237,10 @@ def test_peel_family_partitioning_invariant(spark, graph):
             for r in coreness_hindex(e, num_iter=2).collect()
         }
         out["mis"] = {r["id"] for r in maximal_independent_set(e).collect()}
+        out["coloring"] = {
+            r["id"]: r["color"] for r in greedy_coloring(e).collect()
+        }
+        out["matching"] = {tuple(r) for r in maximal_matching(e).collect()}
         wf = we.select("src", "dst", F.col("w").cast("double").alias("weight"))
         p = FocusCOParams(min_weight=2.0, min_core_size=3, min_result_size=2)
         out["focusco_pull"] = {

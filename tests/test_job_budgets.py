@@ -108,19 +108,19 @@ def test_loaded_cache_sized_without_a_job(spark, cached_edges):
 # directed graph's ids divisible by 7; its temporal edges carry
 # t = src*7 % 50.
 LOOP_JOB_BUDGETS = {
-    "k_core": 27,
-    "k_truss": 59,
-    "bitruss": 187,
-    "greedy_coloring": 427,
-    "maximal_matching": 58,
-    "link_features": 21,
-    "degree_assortativity": 9,
-    "k_core_capped": 18,
-    "s_core": 27,
-    "coreness": 97,
+    "k_core": 25,
+    "k_truss": 52,
+    "bitruss": 145,
+    "greedy_coloring": 235,
+    "maximal_matching": 55,
+    "link_features": 13,
+    "degree_assortativity": 4,
+    "k_core_capped": 16,
+    "s_core": 25,
+    "coreness": 95,
     "coreness_hindex": 60,
     "coreness_hindex_num_iter": 47,
-    "maximal_independent_set": 49,
+    "maximal_independent_set": 48,
     "connected_components": 32,
     "shortest_paths": 30,
     "shortest_paths_weighted": 45,
@@ -136,7 +136,7 @@ LOOP_JOB_BUDGETS = {
     "triangles_per_vertex": 7,
     "edge_embeddedness": 10,
     "forman_curvature": 10,
-    "strongly_connected_components": 160,
+    "strongly_connected_components": 150,
     "minimum_spanning_forest": 96,
     "resolve_redirects": 21,
     "hits": 327,

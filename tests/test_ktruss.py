@@ -148,8 +148,8 @@ def test_bitruss_peel_fixpoint_and_support_floor(spark):
     assert out
     assert all(r.sup >= 8 for r in out)
 
-    # idempotent: fixed num_iter far past fixpoint gives the same set
-    again = bitruss(incid, k=8, max_right_deg=64, num_iter=12).collect()
+    # idempotent: a cap far past the fixpoint gives the same set
+    again = bitruss(incid, k=8, max_right_deg=64, max_iter=12).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
     # partitioning-invariant

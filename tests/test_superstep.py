@@ -1,8 +1,19 @@
-"""The ``superstep.fixpoint`` round: origin-free state, one action per round."""
+"""The ``superstep.fixpoint`` and ``superstep.peel`` rounds: origin-free
+state, one action per round."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+
+def _plan_shape(df):
+    """(lines of the analyzed plan, its estimated bytes).  The tree
+    string hides the origin a Spark-4 ``localCheckpoint`` leaf keeps,
+    but not the stats it copies from it: a step that reads such a state
+    twice doubles the estimate every round."""
+    qe = df._jdf.queryExecution()
+    lines = len(qe.analyzed().treeString().splitlines())
+    return lines, qe.optimizedPlan().stats().sizeInBytes()
 
 
 def _count_down(spark, rounds_seen):
@@ -22,8 +33,7 @@ def _count_down(spark, rounds_seen):
                 (F.col("v") > 0).alias("moved"),
             )
         )
-        analyzed = out._jdf.queryExecution().analyzed()
-        rounds_seen.append(len(analyzed.treeString().splitlines()))
+        rounds_seen.append(_plan_shape(out))
         return out
 
     init = spark.range(0, 40, numPartitions=4).select(
@@ -50,7 +60,8 @@ def test_fixpoint_state_plan_constant_and_one_action_per_round(spark):
     assert sorted(tuple(r) for r in res.state.select("id", "v").collect()) == [
         (i, 0) for i in range(40)
     ]
-    # the analyzed round plan stays the same size: the state is a leaf
+    # the analyzed round plan stays the same size: the state is an
+    # origin-free leaf
     assert len(nodes) == 6 and nodes[1] == nodes[-1], nodes
     # one init checkpoint job, then per round only the changed-count,
     # which also materializes the round's barrier
@@ -68,3 +79,45 @@ def test_fixpoint_reports_the_cap(spark):
     res = fixpoint(init, step, F.col("moved"), max_iter=3)
     assert not res.converged and res.supersteps_run == 3
     assert res.history[-1]["changed"] == 19
+
+
+def _drop_top(rounds_seen):
+    """Each round drops the largest id of the state (ids 0..n-1).  The
+    round plan reads its state twice (even ids, odd ids)."""
+
+    def step(state, n):
+        even = state.where(F.col("id") % 2 == 0)
+        odd = state.where(F.col("id") % 2 == 1)
+        out = even.unionByName(odd).coalesce(4).where(F.col("id") < n - 1)
+        rounds_seen.append(_plan_shape(out))
+        return out
+
+    return step
+
+
+def test_peel_state_plan_constant_and_one_action_per_round(spark):
+    """Twelve rounds of a multi-ref step: the state stays an origin-free
+    leaf, so round 12's analyzed plan is as large as round 2's."""
+    from gminer_spark.graph.superstep import peel
+    from tests.test_job_budgets import _jobs
+
+    nodes: list[int] = []
+    step = _drop_top(nodes)
+    init = spark.range(0, 12, numPartitions=4).select("id").localCheckpoint()
+    with _jobs(spark, "peel-count-jobs") as count_ids:
+        init.where(F.col("id") < 11).count()
+    with _jobs(spark, "peel-call") as ids:
+        state, n, rounds = peel(init, 12, step)
+    assert (n, rounds, state.count()) == (0, 12, 0)
+    assert len(nodes) == 12 and nodes[1] == nodes[-1], nodes
+    # per round only the count, which also materializes the barrier
+    assert len(ids) == 12 * len(count_ids), (len(ids), len(count_ids))
+
+
+def test_peel_stops_on_a_round_that_removes_nothing(spark):
+    from gminer_spark.graph.superstep import peel
+
+    init = spark.range(0, 12, numPartitions=4).select("id").localCheckpoint()
+    assert peel(init, 12, lambda s, n: s, max_iter=5)[1:] == (12, 1)
+    assert peel(init, 12, _drop_top([]), max_iter=5)[1:] == (7, 5)
+    assert peel(init.limit(0), 0, _drop_top([]))[1:] == (0, 0)
