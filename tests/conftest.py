@@ -56,3 +56,14 @@ def random_graph(n=200, p=0.03, seed=42, directed=True):
         if i != j and a[i, j] and (directed or i < j)
     ]
     return pairs
+
+
+def bipartite_incidence(n_pairs=400, seed=5):
+    """Distinct (left, right) pairs over 40 left and 25 right ids."""
+    import random
+
+    rng = random.Random(seed)
+    rows = set()
+    while len(rows) < n_pairs:
+        rows.add((rng.randrange(40), rng.randrange(25)))
+    return sorted(rows)

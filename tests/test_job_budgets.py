@@ -12,7 +12,7 @@ from contextlib import contextmanager
 
 import pytest
 
-from tests.conftest import edges_df, random_graph
+from tests.conftest import bipartite_incidence, edges_df, random_graph
 
 # pagerank(num_iter=2, store=...) on a cached input: the degree-table
 # checkpoint, then per committed superstep (init + 2) the state write's
@@ -148,7 +148,7 @@ LOOP_JOB_BUDGETS = {
     "earliest_arrival_num_iter_30": 45,
     "wl_colors": 25,
     "pagerank_tol": 144,
-    "betweenness_sampled": 74,
+    "betweenness_sampled": 75,
     "random_walks": 18,
     "random_walks_node2vec": 28,
 }
@@ -171,17 +171,6 @@ UNDIRECTED = random_graph(n=120, p=0.08, seed=21, directed=False)
 REDIRECTS = [(f"u{i}", f"u{i + 1}") for i in range(40) if i % 9 != 8] + [
     (f"u{i}", f"v{i}") for i in range(0, 40, 3)
 ]
-
-
-def bipartite_incidence(n_pairs=400, seed=5):
-    """Distinct (left, right) pairs over 40 left and 25 right ids."""
-    import random
-
-    rng = random.Random(seed)
-    rows = set()
-    while len(rows) < n_pairs:
-        rows.add((rng.randrange(40), rng.randrange(25)))
-    return sorted(rows)
 
 
 @pytest.fixture(scope="module")

@@ -132,17 +132,12 @@ def test_bitruss_peel_fixpoint_and_support_floor(spark):
     """(k,2)-bitruss: every surviving edge has >= k butterflies within
     the surviving subgraph, peel is monotone, deterministic under
     partitioning, and idempotent past the fixpoint."""
-    import random
-
     from pyspark.sql import functions as F
 
     from gminer_spark.graph.butterflies import bitruss
+    from tests.conftest import bipartite_incidence
 
-    random.seed(5)
-    rows = set()
-    while len(rows) < 400:
-        rows.add((random.randrange(40), random.randrange(25)))
-    incid = spark.createDataFrame(sorted(rows), "left long, right long")
+    incid = spark.createDataFrame(bipartite_incidence(), "left long, right long")
 
     out = bitruss(incid, k=8, max_right_deg=64).collect()
     assert out
