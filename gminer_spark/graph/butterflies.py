@@ -149,14 +149,13 @@ def bitruss(
             .select("member", "center")
         )
 
-    cur, _, rounds = peel(cur, cur.count(), step, max_iter)
-    if rounds == max_iter:
+    cur, _, converged = peel(cur, cur.count(), step, max_iter)
+    if not converged:
         import warnings
 
         warnings.warn(
-            f"bitruss: peel hit max_iter={max_iter} without confirming the "
-            "fixpoint — the result may be a superset of the k-bitruss; "
-            "raise max_iter",
+            f"bitruss: peel hit max_iter={max_iter} before fixpoint — "
+            "result is a superset of the k-bitruss; raise max_iter",
             stacklevel=2,
         )
     return _edge_support(cur).join(cur, on=["member", "center"], how="right").select(

@@ -15,12 +15,13 @@ Spark shape per round (a :func:`superstep.peel` round over the
 uncolored vertices, one action; same scan posture as MIS): one
 min-combined join for the winner test, `array_except`/`array_min` over
 `sequence(0, |used|)` for the smallest-free-color pick (a vertex with k
-used colors always finds a free color <= k), one join + collect_set
-that hands the new colors to the winners' uncolored neighbors — each
-uncolored vertex carries the set of colors its colored neighbors use,
-so no round joins the colors decided so far — all JVM-side, no UDF.
-Each round's new colors are a lazy leaf that the next uncolored set is
-derived from, so the round's count materializes them.
+used colors always finds a free color <= k), one join + groupBy that
+hands the new colors to the winners' uncolored neighbors and marks the
+winners colored — each uncolored vertex carries the set of colors its
+colored neighbors use, so no round joins the colors decided so far —
+all JVM-side, no UDF.  Each round's new colors are a lazy leaf, read
+once, that the next uncolored set is derived from, so the round's
+count materializes them.
 
 Reference analog: the reference's B&B mining kernel greedy-colors each
 task's candidate subgraph to bound clique size
@@ -80,15 +81,29 @@ def greedy_coloring(
             .localCheckpoint(eager=False)
         )
         colored.append(new_colors)
-        # the winners' undecided neighbors add the new colors to `used`
-        told = (
+        # one read of the new colors: each winner tells its neighbors
+        # its color and marks itself decided (a null message)
+        msgs = (
             sym.join(new_colors.withColumnRenamed("id", "src"), on="src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.collect_set("color").alias("told"))
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("dst").alias("id"), F.col("color").alias("c")),
+                        F.struct(
+                            F.col("src").alias("id"), F.lit(None).cast("int").alias("c")
+                        ),
+                    )
+                ).alias("m")
+            )
+            .groupBy("m.id")
+            .agg(
+                F.collect_set("m.c").alias("told"),
+                F.max(F.col("m.c").isNull()).alias("won"),
+            )
         )
         return (
-            undecided.join(new_colors.select("id"), on="id", how="left_anti")
-            .join(told, on="id", how="left")
+            undecided.join(msgs, on="id", how="left")
+            .where(~F.coalesce("won", F.lit(False)))
             .select(
                 "id",
                 F.array_union("used", F.coalesce("told", no_colors)).alias("used"),

@@ -17,10 +17,11 @@ oracle checks exact membership.
 
 Spark shape per round (a :func:`superstep.peel` round over the live
 edges, one action): one union + min-combined groupBy for the per-vertex
-minimum, one join pair for the winner test, one anti-join pair that
-drops the edges touching a matched vertex — all shuffle-bounded, no
-UDF, same posture as the MIS round.  Each round's matched edges are a
-lazy leaf that the next live set is derived from, so the round's
+minimum, one join pair for the winner test, one semi-join of the
+edges' endpoints with the matched vertices and one anti-join that
+drops the edges touching them — all shuffle-bounded, no UDF, same
+posture as the MIS round.  Each round's matched edges are a lazy leaf,
+read once, that the next live set is derived from, so the round's
 live-edge count materializes them.
 
 Reference analog: matching is the edge-dual of the reference's
@@ -86,13 +87,13 @@ def maximal_matching(
             .localCheckpoint(eager=False)
         )
         matched.append(winners)
-        matched_v = winners.select(F.col("src").alias("id")).unionByName(
-            winners.select(F.col("dst").alias("id"))
-        )
-        # drop every edge touching a matched vertex
-        return live.join(
-            matched_v.withColumnRenamed("id", "src"), on="src", how="left_anti"
-        ).join(matched_v.withColumnRenamed("id", "dst"), on="dst", how="left_anti")
+        # drop every edge touching a matched vertex; the winners are
+        # read once, as the vertex list their endpoints make
+        matched_v = winners.select(F.explode(F.array("src", "dst")).alias("v"))
+        touched = live.select(
+            "src", "dst", F.explode(F.array("src", "dst")).alias("v")
+        ).join(matched_v, on="v", how="left_semi")
+        return live.join(touched, on=["src", "dst"], how="left_anti")
 
     peel(live, n, step, max_iter)
     if not matched:

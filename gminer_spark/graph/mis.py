@@ -12,12 +12,12 @@ Spark shape per round (a :func:`superstep.peel` round over the
 undecided vertices, one action): one join of the undecided edge view
 with the priority table (min-combiner pre-shuffle, the reference's
 message fold, /root/reference/partition/BDGPartitioner.tpp:259-263),
-one anti-join to drop decided vertices.  Under the row gate the
-undecided side of each edge join is broadcast (as in the k-core peel),
-so the edge table is probed map-side.  The round's winners, and the
-restricted edge view when a round rebuilds it, are lazy leaves that
-the next undecided set is derived from, so the round's count
-materializes them.  The undecided set shrinks geometrically;
+one anti-join to drop the winners and their neighbors.  Under the row
+gate the undecided side of each edge join is broadcast (as in the
+k-core peel), so the edge table is probed map-side.  The round's
+winners (read once), and the restricted edge view when a round
+rebuilds it, are lazy leaves that the next undecided set is derived
+from, so the round's count materializes them.  The undecided set shrinks geometrically;
 survivors' edges are re-filtered by membership — frontier-tracking
 like the CC vote-to-halt.
 """
@@ -35,8 +35,8 @@ from gminer_spark.graph.superstep import peel
 from gminer_spark.graph.triangles import gated_broadcast
 
 # Once |undecided| < _FRONTIER_FRAC · |V|, the scanned edge table is
-# re-materialized restricted to undecided×undecided endpoints (and
-# again on every further 4× shrink).
+# re-materialized restricted to undecided sources (and again on every
+# further 4× shrink).
 _FRONTIER_FRAC = 0.25
 
 
@@ -55,11 +55,12 @@ def maximal_independent_set(
 ) -> DataFrame:
     """(id) — the unique MIS selected by md5-derived priorities.
 
-    Tail rounds scan an edge table restricted to undecided endpoints
+    Tail rounds scan an edge table restricted to undecided sources
     (see ``_FRONTIER_FRAC``).  The restriction is a correctness no-op
     — the priority joins already enforce both endpoints undecided (src
     via the pri join, dst via the left join; decided winner-neighbors
-    anti-join to nothing) — but it caps the tail rounds, which
+    anti-join to nothing) and keeps every edge of an undecided vertex
+    — but it caps the tail rounds, which
     otherwise map-scan the FULL persisted edge table for near-empty
     work on a 100× graph.
     """
@@ -80,11 +81,8 @@ def maximal_independent_set(
             last_restrict_n is not None and n_und * 4 < last_restrict_n
         ):
             u_src = gated_broadcast(undecided.withColumnRenamed("id", "src"), n_und)
-            u_dst = gated_broadcast(undecided.withColumnRenamed("id", "dst"), n_und)
-            cur_edges = (
-                cur_edges.join(u_src, on="src", how="left_semi")
-                .join(u_dst, on="dst", how="left_semi")
-                .localCheckpoint(eager=False)
+            cur_edges = cur_edges.join(u_src, on="src", how="left_semi").localCheckpoint(
+                eager=False
             )
             last_restrict_n = n_und
         pri = undecided.select("id", _priority("id", seed).alias("pri"))
@@ -103,12 +101,11 @@ def maximal_independent_set(
         )
         mis.append(winners)
         # drop winners and their neighbors from the undecided set
-        # (already-decided neighbors anti-join to nothing — harmless)
-        removed = winners.unionByName(
-            cur_edges.join(winners.withColumnRenamed("id", "src"), on="src").select(
-                F.col("dst").alias("id")
-            )
-        ).distinct()
+        # (already-decided neighbors anti-join to nothing — harmless).
+        # The winners are read once: each is the src of its own edges.
+        removed = cur_edges.join(
+            winners.withColumnRenamed("id", "src"), on="src"
+        ).select(F.explode(F.array("src", "dst")).alias("id"))
         return undecided.join(removed, on="id", how="left_anti")
 
     peel(undecided, n_total, step, max_iter)

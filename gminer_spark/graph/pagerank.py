@@ -93,18 +93,14 @@ def pagerank(
         strength, no_strength = F.lit(1).cast("long"), F.lit(0).cast("long")
     # Degree table in ONE aggregation, checkpointed once: every vertex
     # appears as a source (its strength) or a sink (0), so sink-only
-    # vertices get out_deg 0 without a distinct + join.  The observation
-    # rides the checkpoint's job and yields |V|.
-    sized = Observation()
-    out_deg = (
+    # vertices get out_deg 0 without a distinct + join.  The checkpoint's
+    # job also yields |V|.
+    out_deg, n = tables.counted_checkpoint(
         edges.select(F.col("src").alias("id"), strength.alias("out_deg"))
         .unionByName(edges.select(F.col("dst").alias("id"), no_strength.alias("out_deg")))
         .groupBy("id")
         .agg(F.sum("out_deg").alias("out_deg"))
-        .observe(sized, F.count("*").alias("n"))
-        .localCheckpoint()
     )
-    n = sized.get["n"]
     if n == 0:
         if we_persisted:
             edges_in.unpersist()
@@ -133,14 +129,9 @@ def pagerank(
         # materialize the (tiny) seed set once: its lineage may be an
         # expensive derive (vertices() over the edge table) that would
         # otherwise run again for the broadcast below
-        seeded = Observation()
-        seeds = (
-            reset.select(F.col("id").cast("long").alias("id"))
-            .distinct()
-            .observe(seeded, F.count("*").alias("n"))
-            .localCheckpoint()
+        seeds, n_seeds = tables.counted_checkpoint(
+            reset.select(F.col("id").cast("long").alias("id")).distinct()
         )
-        n_seeds = seeded.get["n"]
         if n_seeds == 0:
             raise ValueError("personalized PageRank needs a non-empty seed set")
         vertices = out_deg.join(

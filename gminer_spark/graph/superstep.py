@@ -188,8 +188,8 @@ def peel(
     n: int,
     step: Callable[[DataFrame, int], DataFrame],
     max_iter: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Shrink ``init`` (``n`` rows) with ``step`` -> ``(state, n, rounds)``.
+) -> tuple[DataFrame, int, bool]:
+    """Shrink ``init`` (``n`` rows) with ``step`` -> ``(state, n, converged)``.
 
     ``step(state, n)`` returns the next state LAZILY as a subset of
     ``state`` (``n`` is its row count, e.g. for a broadcast gate).  Each
@@ -199,17 +199,18 @@ def peel(
     or equals the previous round's — a subset with as many rows is the
     same set, and a monotone peel is idempotent from there — or after
     ``max_iter`` rounds (None: no cap).  A state that starts empty runs
-    no round.  Callers keep their own cap warning: ``rounds ==
-    max_iter`` means the fixpoint was not confirmed.
+    no round.  ``converged`` is False only when the cap stopped the
+    loop before a round reached 0 rows or removed none; callers keep
+    their own cap warning and gate it on ``not converged``.
     """
     state, rounds = init, 0
-    while n and (max_iter is None or rounds < max_iter):
+    converged = n == 0
+    while not converged and (max_iter is None or rounds < max_iter):
         state = tables.plan_barrier(step(state, n), eager=False)
         n_prev, n = n, state.count()
         rounds += 1
-        if n == n_prev:
-            break
-    return state, n, rounds
+        converged = n in (0, n_prev)
+    return state, n, converged
 
 
 def _mark_final(store: CheckpointStore, superstep: int) -> None:

@@ -25,8 +25,14 @@ PAGERANK_STORE_2_ROUNDS_BUDGET = 11
 
 @contextmanager
 def _jobs(spark, group):
-    """Collect the ids of the Spark jobs run inside the block."""
+    """Collect the ids of the Spark jobs run inside the block.
+
+    A JVM garbage collection runs first, so the garbage earlier tests
+    left is not collected inside the block: without it,
+    betweenness_sampled counted 75 jobs instead of 74 whenever
+    test_determinism.py had run earlier in the session."""
     sc = spark.sparkContext
+    sc._jvm.System.gc()
     ids: list[int] = []
     sc.setJobGroup(group, group)
     try:
@@ -111,7 +117,7 @@ LOOP_JOB_BUDGETS = {
     "k_core": 25,
     "k_truss": 52,
     "bitruss": 145,
-    "greedy_coloring": 235,
+    "greedy_coloring": 197,
     "maximal_matching": 55,
     "link_features": 13,
     "degree_assortativity": 4,
@@ -148,7 +154,7 @@ LOOP_JOB_BUDGETS = {
     "earliest_arrival_num_iter_30": 45,
     "wl_colors": 25,
     "pagerank_tol": 144,
-    "betweenness_sampled": 75,
+    "betweenness_sampled": 74,
     "random_walks": 18,
     "random_walks_node2vec": 28,
 }

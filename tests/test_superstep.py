@@ -81,14 +81,17 @@ def test_fixpoint_reports_the_cap(spark):
     assert res.history[-1]["changed"] == 19
 
 
-def _drop_top(rounds_seen):
-    """Each round drops the largest id of the state (ids 0..n-1).  The
-    round plan reads its state twice (even ids, odd ids)."""
+def _drop_top(rounds_seen, keep=0):
+    """Each round drops the largest id of the state (ids 0..n-1) while
+    more than ``keep`` rows are left.  The round plan reads its state
+    twice (even ids, odd ids)."""
 
     def step(state, n):
         even = state.where(F.col("id") % 2 == 0)
         odd = state.where(F.col("id") % 2 == 1)
-        out = even.unionByName(odd).coalesce(4).where(F.col("id") < n - 1)
+        out = even.unionByName(odd).coalesce(4).where(
+            F.col("id") < max(n - 1, keep)
+        )
         rounds_seen.append(_plan_shape(out))
         return out
 
@@ -107,8 +110,8 @@ def test_peel_state_plan_constant_and_one_action_per_round(spark):
     with _jobs(spark, "peel-count-jobs") as count_ids:
         init.where(F.col("id") < 11).count()
     with _jobs(spark, "peel-call") as ids:
-        state, n, rounds = peel(init, 12, step)
-    assert (n, rounds, state.count()) == (0, 12, 0)
+        state, n, converged = peel(init, 12, step)
+    assert (n, converged, state.count()) == (0, True, 0)
     assert len(nodes) == 12 and nodes[1] == nodes[-1], nodes
     # per round only the count, which also materializes the barrier
     assert len(ids) == 12 * len(count_ids), (len(ids), len(count_ids))
@@ -118,6 +121,17 @@ def test_peel_stops_on_a_round_that_removes_nothing(spark):
     from gminer_spark.graph.superstep import peel
 
     init = spark.range(0, 12, numPartitions=4).select("id").localCheckpoint()
-    assert peel(init, 12, lambda s, n: s, max_iter=5)[1:] == (12, 1)
-    assert peel(init, 12, _drop_top([]), max_iter=5)[1:] == (7, 5)
-    assert peel(init.limit(0), 0, _drop_top([]))[1:] == (0, 0)
+    rounds: list = []
+    assert peel(init, 12, _drop_top(rounds, keep=12), max_iter=5)[1:] == (12, True)
+    assert len(rounds) == 1
+    # the cap stops the loop with rows still going
+    rounds.clear()
+    assert peel(init, 12, _drop_top(rounds), max_iter=5)[1:] == (7, False)
+    assert len(rounds) == 5
+    # the last allowed round removes nothing: the fixpoint is confirmed
+    rounds.clear()
+    assert peel(init, 12, _drop_top(rounds, keep=8), max_iter=5)[1:] == (8, True)
+    assert len(rounds) == 5
+    rounds.clear()
+    assert peel(init.limit(0), 0, _drop_top(rounds))[1:] == (0, True)
+    assert rounds == []
