@@ -17,9 +17,9 @@ gate the undecided side of each edge join is broadcast (as in the
 k-core peel), so the edge table is probed map-side.  The round's
 winners (read once), and the restricted edge view when a round
 rebuilds it, are lazy leaves that the next undecided set is derived
-from, so the round's count materializes them.  The undecided set shrinks geometrically;
-survivors' edges are re-filtered by membership — frontier-tracking
-like the CC vote-to-halt.
+from, so the round's count materializes them.  The undecided set
+shrinks geometrically; survivors' edges are re-filtered by membership
+— frontier-tracking like the CC vote-to-halt.
 """
 
 from __future__ import annotations
