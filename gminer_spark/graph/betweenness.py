@@ -18,19 +18,33 @@ retained, as in Brandes when iterating a source subset).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import grow
 
 
-def _bfs_levels(sym: DataFrame, sources: DataFrame, max_depth: int) -> list[DataFrame]:
-    """Level-synchronous multi-source BFS: levels[d] = (s, v, sigma)
-    rows at distance d from source s, sigma = exact shortest-path
-    counts.  One shuffle per level regardless of |sources|."""
+def _bfs_levels(
+    edges: DataFrame, sources: DataFrame, max_depth: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Level-synchronous multi-source BFS over the undirected view of
+    ``edges`` -> ``(sym, levels)``: levels[d] = (s, v, sigma) rows at
+    distance d from source s, sigma = exact shortest-path counts, one
+    :func:`superstep.grow` round (one shuffle) per level regardless of
+    |sources|.  ``sym`` is the symmetric edge table, hash-partitioned on
+    ``src`` and persisted; the caller unpersists it."""
+    sym = (
+        tables.symmetrize(edges)
+        .repartition(tables.shuffle_partitions(edges.sparkSession), "src")
+        .persist()
+    )
     # restrict to sources that exist in the graph: an id absent from
     # the edge table must not emit a level-0 (s, s) row (it would show
-    # up as a spurious ecc=0 vertex in eccentricity_sampled)
+    # up as a spurious ecc=0 vertex in eccentricity_sampled).  This
+    # checkpoint is the first job to read ``sym`` and fills its cache.
     src_set = (
         sources.select(F.col("id").cast("long").alias("s"))
         .distinct()
@@ -40,34 +54,19 @@ def _bfs_levels(sym: DataFrame, sources: DataFrame, max_depth: int) -> list[Data
             how="left_semi",
         )
     )
-    frontier = src_set.select(
+    init = src_set.select(
         "s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sigma")
     ).localCheckpoint()
-    levels = [frontier]
-    # ONE action per level (was three: eager checkpoint + isEmpty +
-    # eager visited re-materialization): the level is checkpointed
-    # lazily and the count() that doubles as the emptiness test
-    # materializes it.  ``visited`` stays a LAZY union of the already-
-    # checkpointed level frames — re-materializing the growing union
-    # each level cost an extra O(Σ|levels|) scan per level for nothing
-    # (the anti-join reads the cached level blocks either way).
-    visited = frontier.select("s", "v")
-    for _ in range(max_depth):
-        cand = (
-            levels[-1]
-            .join(sym, levels[-1].v == sym.src)
+
+    def step(level: DataFrame) -> DataFrame:
+        return (
+            level.join(sym, level.v == sym.src)
             .select("s", F.col("dst").alias("v"), "sigma")
             .groupBy("s", "v")
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt = cand.join(visited, on=["s", "v"], how="left_anti").localCheckpoint(
-            eager=False
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("s", "v"))
-    return levels
+
+    return sym, grow(init, step, ["s", "v"], max_depth)[0]
 
 
 def betweenness_sampled(
@@ -75,14 +74,7 @@ def betweenness_sampled(
 ) -> DataFrame:
     """(id, bc) — Brandes dependency sums from the ``sources(id)``
     sample over the undirected view."""
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
 
     # Backward accumulation: deepest level has delta = 0.  Levels are
     # materialized PAIRWISE (the coreness k=2 idiom): every other
@@ -143,13 +135,7 @@ def harmonic_sampled(
     over the source sample (s ≠ v; unreachable pairs contribute 0).
     Shares the multi-source BFS with :func:`betweenness_sampled`."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
     parts = [
         lvl.select("s", "v", F.lit(1.0 / d).alias("inv"))
         for d, lvl in enumerate(levels)
@@ -158,9 +144,7 @@ def harmonic_sampled(
     sym.unpersist()
     if not parts:
         return spark.createDataFrame([], "id long, harmonic double")
-    allp = parts[0]
-    for df in parts[1:]:
-        allp = allp.unionByName(df)
+    allp = functools.reduce(DataFrame.unionByName, parts)
     return allp.groupBy(F.col("v").alias("id")).agg(
         F.sum("inv").alias("harmonic")
     )
@@ -173,22 +157,13 @@ def eccentricity_sampled(
     (eccentricity within its component).  Shares :func:`_bfs_levels`;
     the max over all sampled eccentricities lower-bounds the graph
     diameter — the standard sampled diameter estimate."""
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
     sym.unpersist()
     parts = [
         lvl.select(F.col("s").alias("id"), F.lit(d).cast("long").alias("d"))
         for d, lvl in enumerate(levels)
     ]
-    allp = parts[0]
-    for df in parts[1:]:
-        allp = allp.unionByName(df)
+    allp = functools.reduce(DataFrame.unionByName, parts)
     return allp.groupBy("id").agg(F.max("d").alias("ecc"))
 
 
@@ -202,13 +177,7 @@ def distance_histogram(
     small-world headline stat on a crawl graph.  Shares the one-
     shuffle-per-level multi-source BFS with betweenness/harmonic."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
     sym.unpersist()
     parts = [
         lvl.select(F.lit(d).cast("long").alias("d"))
@@ -217,9 +186,7 @@ def distance_histogram(
     ]
     if not parts:
         return spark.createDataFrame([], "d long, n_pairs long")
-    allp = parts[0]
-    for df in parts[1:]:
-        allp = allp.unionByName(df)
+    allp = functools.reduce(DataFrame.unionByName, parts)
     return allp.groupBy("d").agg(F.count("*").alias("n_pairs"))
 
 
@@ -352,13 +319,7 @@ def edge_betweenness_sampled(
     score at web scale (run on a sample, cut the top edges).
     """
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
 
     delta = levels[-1].select("s", "v", F.lit(0.0).alias("delta"))
     edge_parts: list[DataFrame] = []
@@ -405,9 +366,7 @@ def edge_betweenness_sampled(
     if not edge_parts:
         sym.unpersist()
         return spark.createDataFrame([], "src long, dst long, eb_micro long")
-    allp = edge_parts[0]
-    for df in edge_parts[1:]:
-        allp = allp.unionByName(df)
+    allp = functools.reduce(DataFrame.unionByName, edge_parts)
     result = (
         allp.groupBy(
             F.least("v", "w").alias("src"), F.greatest("v", "w").alias("dst")
@@ -457,13 +416,7 @@ def closeness_sampled(
     'exact closeness' gap with the estimator actually used at scale.
     Shares the one-shuffle-per-level multi-source BFS."""
     spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    levels = _bfs_levels(sym, sources, max_depth)
+    sym, levels = _bfs_levels(edges, sources, max_depth)
     sym.unpersist()
     parts = [
         lvl.select("v", F.lit(d).cast("long").alias("d"))
@@ -474,9 +427,7 @@ def closeness_sampled(
         return spark.createDataFrame(
             [], "id long, n_reached long, closeness_micro long"
         )
-    allp = parts[0]
-    for df in parts[1:]:
-        allp = allp.unionByName(df)
+    allp = functools.reduce(DataFrame.unionByName, parts)
     return allp.groupBy(F.col("v").alias("id")).agg(
         F.count("*").alias("n_reached"),
         F.round(F.count("*") / F.sum("d") * 1e6, 0)

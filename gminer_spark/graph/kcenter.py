@@ -12,20 +12,23 @@ STRICTLY smaller distance, so ties keep the earliest center;
 unreached vertices carry dist = INF (2^30) and center = -1.
 
 Spark shape: k sequential rounds, each one bounded-depth BFS from the
-single new center (frontier joins over the flat persisted symmetric
-table, plan_barrier state per the Spark-4 origin-chain pitfall) plus
-one merge; the next-center pick is a 1-row TakeOrderedAndProject
-collect (O(1) driver traffic per round).  Reference analog: GMiner's
-Voronoi-seed partitioning grow phase (SURVEY §2.4 count-by-key) with
-the seed set chosen adversarially-far instead of hashed.
+single new center (a :func:`superstep.grow` over the flat persisted
+symmetric table, one count per level) plus one merge; the next-center
+pick is a 1-row TakeOrderedAndProject collect (O(1) driver traffic per
+round).  Reference analog: GMiner's Voronoi-seed partitioning grow
+phase (SURVEY §2.4 count-by-key) with the seed set chosen
+adversarially-far instead of hashed.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import grow
 
 INF = 1 << 30
 
@@ -50,9 +53,17 @@ def k_center(
             F.lit(-1).cast("long").alias("center"),
         )
     )
-    center = None
-    for _ in range(k):
-        if center is None:
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
+            sym.join(frontier.withColumnRenamed("id", "src"), on="src")
+            .select(F.col("dst").alias("id"), (F.col("d") + 1).alias("d"))
+            .groupBy("id")
+            .agg(F.min("d").alias("d"))
+        )
+
+    for r in range(k):
+        if r == 0:
             row = verts.orderBy(F.asc("id")).limit(1).first()
         else:
             row = state.orderBy(
@@ -60,33 +71,16 @@ def k_center(
             ).limit(1).first()
         if row is None:
             break
-        c = int(row["id"] if center is None else row["id"])
-        center = c
+        c = int(row["id"])
 
         # bounded BFS from the single new center
-        reached = spark.createDataFrame(
-            [(c, 0)], "id long, d long"
-        )
-        frontier = reached
-        for _d in range(max_depth):
-            nxt = (
-                sym.join(
-                    frontier.withColumnRenamed("id", "src"), on="src"
-                )
-                .select(
-                    F.col("dst").alias("id"), (F.col("d") + 1).alias("d")
-                )
-                .groupBy("id")
-                .agg(F.min("d").alias("d"))
-                .join(reached.select("id"), on="id", how="left_anti")
-            )
-            nxt = tables.plan_barrier(nxt, eager=False)
-            if nxt.count() == 0:
-                break
-            reached = tables.plan_barrier(
-                reached.unionByName(nxt), eager=False
-            )
-            frontier = nxt
+        levels = grow(
+            spark.createDataFrame([(c, 0)], "id long, d long"),
+            step,
+            ["id"],
+            max_depth,
+        )[0]
+        reached = functools.reduce(DataFrame.unionByName, levels)
 
         state = tables.plan_barrier(
             state.join(

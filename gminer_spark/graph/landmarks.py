@@ -30,6 +30,8 @@ the same landmarks and the BFS levels are set-deterministic.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,28 +61,19 @@ def landmark_sketch(
     pairs are absent (same convention as :mod:`sssp`).  State is
     K x |V| rows worst case — the sketch's storage cost, linear in K.
     """
-    spark = edges.sparkSession
-    sym = (
-        tables.symmetrize(edges)
-        .repartition(tables.shuffle_partitions(spark), "src")
-        .persist()
-    )
-    sym.count()
-    lms = select_landmarks(edges, k).localCheckpoint()
-    levels = _bfs_levels(sym, lms, max_depth)
+    sym, levels = _bfs_levels(edges, select_landmarks(edges, k), max_depth)
     sym.unpersist()
-    parts = [
-        lvl.select(
-            F.col("s").alias("landmark"),
-            F.col("v").alias("id"),
-            F.lit(d).cast("long").alias("dist"),
-        )
-        for d, lvl in enumerate(levels)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            lvl.select(
+                F.col("s").alias("landmark"),
+                F.col("v").alias("id"),
+                F.lit(d).cast("long").alias("dist"),
+            )
+            for d, lvl in enumerate(levels)
+        ],
+    )
 
 
 def estimate_distances(sketch: DataFrame, pairs: DataFrame) -> DataFrame:

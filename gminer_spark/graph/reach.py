@@ -7,21 +7,23 @@ backward reachable), IN (backward only), OUT (forward only), and
 OTHER (tendrils/disconnected).  On a Common-Crawl link graph this is
 the first diagnostic anyone runs after PageRank.
 
-Spark shape: two frontier BFS loops over the directed edge table —
-each level one equi-join + anti-join against the visited set, lineage
-truncated per level, vote-to-halt on an empty frontier.  The classify
-step is two membership left-joins.  The DuckDB witness needs no
-unroll caps: directed reachability is a plain recursive CTE.
+Spark shape: two frontier BFS loops over the directed edge table, each
+a :func:`superstep.grow` — per level one equi-join + anti-join against
+the earlier levels and one count, stopping at an empty level.  The
+classify step is two membership left-joins.  The DuckDB witness needs
+no unroll caps: directed reachability is a plain recursive CTE.
 """
 
 from __future__ import annotations
 
+import functools
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
+from gminer_spark.graph.superstep import grow
 
 
 def reachable(
@@ -36,28 +38,23 @@ def reachable(
     callers that want a hard bound; hitting it warns, because a
     truncated reach set silently misclassifies bow-tie regions
     (ADVICE r3)."""
-    seen = sources.select(F.col("id").cast("long").alias("id")).distinct().localCheckpoint()
-    frontier = seen
-    level = 0
-    while not frontier.isEmpty():
-        if max_iter is not None and level >= max_iter:
-            warnings.warn(
-                f"reachable(): frontier still non-empty after max_iter="
-                f"{max_iter} levels — reach set is TRUNCATED",
-                stacklevel=2,
-            )
-            break
-        nxt = (
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             edges.join(frontier.withColumnRenamed("id", "src"), on="src")
             .select(F.col("dst").alias("id"))
             .distinct()
-            .join(seen, on="id", how="left_anti")
-            .localCheckpoint()
         )
-        seen = seen.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-        level += 1
-    return seen
+
+    init = sources.select(F.col("id").cast("long").alias("id")).distinct()
+    levels, _, converged = grow(init.localCheckpoint(), step, ["id"], max_iter)
+    if not converged:
+        warnings.warn(
+            f"reachable(): frontier still non-empty after max_iter="
+            f"{max_iter} levels — reach set is TRUNCATED",
+            stacklevel=2,
+        )
+    return functools.reduce(DataFrame.unionByName, levels)
 
 
 def bowtie(

@@ -23,20 +23,22 @@ the undirected ancestor of the coloring step).  Each outer round:
    subgraph — lbl(v) = the smallest undecided vertex that reaches v.
    Same superstep shape as CC: one equi-join + min-combiner per
    level, one fused action per level through a lazy plan barrier.
-3. **Backward membership sweep**: from every root (lbl(r) == r),
-   BFS BACKWARD simultaneously for all roots, restricted to vertices
-   of the same color — frontier keyed ``(lbl, id)``.  The classic
+3. **Backward membership sweep** (a :func:`superstep.grow`): from
+   every root (lbl(r) == r), BFS BACKWARD simultaneously for all
+   roots, restricted to vertices of the same color — levels keyed
+   ``(lbl, id)``, one count per level.  The classic
    invariant: any path from v to its color-root r stays inside color
    r, so the restriction loses nothing.  Reached vertices form
    SCC(r); r is provably the minimum member id.
 4. Remove decided vertices and repeat until none remain.
 
-Every per-round structure (undecided set, color table, member set) is
-referenced more than once by the next plan, so state crosses
+Every per-round structure (undecided set, color table, sweep levels)
+is referenced more than once by later plans, so state crosses
 ``tables.plan_barrier`` — the Spark-4 origin-chain fix — not
-``localCheckpoint``.  All joins are equi-joins on vertex ids; nothing
-is ever broadcast un-gated; message volume per coloring level is
-bounded by the shrinking frontier, exactly the CC posture.  Rounds
+``localCheckpoint``; only the roots, one filter over the color leaf,
+are a counted ``localCheckpoint``.  All joins are equi-joins on vertex
+ids; nothing is ever broadcast un-gated; message volume per coloring
+level is bounded by the shrinking frontier, exactly the CC posture.  Rounds
 needed = length of the longest chain of "min-rooted" SCCs, small on
 web-shaped graphs (giant SCC + singletons); ``max_rounds`` guards
 pathologies with a warning rather than a silent wrong answer.
@@ -51,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gminer_spark.graph import tables
-from gminer_spark.graph.superstep import fixpoint, peel
+from gminer_spark.graph.superstep import fixpoint, grow, peel
 
 
 def strongly_connected_components(
@@ -125,27 +127,16 @@ def strongly_connected_components(
         ).state.select("id", "lbl")
 
         # --- 3. backward membership sweep, all roots at once --------
-        members = tables.plan_barrier(
+        roots, n_roots = tables.counted_checkpoint(
             lbl.where(F.col("id") == F.col("lbl")).select("lbl", "id")
         )
-        frontier = members
-        while not frontier.isEmpty():
-            nxt = tables.plan_barrier(
-                sub.join(frontier.withColumnRenamed("id", "dst"), on="dst")
-                .select(F.col("src").alias("id"), "lbl")
-                .distinct()
-                .join(lbl.withColumnRenamed("lbl", "vlbl"), on="id")
-                .where(F.col("lbl") == F.col("vlbl"))
-                .select("lbl", "id")
-                .join(members, on=["lbl", "id"], how="left_anti")
-            )
-            members = tables.plan_barrier(members.unionByName(nxt))
-            frontier = nxt
-
-        decided = tables.plan_barrier(
-            members.select("id", F.col("lbl").alias("scc_id")), eager=False
+        levels, n_swept, _ = grow(
+            roots, lambda frontier: _sweep_step(sub, lbl, frontier), ["lbl", "id"]
         )
-        n_decided = decided.count()
+        n_decided = n_roots + n_swept
+        decided = functools.reduce(DataFrame.unionByName, levels).select(
+            "id", F.col("lbl").alias("scc_id")
+        )
         done_parts.append(decided)
         und = tables.plan_barrier(
             und.join(decided.select("id"), on="id", how="left_anti")
@@ -167,6 +158,19 @@ def _subgraph(e: DataFrame, und: DataFrame) -> DataFrame:
         e.join(und.withColumnRenamed("id", "src"), on="src", how="leftsemi")
         .join(und.withColumnRenamed("id", "dst"), on="dst", how="leftsemi")
         .select("src", "dst")
+    )
+
+
+def _sweep_step(sub: DataFrame, lbl: DataFrame, frontier: DataFrame) -> DataFrame:
+    """One lazy backward level: the same-color in-neighbours of
+    ``frontier(lbl, id)``, distinct ``(lbl, id)``."""
+    return (
+        sub.join(frontier.withColumnRenamed("id", "dst"), on="dst")
+        .select(F.col("src").alias("id"), "lbl")
+        .distinct()
+        .join(lbl.withColumnRenamed("lbl", "vlbl"), on="id")
+        .where(F.col("lbl") == F.col("vlbl"))
+        .select("lbl", "id")
     )
 
 

@@ -45,6 +45,16 @@ where it was.  Rows a round decides (MIS winners, new colours, matched
 edges) stay lazy leaves in the caller: the next state is derived from
 them, so the round's count materializes them, and the caller unions
 them once at the end.
+
+:func:`grow` is the third round — "add rows until none come" (the
+multi-source BFS levels of betweenness and its siblings, directed
+reachability, k-center's bounded BFS, the SCC backward sweep).  The
+state is a list of levels; a round expands the last one, anti-joins
+the candidates against every earlier level on a key, and keeps the
+rest as the next level behind the lazy barrier, whose ``count()`` is
+both the round's one action and the stop test (0 rows: done).  Each
+level is read again by every later round's anti-join and by the
+caller, so it is multi-ref state like ``fixpoint``'s and ``peel``'s.
 """
 
 from __future__ import annotations
@@ -211,6 +221,41 @@ def peel(
         rounds += 1
         converged = n in (0, n_prev)
     return state, n, converged
+
+
+def grow(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    key: list[str],
+    max_iter: int | None = None,
+) -> tuple[list[DataFrame], int, bool]:
+    """Grow ``init`` level by level with ``step`` -> ``(levels, n, converged)``.
+
+    ``init`` is level 0, used as given.  ``step(level)`` returns the
+    candidate rows of the next level LAZILY, distinct on ``key``; the
+    round keeps those whose ``key`` no earlier level holds (an anti-join
+    against the lazy union of all levels' ``key`` columns).  Each round
+    is one Spark action: the ``count()`` that also materializes the
+    round's lazy :func:`tables.plan_barrier` — every later round and
+    the caller read each level again, so levels are origin-free leaves.
+    The loop stops at a round that adds no row, or after ``max_iter``
+    rounds (None: no cap).  ``n`` is the number of rows the rounds
+    added; ``converged`` is False only when the cap stopped the loop
+    before a round added nothing.
+    """
+    levels, n = [init], 0
+    seen = init.select(*key)
+    while max_iter is None or len(levels) <= max_iter:
+        nxt = tables.plan_barrier(
+            step(levels[-1]).join(seen, on=key, how="left_anti"), eager=False
+        )
+        added = nxt.count()
+        if added == 0:
+            return levels, n, True
+        levels.append(nxt)
+        seen = seen.unionByName(nxt.select(*key))
+        n += added
+    return levels, n, False
 
 
 def _mark_final(store: CheckpointStore, superstep: int) -> None:

@@ -307,3 +307,35 @@ def test_fixpoint_loops_partitioning_invariant(spark, graph):
     assert max(h for _, h in a["redirects"].values()) > 1
     for k in a:
         assert a[k] == b[k], k
+
+
+def test_grow_loops_partitioning_invariant(spark, graph):
+    """Sampled betweenness (BFS levels and the backward pass) and the
+    bow-tie regions (two reachability sweeps) under different physical
+    partitionings — scores rounded to 9 digits and region labels, so
+    equality is EXACT.  The whole graph is one SCC, so the bow-tie runs
+    on its climbing edges plus the out-edges of every 5th vertex, a
+    subgraph with all four regions."""
+    from pyspark.sql import functions as F
+
+    from gminer_spark.graph.betweenness import betweenness_sampled
+    from gminer_spark.graph.reach import bowtie
+
+    def run(e):
+        srcs = e.select(F.col("src").alias("id")).distinct().where(
+            F.col("id") % 7 == 0
+        )
+        sparse = e.where((F.col("src") < F.col("dst")) | (F.col("src") % 5 == 0))
+        return {
+            "betweenness": {
+                r["id"]: round(r["bc"], 9)
+                for r in betweenness_sampled(e, srcs).collect()
+            },
+            "bowtie": {r["id"]: r["region"] for r in bowtie(sparse).collect()},
+        }
+
+    a, b = (run(e) for e in _variants(graph)[:2])
+    assert max(a["betweenness"].values()) > 0
+    assert set(a["bowtie"].values()) == {"SCC", "IN", "OUT", "OTHER"}
+    for k in a:
+        assert a[k] == b[k], k

@@ -29,7 +29,7 @@ def _jobs(spark, group):
 
     A JVM garbage collection runs first, so the garbage earlier tests
     left is not collected inside the block: without it,
-    betweenness_sampled counted 75 jobs instead of 74 whenever
+    betweenness_sampled counted one job more whenever
     test_determinism.py had run earlier in the session."""
     sc = spark.sparkContext
     sc._jvm.System.gc()
@@ -142,8 +142,8 @@ LOOP_JOB_BUDGETS = {
     "triangles_per_vertex": 7,
     "edge_embeddedness": 10,
     "forman_curvature": 10,
-    "strongly_connected_components": 150,
-    "minimum_spanning_forest": 96,
+    "strongly_connected_components": 125,
+    "minimum_spanning_forest": 95,
     "resolve_redirects": 21,
     "hits": 327,
     "salsa": 332,
@@ -154,21 +154,18 @@ LOOP_JOB_BUDGETS = {
     "earliest_arrival_num_iter_30": 45,
     "wl_colors": 25,
     "pagerank_tol": 144,
-    "betweenness_sampled": 74,
+    "betweenness_sampled": 72,
+    "bowtie": 96,
+    "k_center": 102,
+    "landmark_sketch": 37,
     "random_walks": 18,
     "random_walks_node2vec": 28,
 }
 # Calls whose count moved by a job between runs of the same code:
-# pinned as a ceiling at the highest count seen.
-JOB_CEILINGS = {
-    "betweenness_sampled",
-    "hitting_time",
-    "katz",
-    "katz_dag_horizon_40",
-    "maximal_matching",
-    "minimum_spanning_forest",
-    "salsa",
-}
+# pinned as a ceiling.  betweenness_sampled read 74, 75 and 74 in three
+# runs of test_determinism.py + this file, and repeated calls in one
+# session split their AQE query stages into jobs differently.
+JOB_CEILINGS = {"betweenness_sampled"}
 # the focusco pull loop on the 40-vertex graph of
 # test_focusco_full_graph_path_equals_pull_loop (gseed 4)
 FOCUSCO_PULL_JOB_BUDGET = 28
@@ -221,14 +218,17 @@ def _loop_calls(inp):
     from gminer_spark.graph.hits import hits
     from gminer_spark.graph.hitting import hitting_time
     from gminer_spark.graph.katz import katz
+    from gminer_spark.graph.kcenter import k_center
     from gminer_spark.graph.kcore import coreness, coreness_hindex, k_core, s_core
     from gminer_spark.graph.ktruss import k_truss
+    from gminer_spark.graph.landmarks import landmark_sketch
     from gminer_spark.graph.linkpred import link_features
     from gminer_spark.graph.lpa import label_propagation
     from gminer_spark.graph.matching import maximal_matching
     from gminer_spark.graph.mis import maximal_independent_set
     from gminer_spark.graph.msf import minimum_spanning_forest
     from gminer_spark.graph.pagerank import pagerank
+    from gminer_spark.graph.reach import bowtie
     from gminer_spark.graph.salsa import salsa
     from gminer_spark.graph.scc import strongly_connected_components
     from gminer_spark.graph.sssp import shortest_paths, widest_paths
@@ -305,6 +305,9 @@ def _loop_calls(inp):
         "wl_colors": lambda: wl_colors(edges, rounds=3),
         "pagerank_tol": lambda: pagerank(directed).state,
         "betweenness_sampled": lambda: betweenness_sampled(edges, sources),
+        "bowtie": lambda: bowtie(directed),
+        "k_center": lambda: k_center(edges, k=3, max_depth=8),
+        "landmark_sketch": lambda: landmark_sketch(edges, k=3, max_depth=8),
         "random_walks": lambda: random_walks(edges, walk_len=6),
         "random_walks_node2vec": lambda: random_walks_node2vec(
             edges, walk_len=6, ret_bias=2, out_bias=3

@@ -1,5 +1,5 @@
-"""The ``superstep.fixpoint`` and ``superstep.peel`` rounds: origin-free
-state, one action per round."""
+"""The ``superstep.fixpoint``, ``superstep.peel`` and ``superstep.grow``
+rounds: origin-free state, one action per round."""
 
 from __future__ import annotations
 
@@ -135,3 +135,54 @@ def test_peel_stops_on_a_round_that_removes_nothing(spark):
     rounds.clear()
     assert peel(init.limit(0), 0, _drop_top(rounds))[1:] == (0, True)
     assert rounds == []
+
+
+def _walk_path(spark, links, rounds_seen):
+    """BFS along the directed path 0 -> 1 -> ... -> ``links``: level d
+    is ``{d}``.  The step records the plan shape of its output."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(links)], "src long, dst long"
+    ).localCheckpoint()
+
+    def step(level):
+        out = (
+            edges.join(level.withColumnRenamed("id", "src"), on="src")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+        rounds_seen.append(_plan_shape(out))
+        return out
+
+    return spark.range(0, 1).select("id").localCheckpoint(), step
+
+
+def test_grow_levels_stay_origin_free(spark):
+    """Twelve levels: each is an origin-free leaf, so the round that
+    makes level 12 plans as small as the one that makes level 2,
+    although every level was derived through the anti-join against
+    all earlier ones."""
+    from gminer_spark.graph.superstep import grow
+
+    nodes: list = []
+    init, step = _walk_path(spark, 12, nodes)
+    levels, n, converged = grow(init, step, ["id"])
+    assert (n, converged) == (12, True)
+    assert [[r["id"] for r in lvl.collect()] for lvl in levels] == [
+        [d] for d in range(13)
+    ]
+    # 12 rounds that add a level, one that adds nothing
+    assert len(nodes) == 13 and nodes[1] == nodes[11], nodes
+
+
+def test_grow_stops_on_an_empty_round_or_the_cap(spark):
+    from gminer_spark.graph.superstep import grow
+
+    rounds: list = []
+    init, step = _walk_path(spark, 12, rounds)
+    levels, n, converged = grow(init.limit(0), step, ["id"])
+    assert (len(levels), n, converged, len(rounds)) == (1, 0, True, 1)
+    # the cap stops the loop with rows still coming
+    rounds.clear()
+    levels, n, converged = grow(init, step, ["id"], max_iter=3)
+    assert (len(levels), n, converged, len(rounds)) == (4, 3, False, 3)
+    assert levels[-1].collect()[0]["id"] == 3
